@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from poc_spark.plans.dispatch import NO_STATS_BYTES, estimated_size_bytes
+
 # (media_id, kind, payload, meta) — schemas.MEDIA
 DECODED_SCHEMA = (
     "media_id long, kind string, width int, height int, n_frames int, "
@@ -42,17 +44,18 @@ def _fanout_tasks(df: DataFrame, n_tasks: int | None) -> int:
     session's core count so every slot has work, capped at 4096 so a
     wild estimate cannot flood the scheduler. Tiny lanes (unit tests at
     sf0.001, the 4-16 px PNG lane) stop paying a 64-way exchange;
-    a 100 TB corpus fans out with its bytes. Callers can still pass an
+    a 100 TB corpus fans out with its bytes. A plan with no stats
+    reports the Long.MaxValue sentinel, which is "unknown", not huge:
+    it gets the core count, not the cap. Callers can still pass an
     explicit n_tasks."""
     if n_tasks is not None:
         return n_tasks
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    cores = df.sparkSession.sparkContext.defaultParallelism
     try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est = estimated_size_bytes(df)
     except Exception:
+        est = 0
+    if est >= NO_STATS_BYTES:
         est = 0
     return int(min(max(cores, est >> 23), 4096))
 

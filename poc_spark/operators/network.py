@@ -21,6 +21,13 @@ Reference: GET /analyze/network/{filename}
   - OP-AGG-NODES: distinct senders of surviving messages — includes
     senders that never formed an edge (backend/main.py:313).
 
+Single pass (interaction_pairs): the request is ONE aggregate over every
+surviving message keyed by (least(prev, cur), greatest(prev, cur)).
+The stream head and every self-transition land on an (s, s) row, so
+the nodes are the endpoints of all rows and the links are the rows
+with source != target. The serving edge collects that aggregate once
+and splits it on the driver — one lineage, one scan of the export.
+
 Scale design: the window that orders the chain is partitioned by
 `partition_cols` (default: file_path — one chat per file). A single
 chat is at most a few hundred MB, so per-partition windows keep the
@@ -45,6 +52,30 @@ from pyspark.sql import functions as F
 from poc_spark.plans.dispatch import use_chunked
 
 
+def _chain_window(order_cols: Sequence[str], partition_cols: Sequence[str]):
+    """The window that orders the chain: per partition when given, else
+    one global order (a single partition — the scale paths avoid it)."""
+    if partition_cols:
+        return Window.partitionBy(*partition_cols).orderBy(*order_cols)
+    return Window.orderBy(*order_cols)
+
+
+def _chunked_prefix(df: DataFrame, limit: int, order_cols: Sequence[str]) -> DataFrame:
+    """The first `limit` rows on the chunked scale path, materialized.
+
+    localCheckpoint (NOT .cache): the chunked lag re-derives chunk
+    boundaries over the prefix (an approxQuantile pass + the final
+    job), so a materialization barrier is required — but .cache()
+    registers in the session CacheManager forever; checkpointed blocks
+    are dropped when the DataFrame is garbage-collected, so repeated
+    calls in a long session can't accumulate storage. (Lineage is
+    truncated: on executor loss the block recomputes from the
+    checkpoint's parent, acceptable for a derived prefix.)"""
+    from poc_spark.plans.chunked_lag import chunked_ordered_limit
+
+    return chunked_ordered_limit(df, limit, order_cols).localCheckpoint(eager=True)
+
+
 def ordered_limit(
     df: DataFrame,
     n: int | None,
@@ -63,11 +94,7 @@ def ordered_limit(
         from poc_spark.plans.chunked_lag import chunked_ordered_limit
 
         return chunked_ordered_limit(df, n, order_cols)
-    w = (
-        Window.partitionBy(*partition_cols).orderBy(*order_cols)
-        if partition_cols
-        else Window.orderBy(*order_cols)
-    )
+    w = _chain_window(order_cols, partition_cols)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n)
@@ -99,11 +126,7 @@ def lag_edges(
         from poc_spark.plans.chunked_lag import chunked_lag_edges
 
         return chunked_lag_edges(df, sender_col, order_cols)
-    w = (
-        Window.partitionBy(*partition_cols).orderBy(*order_cols)
-        if partition_cols
-        else Window.orderBy(*order_cols)
-    )
+    w = _chain_window(order_cols, partition_cols)
     keep = list(partition_cols) if group_output else []
     s = F.col(sender_col)
     prev = F.lag(sender_col).over(w)
@@ -138,28 +161,11 @@ def lag_edges_limited(
     same prefix property; the chunked limit prunes whole chunks before
     the lag ever runs)."""
     if not partition_cols and use_chunked(df):
-        from poc_spark.plans.chunked_lag import (
-            chunked_lag_edges,
-            chunked_ordered_limit,
-        )
+        from poc_spark.plans.chunked_lag import chunked_lag_edges
 
-        # localCheckpoint (NOT .cache): the chunked lag re-derives chunk
-        # boundaries over the prefix (an approxQuantile pass + the final
-        # job), so a materialization barrier is required — but .cache()
-        # registers in the session CacheManager forever; checkpointed
-        # blocks are dropped when the DataFrame is garbage-collected, so
-        # repeated calls in a long session can't accumulate storage.
-        # (Lineage is truncated: on executor loss the block recomputes
-        # from the checkpoint's parent, acceptable for a derived prefix.)
-        prefix = chunked_ordered_limit(df, limit, order_cols).localCheckpoint(
-            eager=True
-        )
+        prefix = _chunked_prefix(df, limit, order_cols)
         return chunked_lag_edges(prefix, sender_col, order_cols)
-    w = (
-        Window.partitionBy(*partition_cols).orderBy(*order_cols)
-        if partition_cols
-        else Window.orderBy(*order_cols)
-    )
+    w = _chain_window(order_cols, partition_cols)
     s = F.col(sender_col)
     return (
         df.select(
@@ -181,6 +187,58 @@ def lag_edges_limited(
     )
 
 
+def interaction_pairs(
+    messages: DataFrame,
+    start_date: str | dt.date | None = None,
+    end_date: str | dt.date | None = None,
+    limit: int | None = None,
+    sender_col: str = "sender",
+    date_col: str = "msg_date",
+    order_cols: Sequence[str] = ("line_id",),
+    partition_cols: Sequence[str] = (),
+) -> DataFrame:
+    """EP-1 as ONE aggregate: pair(source, target, weight) over every
+    surviving message, keyed by (least(prev, cur), greatest(prev, cur))
+    where prev is the lag of the sender in the message order.
+
+    least/greatest skip nulls, so the stream head (prev null) and every
+    self-transition land on an (s, s) row. Hence the node set is the
+    set of endpoints of all rows (every surviving sender is the cur of
+    some row), and the links are the rows with source != target. One
+    action on this DataFrame answers the whole request.
+
+    The chain is a global (or per-partition) window — lag plus, with a
+    limit, row_number in the same window spec (one sort/exchange; the
+    limit keeps a prefix, so each kept row's predecessor is kept too).
+    Above the dispatch threshold it is the chunked scale path instead:
+    chunked ordered limit, then chunked_lag_pairs, whose stitch emits
+    the head as (null, first) so no separate node scan is needed."""
+    df = messages
+    # both-bounds-only quirk (backend/main.py:305): a lone bound is a no-op.
+    if start_date and end_date:
+        df = df.filter(F.col(date_col).between(F.lit(start_date), F.lit(end_date)))
+
+    if not partition_cols and use_chunked(df):
+        from poc_spark.plans.chunked_lag import chunked_lag_pairs
+
+        if limit:
+            df = _chunked_prefix(df, limit, order_cols)
+        chain = chunked_lag_pairs(df, sender_col, order_cols)
+    else:
+        w = _chain_window(order_cols, partition_cols)
+        cols = [F.lag(sender_col).over(w).alias("prev"), F.col(sender_col).alias("cur")]
+        if limit:
+            chain = df.select(F.row_number().over(w).alias("_rn"), *cols).filter(
+                F.col("_rn") <= limit
+            )
+        else:
+            chain = df.select(*cols)
+    return chain.groupBy(
+        F.least("prev", "cur").alias("source"),
+        F.greatest("prev", "cur").alias("target"),
+    ).agg(F.count(F.lit(1)).alias("weight"))
+
+
 def interaction_graph(
     messages: DataFrame,
     start_date: str | dt.date | None = None,
@@ -191,58 +249,19 @@ def interaction_graph(
     order_cols: Sequence[str] = ("line_id",),
     partition_cols: Sequence[str] = (),
 ) -> tuple[DataFrame, DataFrame]:
-    """EP-1: (nodes, edges) for the filtered + limited message stream.
+    """EP-1: (nodes, edges) for the filtered + limited message stream —
+    two projections of the one interaction_pairs aggregate.
 
-    Returns nodes(id) and edges(source, target, weight).
+    Returns nodes(id) and edges(source, target, weight). Collecting
+    both runs the lineage twice; a request that needs both collects
+    interaction_pairs once instead (serve.analyze_network).
     """
-    df = messages
-    # both-bounds-only quirk (backend/main.py:305): a lone bound is a no-op.
-    if start_date and end_date:
-        df = df.filter(F.col(date_col).between(F.lit(start_date), F.lit(end_date)))
-
-    if limit:
-        if not partition_cols and use_chunked(df):
-            # scale path: chunked ordered limit prunes chunks before the
-            # chunked lag; both per-chunk, never single-partition.
-            # localCheckpoint, not cache — see lag_edges_limited.
-            from poc_spark.plans.chunked_lag import (
-                chunked_lag_edges,
-                chunked_ordered_limit,
-            )
-
-            prefix = chunked_ordered_limit(df, limit, order_cols).localCheckpoint(
-            eager=True
-        )
-            nodes = prefix.select(F.col(sender_col).alias("id")).distinct()
-            edges = chunked_lag_edges(prefix, sender_col, order_cols)
-            return nodes, edges
-        # fused single-window pass: row_number + lag share the window
-        # spec, so the ordered limit and the edge chain cost ONE
-        # sort/exchange instead of two.
-        w = (
-            Window.partitionBy(*partition_cols).orderBy(*order_cols)
-            if partition_cols
-            else Window.orderBy(*order_cols)
-        )
-        base = df.select(
-            F.row_number().over(w).alias("_rn"),
-            F.lag(sender_col).over(w).alias("_prev"),
-            F.col(sender_col).alias("_cur"),
-        ).filter(F.col("_rn") <= limit)
-        nodes = base.select(F.col("_cur").alias("id")).distinct()
-        edges = (
-            base.filter(F.col("_prev").isNotNull() & (F.col("_prev") != F.col("_cur")))
-            .select(
-                F.least("_prev", "_cur").alias("source"),
-                F.greatest("_prev", "_cur").alias("target"),
-            )
-            .groupBy("source", "target")
-            .agg(F.count(F.lit(1)).alias("weight"))
-        )
-        return nodes, edges
-
-    nodes = df.select(F.col(sender_col).alias("id")).distinct()
-    edges = lag_edges(df, sender_col, order_cols, partition_cols)
+    pairs = interaction_pairs(
+        messages, start_date, end_date, limit, sender_col, date_col, order_cols,
+        partition_cols,
+    )
+    nodes = pairs.select(F.explode(F.array("source", "target")).alias("id")).distinct()
+    edges = pairs.filter(F.col("source") != F.col("target"))
     return nodes, edges
 
 

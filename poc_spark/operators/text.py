@@ -1,5 +1,5 @@
 """Text-analysis operators: word frequency + top-k (OP-AGG-WORDFREQ /
-OP-TOPK) and the serving-edge map shaping.
+OP-TOPK). The serving-edge map shaping is serve.analyze_words_response.
 
 Reference: the vestigial /analyze/{filename} endpoint whose client
 contract survives at frontend/src/components/Formgibui.jsx:63-83 (server
@@ -36,9 +36,3 @@ def word_freq(df: DataFrame, text_col: str = "text") -> DataFrame:
 def top_k_words(freq: DataFrame, k: int = 10) -> DataFrame:
     """OP-TOPK with deterministic tie-break (freq desc, word asc)."""
     return freq.orderBy(F.desc("freq"), "word").limit(k)
-
-
-def word_freq_response(freq: DataFrame, k: int = 10) -> dict[str, int]:
-    """Serving edge only: the {word: count} JSON object the dead endpoint
-    promised. collect() is confined to the top-k result (≤ k rows)."""
-    return {r["word"]: r["freq"] for r in top_k_words(freq, k).collect()}

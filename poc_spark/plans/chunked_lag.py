@@ -12,7 +12,8 @@ global order:
      shuffle beyond the chunk-partitioned window);
   3. lag WITHIN each chunk (parallel windows);
   4. stitch: the last row of chunk k and the first row of chunk k+1 form
-     the one missing adjacency per boundary — O(num_chunks) rows moved.
+     the one missing adjacency per boundary — O(num_chunks) rows moved;
+     the first chunk's first row is the stream head, (null, first).
 
 Equality with the global window is exact (the range partition respects
 the total order), and is pinned by tests/test_chunked_lag.py.
@@ -77,15 +78,19 @@ def chunked_lag_pairs(
     order_cols: Sequence[str],
     num_chunks: int = 32,
 ) -> DataFrame:
-    """(prev, cur) for every adjacent pair of rows in the total order
-    defined by order_cols — computed with per-chunk windows + boundary
-    stitching instead of one global window. The first row of the stream
-    has no prev and emits nothing.
+    """(prev, cur) for every row in the total order defined by
+    order_cols, prev = the previous row's value — computed with
+    per-chunk windows + boundary stitching instead of one global
+    window. One row per input row: the stream head comes out as
+    (null, first_val), exactly as a global lag would emit it, so a
+    caller can read the full value set off the pairs (the interaction
+    graph's (s, s) node rows) without its own scan.
     """
     # 1.+2. shared range chunking (approx bounds + strict-> bucketing)
     bucketed = _range_chunks(df, order_cols[0], num_chunks)
 
     # 3. lag within each chunk (parallel windows, one shuffle by _chunk).
+    # Each chunk's first row has no in-chunk prev; the stitch supplies it.
     w = Window.partitionBy("_chunk").orderBy(*order_cols)
     within = (
         bucketed.withColumn("_prev", F.lag(value_col).over(w))
@@ -93,20 +98,21 @@ def chunked_lag_pairs(
         .select(F.col("_prev").alias("prev"), F.col(value_col).alias("cur"))
     )
 
-    # 4. boundary stitching: last row of each chunk joins the NEXT
-    # PRESENT chunk's first row (an approx-quantile chunk can still come
-    # out empty; `_chunk + 1` would silently drop that adjacency). Two
-    # tiny aggregates + a lead over ≤ num_chunks rows.
+    # 4. boundary stitching: each PRESENT chunk's first row pairs with
+    # the previous present chunk's last row (an approx-quantile chunk
+    # can still come out empty; `_chunk - 1` would silently drop that
+    # adjacency). lag(last_val) over the chunk rows gives the first
+    # chunk a null prev — the stream head. Two tiny aggregates + a lag
+    # over ≤ num_chunks rows.
     ord_s = _order_struct(order_cols)
     per_chunk = bucketed.groupBy("_chunk").agg(
         F.min_by(F.col(value_col), ord_s).alias("first_val"),
         F.max_by(F.col(value_col), ord_s).alias("last_val"),
     )
     w_chunks = Window.orderBy("_chunk")  # ≤ num_chunks rows: trivial
-    boundary = (
-        per_chunk.withColumn("next_first", F.lead("first_val").over(w_chunks))
-        .filter(F.col("next_first").isNotNull())
-        .select(F.col("last_val").alias("prev"), F.col("next_first").alias("cur"))
+    boundary = per_chunk.select(
+        F.lag("last_val").over(w_chunks).alias("prev"),
+        F.col("first_val").alias("cur"),
     )
     return within.unionByName(boundary)
 
@@ -183,6 +189,7 @@ def chunked_lag_edges(
     operators.network.lag_edges with a global window, but shuffles by
     chunk instead of collapsing to one partition."""
     pairs = chunked_lag_pairs(df, sender_col, order_cols, num_chunks)
+    # the head's null prev fails `!=` too: only real transitions remain
     return (
         pairs.filter(F.col("prev") != F.col("cur"))
         .select(

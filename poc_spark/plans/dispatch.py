@@ -32,9 +32,15 @@ CHUNK_FORCE_KEY = "spark.poc.chunkedWindow.force"
 DEFAULT_MIN_BYTES = 24 * 1024 * 1024
 
 
+# spark.sql.defaultSizeInBytes (Long.MaxValue): what a plan with no
+# stats (an RDD-backed or Python-UDF leaf) reports as its size.
+NO_STATS_BYTES = 2**63 - 1
+
+
 def estimated_size_bytes(df: DataFrame) -> int:
     """Catalyst's optimized-plan size estimate in bytes. No job runs;
-    for parquet scans this is file size scaled by filter selectivity."""
+    for parquet scans this is file size scaled by filter selectivity.
+    A value >= NO_STATS_BYTES means "unknown", not a real size."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 

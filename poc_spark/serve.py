@@ -2,6 +2,11 @@
 responses (OP-PROJ-NODES / OP-PROJ-LINKS — the only place collect() is
 allowed; everything upstream stays distributed).
 
+The network request is one lineage and one collect: the graph is a
+single pair aggregate (operators.network.interaction_pairs) whose
+(s, s) rows carry the senders that formed no link; the driver splits
+the collected rows into nodes and links.
+
 Reference responses reproduced:
   GET /analyze/network/{filename} → {"nodes": [{"id": ...}],
       "links": [{"source","target","weight"}]}   (backend/main.py:328-338)
@@ -19,22 +24,40 @@ from pyspark.sql import DataFrame, SparkSession
 
 from poc_spark.functions.chat_parse import parse_chat_lines
 from poc_spark.operators.etl import parse_chat_table
-from poc_spark.operators.network import interaction_graph
+from poc_spark.operators.network import interaction_pairs
 from poc_spark.operators.text import top_k_words, word_freq
 from poc_spark.sources.chat import read_chat_lines
 
 
-def network_response(nodes: DataFrame, edges: DataFrame) -> dict:
-    """EP-1 response shape. Node order is not part of the contract (the
-    reference iterates a Python set); links carry canonical source <=
-    target."""
+def _graph_body(ids, links) -> dict:
     return {
-        "nodes": [{"id": r["id"]} for r in nodes.collect()],
-        "links": [
-            {"source": r["source"], "target": r["target"], "weight": r["weight"]}
-            for r in edges.collect()
-        ],
+        "nodes": [{"id": i} for i in ids],
+        "links": [{"source": s, "target": t, "weight": w} for s, t, w in links],
     }
+
+
+def network_response(nodes: DataFrame, edges: DataFrame) -> dict:
+    """EP-1 response shape from separate node and edge DataFrames (two
+    collects). Node order is not part of the contract (the reference
+    iterates a Python set); links carry canonical source <= target."""
+    return _graph_body(
+        [r["id"] for r in nodes.collect()],
+        [(r["source"], r["target"], r["weight"]) for r in edges.collect()],
+    )
+
+
+def pairs_response(pairs: DataFrame) -> dict:
+    """EP-1 response from the one interaction_pairs aggregate: ONE
+    collect, split on the driver. Nodes are the endpoints of every row
+    (sorted — deterministic JSON); links are the rows with
+    source != target. (s, s) rows — the stream head and self-
+    transitions — contribute a node and no link."""
+    rows = pairs.collect()
+    ids = sorted({r["source"] for r in rows} | {r["target"] for r in rows})
+    links = [
+        (r["source"], r["target"], r["weight"]) for r in rows if r["source"] != r["target"]
+    ]
+    return _graph_body(ids, links)
 
 
 def analyze_network(
@@ -45,16 +68,18 @@ def analyze_network(
     limit: int | None = None,
 ) -> dict:
     """GET /analyze/network/{filename} end to end: text scan → parse →
-    filters → graph → JSON (backend/main.py:255-342). Missing file →
-    FileNotFoundError (OP-FIL-EXISTS: the reference 404s,
-    backend/main.py:264-266) instead of a Java stack trace."""
+    filters → pair aggregate → JSON (backend/main.py:255-342), as one
+    lineage and one action: the export is scanned once per request
+    (plus the chunked path's own planning jobs above the dispatch
+    threshold). Missing file → FileNotFoundError (OP-FIL-EXISTS: the
+    reference 404s, backend/main.py:264-266) instead of a Java stack
+    trace."""
     import os
 
     if not os.path.exists(path):
         raise FileNotFoundError(f"File '{os.path.basename(path)}' not found.")
     msgs = parse_chat_lines(read_chat_lines(spark, path))
-    nodes, edges = interaction_graph(msgs, start_date, end_date, limit)
-    return network_response(nodes, edges)
+    return pairs_response(interaction_pairs(msgs, start_date, end_date, limit))
 
 
 def upload_chats_response(spark: SparkSession, path: str, table_path: str) -> dict:

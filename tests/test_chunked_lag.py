@@ -3,6 +3,9 @@ events table and on adversarial small inputs (skew, empty chunks)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from poc_spark.operators.network import lag_edges
@@ -56,5 +59,13 @@ def test_chunked_ordered_limit_equals_global(spark, sf_dir):
 def test_pair_count_invariant(spark):
     rows = [(float(i), i, f"u{i % 5}") for i in range(200)]
     df = spark.createDataFrame(rows, "k double, tie long, sender string")
-    pairs = chunked_lag_pairs(df, "sender", ("k", "tie"), 8)
-    assert pairs.count() == 199  # n-1 adjacencies, none lost or duplicated
+    pairs = chunked_lag_pairs(df, "sender", ("k", "tie"), 8).collect()
+    # one row per input row: n-1 adjacencies, none lost or duplicated,
+    # plus the stream head as (null, first)
+    assert len(pairs) == 200
+    heads = [r for r in pairs if r["prev"] is None]
+    assert len(heads) == 1 and heads[0]["cur"] == "u0"
+    # the pairs equal the global lag exactly
+    w = Window.orderBy("k", "tie")
+    glob = df.select(F.lag("sender").over(w).alias("prev"), F.col("sender").alias("cur"))
+    assert Counter(map(tuple, pairs)) == Counter(map(tuple, glob.collect()))

@@ -7,10 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from poc_spark.operators.multimodal import (
+    _fanout_tasks,
     decode_media,
     frame_sample_plan,
     payload_stats,
 )
+from poc_spark.plans.dispatch import NO_STATS_BYTES, estimated_size_bytes
 
 
 @pytest.fixture(scope="module")
@@ -24,6 +26,17 @@ def media(spark):
     return spark.createDataFrame(
         rows, "media_id long, kind string, payload binary, meta map<string,string>"
     )
+
+
+def test_fanout_no_stats_plan_gets_core_count(spark):
+    """A local-rows plan has no stats: Catalyst reports the Long.MaxValue
+    sentinel. That is an unknown size, so the synth lanes fan out to
+    the core count, not to the 4096-task cap."""
+    tiny = spark.createDataFrame([(1, "a"), (2, "b")], "id long, text string")
+    assert estimated_size_bytes(tiny) >= NO_STATS_BYTES
+    cores = spark.sparkContext.defaultParallelism
+    assert _fanout_tasks(tiny, None) == cores
+    assert _fanout_tasks(tiny, 7) == 7  # an explicit width still wins
 
 
 def test_payload_stats(spark, media):

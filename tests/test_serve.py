@@ -2,13 +2,22 @@
 
 from __future__ import annotations
 
+import json
+import uuid
+
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
 from poc_spark.functions.chat_parse import parse_chat_lines
+from poc_spark.plans.dispatch import CHUNK_FORCE_KEY
 from poc_spark.serve import (
     analyze_network,
     analyze_words_response,
     upload_chats_response,
 )
 from poc_spark.sources.chat import chat_lines_from_strings
+from tests.reference_oracle import analyze_network as reference_network
 
 CHAT = """[7.10.2023, 19:43:25] Group Chat: created
 [7.10.2023, 19:44:00] Alice: hello there world
@@ -46,3 +55,97 @@ def test_analyze_words_response(spark):
     resp = analyze_words_response(msgs, k=3)
     assert resp["analysis"]["hello"] == 2
     assert len(resp["analysis"]) == 3
+
+
+# --- GET /analyze/network: one lineage, one collect -----------------------
+
+_RANGE_CHAT = "\n".join(
+    f"[{d}.10.2023, 10:00:00] {s}: m"
+    for d, s in [(1, "Alice"), (2, "Bob"), (2, "Bob"), (3, "Carol"), (4, "Alice"), (5, "Dan")]
+) + "\n"
+
+
+@pytest.mark.parametrize(
+    "args",
+    [(None, None, None), ("2023-10-02", "2023-10-04", None), ("2023-10-02", "2023-10-04", 2)],
+    ids=["unfiltered", "range", "range_limit"],
+)
+def test_analyze_network_job_count(spark, tmp_path_repo, args):
+    """The request collects ONE aggregate: on the global path AQE runs
+    it as at most 2 jobs (the window's exchange, then the aggregate),
+    where separate node and edge collects ran 4."""
+    path = tmp_path_repo / "jobs.txt"
+    path.write_text(_RANGE_CHAT, encoding="utf-8")
+    sc = spark.sparkContext
+    group = f"analyze_network_{uuid.uuid4().hex}"
+    spark.conf.set(CHUNK_FORCE_KEY, "false")
+    sc.setJobGroup(group, "analyze_network job count")
+    try:
+        resp = analyze_network(spark, str(path), *args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.unset(CHUNK_FORCE_KEY)
+    assert resp["nodes"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+_h_sender = st.sampled_from(["A", "B", "~C~", "a:b", " D ", "🦆", "דני", "~", "x y z"])
+_h_line = st.one_of(
+    st.builds(
+        lambda d, m, s: f"[{d}.{m}.2023, 10:00:00] {s}: m",
+        st.integers(min_value=0, max_value=12),
+        st.integers(min_value=1, max_value=2),
+        _h_sender,
+    ),
+    st.sampled_from(["", "[", "plain text", "[1.1.2023]: z", "[2.1.2023, 10:00] A: הושמט"]),
+)
+_h_range = st.sampled_from(
+    [(None, None), ("2023-01-03", "2023-01-08"), ("2023-01-05", "2023-01-05"),
+     ("2023-01-10", None), ("2023-03-01", "2023-03-31")]
+)
+
+
+@pytest.mark.parametrize("force", [None, "true"], ids=["configured", "forced_chunked"])
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    lines=st.lists(_h_line, max_size=30),
+    bounds=_h_range,
+    limit=st.sampled_from([None, 0, 1, 4]),
+)
+@example(lines=[], bounds=(None, None), limit=None)
+@example(lines=[], bounds=(None, None), limit=4)
+@example(lines=["[1.1.2023, 10:00:00] A: m"], bounds=(None, None), limit=None)
+@example(lines=["[1.1.2023, 10:00:00] A: m"], bounds=(None, None), limit=1)
+# the range keeps exactly one message: its sender is a node with no link
+@example(
+    lines=[
+        "[2.1.2023, 10:00:00] A: m",
+        "[5.1.2023, 10:00:00] B: m",
+        "[9.1.2023, 10:00:00] A: m",
+    ],
+    bounds=("2023-01-05", "2023-01-05"),
+    limit=None,
+)
+def test_served_json_matches_reference(spark, tmp_path_repo, force, lines, bounds, limit):
+    """Served JSON of GET /analyze/network on a written export equals
+    the reference oracle — on the configured dispatch and on the forced
+    chunked path, where the nodes come off the pair aggregate too."""
+    path = tmp_path_repo / f"{uuid.uuid4().hex}.txt"
+    path.write_text("".join(f"{line}\n" for line in lines), encoding="utf-8")
+    if force is not None:
+        spark.conf.set(CHUNK_FORCE_KEY, force)
+    try:
+        body = json.loads(json.dumps(analyze_network(spark, str(path), *bounds, limit)))
+    finally:
+        spark.conf.unset(CHUNK_FORCE_KEY)
+    exp_nodes, exp_links = reference_network(lines, *bounds, limit)
+    ids = [n["id"] for n in body["nodes"]]
+    assert ids == exp_nodes  # sorted, no duplicates
+    links = {(l["source"], l["target"]): l["weight"] for l in body["links"]}
+    assert len(links) == len(body["links"])
+    assert all(s < t for s, t in links)
+    assert links == exp_links
