@@ -73,13 +73,19 @@ def typed_messages(messages: DataFrame) -> DataFrame:
     )
 
 
-def append_messages(messages: DataFrame, path: str) -> int:
+def write_messages(messages: DataFrame, path: str) -> None:
     """OP-SINK-JDBC analog: set-based append of the messages table to a
     parquet dataset (the reference's per-row INSERTs collapse into
-    partition-batched writes). Returns inserted_rows like the endpoint."""
-    out = messages.select("group_name", "date_time", "sender", "message")
-    out.write.mode("append").parquet(path)
-    return out.count()
+    partition-batched writes)."""
+    messages.select("group_name", "date_time", "sender", "message").write.mode(
+        "append"
+    ).parquet(path)
+
+
+def append_messages(messages: DataFrame, path: str) -> int:
+    """write_messages, then inserted_rows like the endpoint."""
+    write_messages(messages, path)
+    return messages.count()
 
 
 def append_messages_jdbc(

@@ -60,22 +60,6 @@ def _chain_window(order_cols: Sequence[str], partition_cols: Sequence[str]):
     return Window.orderBy(*order_cols)
 
 
-def _chunked_prefix(df: DataFrame, limit: int, order_cols: Sequence[str]) -> DataFrame:
-    """The first `limit` rows on the chunked scale path, materialized.
-
-    localCheckpoint (NOT .cache): the chunked lag re-derives chunk
-    boundaries over the prefix (an approxQuantile pass + the final
-    job), so a materialization barrier is required — but .cache()
-    registers in the session CacheManager forever; checkpointed blocks
-    are dropped when the DataFrame is garbage-collected, so repeated
-    calls in a long session can't accumulate storage. (Lineage is
-    truncated: on executor loss the block recomputes from the
-    checkpoint's parent, acceptable for a derived prefix.)"""
-    from poc_spark.plans.chunked_lag import chunked_ordered_limit
-
-    return chunked_ordered_limit(df, limit, order_cols).localCheckpoint(eager=True)
-
-
 def ordered_limit(
     df: DataFrame,
     n: int | None,
@@ -157,14 +141,13 @@ def lag_edges_limited(
     lag-then-filter(rn <= n) equals filter-then-lag.
 
     Above the scale threshold the fused single window would itself be
-    the bottleneck — dispatch to chunked limit-then-lag (equal by the
-    same prefix property; the chunked limit prunes whole chunks before
-    the lag ever runs)."""
+    the bottleneck — dispatch to the chunked chain, which lags inside
+    the limit's own chunks (equal by the same prefix property; chunks
+    past the limit are pruned before the lag ever runs)."""
     if not partition_cols and use_chunked(df):
         from poc_spark.plans.chunked_lag import chunked_lag_edges
 
-        prefix = _chunked_prefix(df, limit, order_cols)
-        return chunked_lag_edges(prefix, sender_col, order_cols)
+        return chunked_lag_edges(df, sender_col, order_cols, limit=limit)
     w = _chain_window(order_cols, partition_cols)
     s = F.col(sender_col)
     return (
@@ -211,8 +194,9 @@ def interaction_pairs(
     limit, row_number in the same window spec (one sort/exchange; the
     limit keeps a prefix, so each kept row's predecessor is kept too).
     Above the dispatch threshold it is the chunked scale path instead:
-    chunked ordered limit, then chunked_lag_pairs, whose stitch emits
-    the head as (null, first) so no separate node scan is needed."""
+    chunked_lag_pairs with the limit, which parses the input once and
+    lags inside the limit's own chunks; its stitch emits the head as
+    (null, first), so no separate node scan is needed."""
     df = messages
     # both-bounds-only quirk (backend/main.py:305): a lone bound is a no-op.
     if start_date and end_date:
@@ -221,9 +205,7 @@ def interaction_pairs(
     if not partition_cols and use_chunked(df):
         from poc_spark.plans.chunked_lag import chunked_lag_pairs
 
-        if limit:
-            df = _chunked_prefix(df, limit, order_cols)
-        chain = chunked_lag_pairs(df, sender_col, order_cols)
+        chain = chunked_lag_pairs(df, sender_col, order_cols, limit=limit)
     else:
         w = _chain_window(order_cols, partition_cols)
         cols = [F.lag(sender_col).over(w).alias("prev"), F.col(sender_col).alias("cur")]

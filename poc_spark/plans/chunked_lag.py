@@ -3,20 +3,34 @@ path for lag over a single giant totally-ordered stream.
 
 The reference-parity lag (operators/network.py) uses a global window:
 one partition, fine for a chat file, hostile at 100 TB. This module
-computes the same (prev, cur) adjacency without ever materializing a
-global order:
+computes the same (prev, cur) adjacency, optionally over only the
+first `limit` rows of the order, without ever materializing a global
+order. chunked_lag_pairs is the one chain builder:
 
-  1. sample approximate range boundaries of the order key (driver gets
-     num_chunks-1 values — tiny);
-  2. bucket every row into its range chunk (a literal when-chain — no
-     shuffle beyond the chunk-partitioned window);
-  3. lag WITHIN each chunk (parallel windows);
-  4. stitch: the last row of chunk k and the first row of chunk k+1 form
-     the one missing adjacency per boundary — O(num_chunks) rows moved;
-     the first chunk's first row is the stream head, (null, first).
+  1. materialize the narrow projection (order columns + value) once,
+     with an eager localCheckpoint — every later pass reads that
+     working set, so the source (a chat export's text) is scanned and
+     parsed exactly once;
+  2. range-chunk it: one approxQuantile pass gives num_chunks-1
+     approximate boundaries of the leading order key, and every row is
+     bucketed by a literal when-chain (no shuffle of its own);
+  3. collect each present chunk's count, first value and last value in
+     one job (≤ num_chunks rows);
+  4. on the driver, walk the cumulative counts against the limit: the
+     chunks wholly inside it, and the one chunk that straddles it;
+  5. lag WITHIN each kept chunk (parallel windows, one shuffle by
+     chunk); row_number in the same window spec drops each chunk's
+     first row (the stitch supplies its prev) and, on the straddling
+     chunk only, the rows past the limit. The boundary stitch — chunk
+     k's first value paired with the previous present chunk's last
+     value, the stream head as (null, first) — is a driver-built
+     relation of ≤ num_chunks rows.
 
-Equality with the global window is exact (the range partition respects
-the total order), and is pinned by tests/test_chunked_lag.py.
+Equality with the global window (row_number() <= limit, then lag) is
+exact: the range partition respects the total order, and a limit keeps
+a prefix of it, so each kept row's predecessor is kept too. Pinned by
+tests/test_chunked_lag.py. chunked_ordered_limit (the limit alone)
+shares steps 2 and 4.
 """
 
 from __future__ import annotations
@@ -25,6 +39,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _order_struct(order_cols: Sequence[str]):
@@ -72,49 +87,125 @@ def _range_chunks(
     return keyed.withColumn("_chunk", chunk)
 
 
+def _limit_walk(
+    counts: dict[int, int], n: int | None
+) -> tuple[list[int], int | None, int]:
+    """Walk the present chunks' row counts in chunk order against a
+    limit of n rows: (the chunks wholly inside the limit, the one chunk
+    that straddles it or None, how many of its rows the limit keeps).
+    A falsy n is no limit (reference `if limit and ...`): every chunk
+    is whole."""
+    if not n:
+        return sorted(counts), None, 0
+    cum = 0
+    full: list[int] = []
+    for c in sorted(counts):
+        if cum + counts[c] > n:
+            return full, c, n - cum
+        full.append(c)
+        cum += counts[c]
+        if cum == n:
+            break
+    return full, None, 0
+
+
+def _narrow_working_set(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """df projected to `cols`, materialized once (eager localCheckpoint):
+    the chunked chain runs three actions over its input (the quantile
+    pass, the per-chunk stats, the final job), and without the barrier
+    each would re-derive the input from its source — for a chat export,
+    re-scan and re-parse the text. Only the narrow projection is kept,
+    so the working set is a few columns wide, not the parsed table.
+
+    localCheckpoint, NOT .cache(): .cache() registers the plan in the
+    session CacheManager, whose entries never free themselves (VERDICT
+    r4 #7); checkpointed blocks are released once the DataFrame is
+    garbage-collected, so a long serving session can't accumulate
+    storage. The trade: the checkpoint truncates the lineage and its
+    blocks live only in executor storage, so Spark cannot recompute
+    them — losing an executor that holds one fails the job that reads
+    it, and the request must be sent again (which re-reads the
+    source). A reliable checkpoint() would survive that, at the price
+    of writing the projection to the checkpoint directory on every
+    request."""
+    return df.select(*cols).localCheckpoint(eager=True)
+
+
 def chunked_lag_pairs(
     df: DataFrame,
     value_col: str,
     order_cols: Sequence[str],
     num_chunks: int = 32,
+    limit: int | None = None,
 ) -> DataFrame:
-    """(prev, cur) for every row in the total order defined by
-    order_cols, prev = the previous row's value — computed with
-    per-chunk windows + boundary stitching instead of one global
-    window. One row per input row: the stream head comes out as
-    (null, first_val), exactly as a global lag would emit it, so a
-    caller can read the full value set off the pairs (the interaction
-    graph's (s, s) node rows) without its own scan.
-    """
-    # 1.+2. shared range chunking (approx bounds + strict-> bucketing)
-    bucketed = _range_chunks(df, order_cols[0], num_chunks)
-
-    # 3. lag within each chunk (parallel windows, one shuffle by _chunk).
-    # Each chunk's first row has no in-chunk prev; the stitch supplies it.
-    w = Window.partitionBy("_chunk").orderBy(*order_cols)
-    within = (
-        bucketed.withColumn("_prev", F.lag(value_col).over(w))
-        .filter(F.col("_prev").isNotNull())
-        .select(F.col("_prev").alias("prev"), F.col(value_col).alias("cur"))
+    """(prev, cur) for every row among the first `limit` rows (all rows
+    when limit is falsy) of the total order defined by order_cols,
+    prev = the previous row's value — computed with per-chunk windows +
+    boundary stitching instead of one global window. One row per kept
+    row: the stream head comes out as (null, first_val), exactly as a
+    global lag would emit it, so a caller can read the full value set
+    off the pairs (the interaction graph's (s, s) node rows) without
+    its own scan. Equal to row_number() <= limit plus lag over the
+    global order."""
+    # 1. one narrow materialization (value_col may be an order column)
+    narrow = _narrow_working_set(df, list(dict.fromkeys([*order_cols, value_col])))
+    value_type = narrow.schema[value_col].dataType
+    pair_schema = StructType(
+        [StructField("prev", value_type, True), StructField("cur", value_type, True)]
     )
 
-    # 4. boundary stitching: each PRESENT chunk's first row pairs with
-    # the previous present chunk's last row (an approx-quantile chunk
-    # can still come out empty; `_chunk - 1` would silently drop that
-    # adjacency). lag(last_val) over the chunk rows gives the first
-    # chunk a null prev — the stream head. Two tiny aggregates + a lag
-    # over ≤ num_chunks rows.
+    # 2. shared range chunking (approx bounds + strict-> bucketing)
+    bucketed = _range_chunks(narrow, order_cols[0], num_chunks)
+
+    # 3. one job: each present chunk's count, first and last value.
+    # An approx-quantile chunk can come out empty; it is simply absent.
     ord_s = _order_struct(order_cols)
-    per_chunk = bucketed.groupBy("_chunk").agg(
-        F.min_by(F.col(value_col), ord_s).alias("first_val"),
-        F.max_by(F.col(value_col), ord_s).alias("last_val"),
+    stats = sorted(
+        bucketed.groupBy("_chunk")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.min_by(F.col(value_col), ord_s).alias("first_val"),
+            F.max_by(F.col(value_col), ord_s).alias("last_val"),
+        )
+        .collect(),
+        key=lambda r: r["_chunk"],
     )
-    w_chunks = Window.orderBy("_chunk")  # ≤ num_chunks rows: trivial
-    boundary = per_chunk.select(
-        F.lag("last_val").over(w_chunks).alias("prev"),
-        F.col("first_val").alias("cur"),
+
+    # 4. the limit walk; the kept chunks are a prefix of the present ones
+    full, straddle, remaining = _limit_walk({r["_chunk"]: r["cnt"] for r in stats}, limit)
+    kept = stats[: len(full) + (straddle is not None)]
+
+    # boundary stitch: each kept chunk's first row pairs with the
+    # previous present chunk's last row; the first chunk's with null
+    boundary, prev = [], None
+    for r in kept:
+        boundary.append((prev, r["first_val"]))
+        prev = r["last_val"]
+    stitch = narrow.sparkSession.createDataFrame(boundary, pair_schema)
+    if not kept:
+        return stitch
+
+    # 5. lag within each kept chunk. Each chunk's first row has no
+    # in-chunk prev (the stitch supplies it); the straddling chunk
+    # keeps only its first `remaining` rows.
+    rows = bucketed
+    if len(kept) < len(stats):
+        rows = rows.filter(F.col("_chunk") <= kept[-1]["_chunk"])
+    w = Window.partitionBy("_chunk").orderBy(*order_cols)
+    keep = F.col("_rn") > 1
+    if straddle is not None:
+        keep = keep & ((F.col("_chunk") != straddle) | (F.col("_rn") <= remaining))
+    within = (
+        rows.select(
+            "_chunk",
+            F.row_number().over(w).alias("_rn"),
+            F.lag(value_col).over(w).alias("prev"),
+            F.col(value_col).alias("cur"),
+        )
+        .filter(keep)
+        .select("prev", "cur")
     )
-    return within.unionByName(boundary)
+    return within.unionByName(stitch)
 
 
 def chunked_ordered_limit(
@@ -127,7 +218,8 @@ def chunked_ordered_limit(
     global single-partition window.
 
       1. range-chunk on the leading order column (as in chunked lag);
-      2. per-chunk counts → driver (≤ num_chunks rows);
+      2. per-chunk counts → driver (≤ num_chunks rows), walked against
+         n (_limit_walk, shared with chunked_lag_pairs);
       3. chunks wholly inside the limit pass through UNTOUCHED (no sort,
          no window — just a filter);
       4. only the one straddling chunk runs a row_number, over its own
@@ -145,25 +237,12 @@ def chunked_ordered_limit(
         (r["_chunk"], r["cnt"])
         for r in bucketed.groupBy("_chunk").agg(F.count(F.lit(1)).alias("cnt")).collect()
     )
-    cum = 0
-    full_chunks: list[int] = []
-    straddle: int | None = None
-    remaining = 0
-    for c in sorted(counts):
-        if cum + counts[c] <= n:
-            full_chunks.append(c)
-            cum += counts[c]
-            if cum == n:
-                break
-        else:
-            straddle, remaining = c, n - cum
-            break
+    full_chunks, straddle, remaining = _limit_walk(counts, n)
 
-    whole = bucketed.filter(F.col("_chunk").isin(full_chunks)) if full_chunks else None
     parts = []
-    if whole is not None:
-        parts.append(whole)
-    if straddle is not None and remaining > 0:
+    if full_chunks:
+        parts.append(bucketed.filter(F.col("_chunk").isin(full_chunks)))
+    if straddle is not None:
         w = Window.partitionBy("_chunk").orderBy(*order_cols)
         parts.append(
             bucketed.filter(F.col("_chunk") == straddle)
@@ -184,11 +263,13 @@ def chunked_lag_edges(
     sender_col: str,
     order_cols: Sequence[str],
     num_chunks: int = 32,
+    limit: int | None = None,
 ) -> DataFrame:
-    """OP-LAG-EDGE + OP-AGG-EDGEW at scale: same output as
-    operators.network.lag_edges with a global window, but shuffles by
-    chunk instead of collapsing to one partition."""
-    pairs = chunked_lag_pairs(df, sender_col, order_cols, num_chunks)
+    """OP-LAG-EDGE + OP-AGG-EDGEW at scale, over the first `limit` rows
+    (all when falsy): same output as operators.network.lag_edges /
+    lag_edges_limited with a global window, but shuffles by chunk
+    instead of collapsing to one partition."""
+    pairs = chunked_lag_pairs(df, sender_col, order_cols, num_chunks, limit)
     # the head's null prev fails `!=` too: only real transitions remain
     return (
         pairs.filter(F.col("prev") != F.col("cur"))

@@ -5,11 +5,13 @@ from __future__ import annotations
 
 from collections import Counter
 
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from poc_spark.operators.network import lag_edges
-from poc_spark.plans.chunked_lag import chunked_lag_edges, chunked_lag_pairs
+from poc_spark.plans.chunked_lag import _range_chunks, chunked_lag_edges, chunked_lag_pairs
 
 
 def _edges_map(df):
@@ -69,3 +71,75 @@ def test_pair_count_invariant(spark):
     w = Window.orderBy("k", "tie")
     glob = df.select(F.lag("sender").over(w).alias("prev"), F.col("sender").alias("cur"))
     assert Counter(map(tuple, pairs)) == Counter(map(tuple, glob.collect()))
+
+
+# --- the limited builder against the global form ---------------------------
+
+_LIMITS = ("none", "zero", "one", "all", "past_all", "chunk_edge", "inside")
+
+
+def _global_pairs(df, value_col, order_cols, n):
+    """The global form: row_number() <= n plus lag, one window."""
+    w = Window.orderBy(*order_cols)
+    g = df.select(
+        F.row_number().over(w).alias("_rn"),
+        F.lag(value_col).over(w).alias("prev"),
+        F.col(value_col).alias("cur"),
+    )
+    if n:
+        g = g.filter(F.col("_rn") <= n)
+    return Counter((r["prev"], r["cur"]) for r in g.collect())
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    # few distinct leading keys: ties broken by the second order column
+    rows=st.lists(
+        st.tuples(st.integers(0, 5), st.sampled_from(["a", "b", "c", None])), max_size=40
+    ),
+    num_chunks=st.sampled_from([1, 2, 8]),
+    value_col=st.sampled_from(["sender", "k", "tie"]),
+    mode=st.sampled_from(_LIMITS),
+    pick=st.integers(0, 10**6),
+)
+@example(rows=[], num_chunks=8, value_col="sender", mode="one", pick=0)
+@example(rows=[], num_chunks=2, value_col="sender", mode="none", pick=0)
+# a null value inside a chunk is a real prev, not a chunk's first row
+@example(rows=[(0, None), (0, "a"), (1, "b")], num_chunks=1, value_col="sender",
+         mode="none", pick=0)
+# one key value: every quantile is that value, so the chunk above it is empty
+@example(rows=[(3, "a"), (3, "b"), (3, "a"), (3, "c")], num_chunks=8, value_col="sender",
+         mode="inside", pick=2)
+# skew: a handful of rows past a heavy key, limit on a chunk edge
+@example(rows=[(0, "a")] * 12 + [(1, "b"), (2, "c"), (3, "a"), (4, "b"), (5, "c")],
+         num_chunks=8, value_col="sender", mode="chunk_edge", pick=1)
+@example(rows=[(i % 6, "ab"[i % 2]) for i in range(30)], num_chunks=2, value_col="tie",
+         mode="chunk_edge", pick=0)
+def test_limited_pairs_equal_global_form(spark, rows, num_chunks, value_col, mode, pick):
+    """chunked_lag_pairs(..., limit=n) equals row_number() <= n plus lag
+    over the global order, for every kind of limit: falsy (no limit),
+    1, exactly the row count or past it, exactly a cumulative chunk
+    count (no straddling chunk), and inside a chunk."""
+    # the tie column is unique but not in input order
+    data = [(k, (i * 7919) % 10007, s) for i, (k, s) in enumerate(rows)]
+    df = spark.createDataFrame(data, "k long, tie long, sender string")
+    order = ("k", "tie")
+    counts = Counter(
+        r["_chunk"] for r in _range_chunks(df, "k", num_chunks).select("_chunk").collect()
+    )
+    edges = [sum(counts[c] for c in sorted(counts)[: i + 1]) for i in range(len(counts))]
+    n = {
+        "none": None,
+        "zero": 0,
+        "one": 1,
+        "all": len(data),
+        "past_all": len(data) + 3,
+        "chunk_edge": edges[pick % len(edges)] if edges else 1,
+        "inside": 1 + pick % len(data) if data else 1,
+    }[mode]
+    got = Counter(map(tuple, chunked_lag_pairs(df, value_col, order, num_chunks, n).collect()))
+    assert got == _global_pairs(df, value_col, order, n)

@@ -50,6 +50,31 @@ def test_upload_chats_response(spark, tmp_path_repo):
     assert spark.read.parquet(str(tmp_path_repo / "tbl")).count() == 3
 
 
+def test_upload_job_count_is_steady(spark, tmp_path_repo):
+    """POST /upload-chats runs the same number of jobs on every call:
+    three calls on one file, and one call on each of five copies at
+    other paths. The per-file window puts a file's rows in the shuffle
+    partition its path hashes to, so a take-based group probe would run
+    one to three scan-up jobs depending on the path."""
+    sc = spark.sparkContext
+    table = str(tmp_path_repo / "tbl")
+    paths = [_write(tmp_path_repo)] * 3 + [
+        _write(tmp_path_repo, f"copy_{i}.txt") for i in range(5)
+    ]
+    counts, bodies = [], []
+    for path in paths:
+        group = f"upload_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "upload job count")
+        try:
+            bodies.append(upload_chats_response(spark, path, table))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert len(set(counts)) == 1, counts
+    assert all(b == bodies[0] for b in bodies)
+    assert spark.read.parquet(table).count() == 3 * len(paths)
+
+
 def test_analyze_words_response(spark):
     msgs = parse_chat_lines(chat_lines_from_strings(spark, CHAT.splitlines()))
     resp = analyze_words_response(msgs, k=3)
@@ -65,20 +90,32 @@ _RANGE_CHAT = "\n".join(
 ) + "\n"
 
 
+_UNFILTERED = (None, None, None)
+_RANGE_LIMIT = ("2023-10-02", "2023-10-04", 2)
+
+
 @pytest.mark.parametrize(
-    "args",
-    [(None, None, None), ("2023-10-02", "2023-10-04", None), ("2023-10-02", "2023-10-04", 2)],
-    ids=["unfiltered", "range", "range_limit"],
+    "args, force, max_jobs",
+    [
+        pytest.param(_UNFILTERED, "false", 2, id="unfiltered"),
+        pytest.param(("2023-10-02", "2023-10-04", None), "false", 2, id="range"),
+        pytest.param(_RANGE_LIMIT, "false", 2, id="range_limit"),
+        pytest.param(_UNFILTERED, "true", 8, id="forced_chunked-unfiltered"),
+        pytest.param(_RANGE_LIMIT, "true", 8, id="forced_chunked-range_limit"),
+    ],
 )
-def test_analyze_network_job_count(spark, tmp_path_repo, args):
+def test_analyze_network_job_count(spark, tmp_path_repo, args, force, max_jobs):
     """The request collects ONE aggregate: on the global path AQE runs
     it as at most 2 jobs (the window's exchange, then the aggregate),
-    where separate node and edge collects ran 4."""
+    where separate node and edge collects ran 4. The chunked path,
+    with or without a limit, runs 8: the narrow materialization, the
+    quantile pass (2), the per-chunk stats (2), the final aggregate
+    (3)."""
     path = tmp_path_repo / "jobs.txt"
     path.write_text(_RANGE_CHAT, encoding="utf-8")
     sc = spark.sparkContext
     group = f"analyze_network_{uuid.uuid4().hex}"
-    spark.conf.set(CHUNK_FORCE_KEY, "false")
+    spark.conf.set(CHUNK_FORCE_KEY, force)
     sc.setJobGroup(group, "analyze_network job count")
     try:
         resp = analyze_network(spark, str(path), *args)
@@ -86,7 +123,7 @@ def test_analyze_network_job_count(spark, tmp_path_repo, args):
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.unset(CHUNK_FORCE_KEY)
     assert resp["nodes"]
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
 
 
 _h_sender = st.sampled_from(["A", "B", "~C~", "a:b", " D ", "🦆", "דני", "~", "x y z"])
