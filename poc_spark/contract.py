@@ -2322,21 +2322,31 @@ def _bpe_learn_sql(k: int) -> str:
     """
 
 
-@register("text_bpe_learn", _bpe_learn_sql(_BPE_LEARN_K))
 def text_bpe_learn(spark, sf_dir):
-    """LEARN a BPE merge table from the corpus — the training half to
-    text_bpe_apply's serving half: each round merges the
+    """LEARN an exact BPE merge table from the corpus — the training
+    half to text_bpe_apply's serving half: each round merges the
     word-frequency-weighted most common adjacent symbol pair
     (count DESC, pair ASC — a total order, so the table is a pure
-    function of the corpus). Vocabulary-factored driver loop: one
-    explode + hash aggregate over the distinct-word table and a 1-row
-    argmax collect per round, never a corpus rescan. The oracle
-    re-derives the identical learner as a recursive CTE whose global
-    per-round argmax runs as layered windows over the pair-exploded
-    vocabulary."""
-    from poc_spark.operators.textstats import bpe_learn
+    function of the corpus). bpe_learn_local, the one exact learner:
+    the tokenize + word count runs as one distributed aggregate, the
+    merge-order-sequential loop runs driver-local over the collected
+    Zipf-bounded vocabulary (budget-guarded: raises above
+    max_local_vocab rows). The oracle re-derives the identical learner
+    as a recursive CTE whose global per-round argmax runs as layered
+    windows over the pair-exploded vocabulary, pair counts included.
 
-    return bpe_learn(_t(spark, sf_dir, "documents"), num_merges=_BPE_LEARN_K)
+    Registered under three keys so every existing registry key keeps
+    resolving: `text_bpe_learn_batched` and `text_bpe_learn_local`
+    once named separate learners of this same table."""
+    from poc_spark.operators.textstats import bpe_learn_local
+
+    return bpe_learn_local(
+        _t(spark, sf_dir, "documents"), num_merges=_BPE_LEARN_K
+    )
+
+
+for _key in ("text_bpe_learn", "text_bpe_learn_batched", "text_bpe_learn_local"):
+    register(_key, _bpe_learn_sql(_BPE_LEARN_K))(text_bpe_learn)
 
 
 def _bpe_dominance_seg_sql(k: int, max_batch: int) -> str:
@@ -2469,57 +2479,14 @@ def text_bpe_learn_greedy(spark, sf_dir):
     BPE — so the oracle replays the identical dominance selection and
     batch fold as a recursive CTE with layered windows, verifying the
     learner as itself cross-engine. BPE_SCALE.json carries the measured
-    widths and the 32k-merge extrapolation; bpe_learn_batched remains
-    the provably-sequential-exact middle ground."""
+    widths and the 32k-merge extrapolation; text_bpe_learn
+    (bpe_learn_local) is the one exact sequential learner."""
     from poc_spark.operators.textstats import bpe_learn_greedy
 
     return bpe_learn_greedy(
         _t(spark, sf_dir, "documents"),
         num_merges=_BPE_LEARN_K,
         max_batch=_BPE_GREEDY_BATCH,
-    )
-
-
-@register("text_bpe_learn_batched", _bpe_learn_sql(_BPE_LEARN_K))
-def text_bpe_learn_batched(spark, sf_dir):
-    """The SCALE PATH for BPE learning (closes VERDICT r7 #4): up to
-    max_batch merges accepted per driver round instead of one, cutting
-    the sequential loop's 32k-vocab extrapolation from hours to the
-    realized-batch-width fraction (BPE_SCALE.json carries the measured
-    receipt). The batch rule is provably exact — a symbol-disjoint
-    PREFIX of the (count DESC, pair ASC) order with a strict boundary
-    count drop and a live-concat guard (bpe_learn_batched docstring
-    carries the three-guard proof) — so the gate is the strongest
-    available: the oracle is the SEQUENTIAL learner's recursive CTE,
-    verifying cross-engine AND cross-algorithm that batching changed
-    nothing about the learned table."""
-    from poc_spark.operators.textstats import bpe_learn_batched
-
-    return bpe_learn_batched(
-        _t(spark, sf_dir, "documents"), num_merges=_BPE_LEARN_K
-    )
-
-
-@register("text_bpe_learn_local", _bpe_learn_sql(_BPE_LEARN_K))
-def text_bpe_learn_local(spark, sf_dir):
-    """The PRODUCTION-ARCHITECTURE BPE trainer (r9, closes VERDICT r8
-    #3's "32k merges well under an hour" bar with a DIRECT measurement
-    instead of an extrapolation — BPE_SCALE.json local_32k_run): the
-    corpus-sized work (tokenize + word-frequency count) runs as one
-    distributed map-side-combining aggregate; the inherently
-    merge-order-sequential loop then runs driver-local over the
-    collected Zipf-bounded vocabulary with incremental pair-count
-    maintenance (lazy-deletion heap + per-pair posting sets — the
-    classic tokenizer-trainer data structure; HF tokenizers and
-    SentencePiece make the same distributed-count/local-train split).
-    Budget-guarded: raises above max_local_vocab rows. The gate is the
-    SEQUENTIAL learner's recursive-CTE oracle — cross-engine AND
-    cross-implementation proof that the local trainer's table (pair
-    counts included) is bit-identical to exact sequential BPE."""
-    from poc_spark.operators.textstats import bpe_learn_local
-
-    return bpe_learn_local(
-        _t(spark, sf_dir, "documents"), num_merges=_BPE_LEARN_K
     )
 
 
@@ -2724,19 +2691,19 @@ def pipeline_bpe_greedy_train_apply(spark, sf_dir):
 @register("pipeline_bpe_train_apply", _bpe_pipeline_sql(_BPE_LEARN_K))
 def pipeline_bpe_train_apply(spark, sf_dir):
     """END-TO-END tokenizer pipeline: LEARN a merge table from the
-    corpus (text_bpe_learn's loop), then APPLY it back to the same
+    corpus (text_bpe_learn's learner), then APPLY it back to the same
     corpus (text_bpe_apply's vocabulary-factored apply) — train your
     tokenizer and tokenize with it, entirely in-engine. The learned
     table transits the driver as num_merges rows (bounded by
     construction); everything else is the two proven vocab-factored
     loops. The oracle chains both recursive CTEs, the apply referencing
     the LEARNED key list instead of a literal table."""
-    from poc_spark.operators.textstats import bpe_apply, bpe_learn
+    from poc_spark.operators.textstats import bpe_apply, bpe_learn_local
 
     docs = _t(spark, sf_dir, "documents")
     merges = tuple(
         (r["left_sym"], r["right_sym"])
-        for r in bpe_learn(docs, num_merges=_BPE_LEARN_K)
+        for r in bpe_learn_local(docs, num_merges=_BPE_LEARN_K)
         .orderBy("rank")
         .collect()
     )
@@ -10502,8 +10469,9 @@ _TAIL = [
     # (a) the WHOLE 32-entry r9-stale cohort the r13 verdict task #1
     #     names (op_fn_hash, q2, sim_ivf_join, the csv/jsonl/orc
     #     round-trips + schema evolution, both sinks, 7 samplers
-    #     incl. temperature/stratified, the BPE batched/local
-    #     learners, the text scoring tier, lake_expectations,
+    #     incl. temperature/stratified, the text_bpe_learn_batched/
+    #     _local keys (both now run the one exact learner,
+    #     bpe_learn_local), the text scoring tier, lake_expectations,
     #     mm_audio_energy, q_grouping_sets/intersect/event_funnel/
     #     outlier_mad/rolling_time_avg/user_paths/zorder_cells,
     #     pipeline_bpe_greedy_train_apply);

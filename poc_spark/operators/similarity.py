@@ -408,7 +408,12 @@ def ivf_index(
     codegen-cache hit, measured r14); the numpy kernel replays the
     expression's exact fold order, so assignments are bit-identical
     (pytest-pinned) and the pass stays map-only: no shuffle, no codegen,
-    nothing but (columns + centroid) crosses the boundary."""
+    nothing but (columns + centroid) crosses the boundary.
+
+    Precondition, unchecked: every non-null vector has the centroids'
+    dimension (ragged vectors in one batch fail the task). A NULL
+    vector gets a NULL centroid, as the expression form gave it; the
+    other rows of its batch are assigned as usual."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     cents = [(int(i), [float(x) for x in c]) for i, c in centroids]
@@ -417,15 +422,19 @@ def ivf_index(
     )
 
     def batches(it):
-        import pandas as pd  # noqa: F401
+        import pandas as pd
 
         for pdf in it:
             if not len(pdf):
                 continue
             pdf = pdf.copy()
-            pdf["centroid"] = _np_nearest_centroid(
-                _np_widen(pdf[vec_col]), cents
-            )
+            ok = pdf[vec_col].notna().to_numpy()
+            centroid = pd.array([None] * len(pdf), dtype="Int32")
+            if ok.any():
+                centroid[ok] = _np_nearest_centroid(
+                    _np_widen(pdf[vec_col][ok]), cents
+                )
+            pdf["centroid"] = centroid
             yield pdf
 
     return df.mapInPandas(batches, schema=out_schema)

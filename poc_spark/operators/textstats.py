@@ -902,41 +902,42 @@ def bpe_learn_local(
     df: DataFrame,
     num_merges: int = 10,
     text_col: str = "text",
-    id_col: str = "doc_id",
     max_local_vocab: int = 10_000_000,
 ) -> DataFrame:
-    """EXACT sequential BPE with the corpus-scale work distributed and
-    the merge loop driver-local — the architecture every production
-    tokenizer trainer actually uses (HF tokenizers, SentencePiece:
-    count words over the corpus, then train in memory), and the answer
-    to the r8 VERDICT's "32k merges well under an hour" bar without
-    changing semantics: bit-identical to `bpe_learn` (pinned in
-    tests/test_textstats.py), including the reported pair counts.
+    """(rank, left_sym, right_sym, pair_count) — LEARN an exact BPE
+    merge table from the corpus (the training half; bpe_apply is the
+    serving half): per round, count word-frequency-weighted adjacent
+    symbol pairs over the current segmentations (overlapping
+    occurrences all count — the classic convention) and merge the
+    (count DESC, "left right" ASC) winner everywhere. The tie-break is
+    a total order on the space-joined pair string, so the learned
+    table is a pure function of the corpus; the DuckDB recursive-CTE
+    oracle (contract._bpe_learn_sql) replays it, pair counts included.
+    This is the one exact learner; bpe_learn_greedy is the other, a
+    different (dominance-batched) algorithm with its own oracle.
 
-    Why this is the right split at 100 TB: the CORPUS-sized work —
-    tokenize + word frequency count — is one distributed map-side-
-    combining aggregate (the only part that grows with data volume).
-    Its output, the distinct-word table, is Zipf-bounded (~10^6-10^7
-    rows for any natural-language corpus at ANY corpus size — the same
-    bound bpe_apply's vocabulary factoring rests on) and collapses to
-    a few hundred MB — well inside the driver budget every 1-row
-    scalar collect already assumes. The merge LOOP is inherently
-    sequential in merge order (each argmax depends on all previous
-    merges), so running its ~vocab-sized state in process memory with
+    The split is the one every production tokenizer trainer uses (HF
+    tokenizers, SentencePiece): the CORPUS-sized work — tokenize + word
+    frequency count — is one distributed map-side-combining aggregate
+    (the only part that grows with data volume). Its output, the
+    distinct-word table, is Zipf-bounded (~10^6-10^7 rows for any
+    natural-language corpus at ANY corpus size — the same bound
+    bpe_apply's vocabulary factoring rests on) and collapses to a few
+    hundred MB — well inside the driver budget every 1-row scalar
+    collect already assumes. The merge LOOP is inherently sequential in
+    merge order (each argmax depends on all previous merges), so it
+    runs on the collected vocabulary in process memory with
     INCREMENTAL pair-count maintenance (a (count, pair) lazy-deletion
     heap + per-pair posting sets; applying a merge touches only the
-    words that contain it) removes the per-round Spark job floor that
-    dominated the distributed learner's wall clock (BPE_SCALE.json:
-    0.81 s/round of scheduling for milliseconds of executor work).
-    Guard: raises if the vocabulary exceeds `max_local_vocab` rows —
-    the caller then uses the distributed learners (same table, more
-    wall).
+    words that contain it) — no Spark job per merge round
+    (BPE_SCALE.json: 32k merges on a 160k-word vocabulary measured
+    directly). Guard: raises if the vocabulary exceeds
+    `max_local_vocab` rows — raise the budget, or learn with
+    bpe_learn_greedy, whose loop stays distributed but which learns a
+    different table.
 
-    Selection order and application semantics replicate bpe_learn
-    exactly: winner = (count DESC, pair ASC); application = one
-    left-to-right greedy pass per affected word (non-overlapping,
-    leftmost-first — the same result as the distributed fold's
-    (out, pend) state machine)."""
+    Application = one left-to-right greedy pass per affected word
+    (non-overlapping, leftmost-first — the fold the oracle replays)."""
     import heapq
     from collections import defaultdict
 
@@ -950,8 +951,9 @@ def bpe_learn_local(
     if len(rows) > max_local_vocab:
         raise ValueError(
             f"bpe_learn_local: vocabulary has {len(rows)} distinct words "
-            f"(> max_local_vocab={max_local_vocab}); use the distributed "
-            "learners for this corpus or raise the budget"
+            f"(> max_local_vocab={max_local_vocab}); raise the budget, "
+            "or use bpe_learn_greedy (distributed loop, but a different "
+            "merge table)"
         )
     segs: list[list[str]] = [list(r["word"]) for r in rows]
     wcs: list[int] = [r["wc"] for r in rows]
@@ -963,8 +965,8 @@ def bpe_learn_local(
         for a, b in zip(seg, seg[1:]):
             counts[(a, b)] += w
             posting[(a, b)].add(i)
-    # heap key: (-count, "left right") — the STRING form, because
-    # bpe_learn breaks ties by the space-joined pair string and
+    # heap key: (-count, "left right") — the STRING form, because the
+    # oracle breaks ties by the space-joined pair string and
     # tuple-lexicographic order diverges from it when a symbol
     # contains a character below 0x20
     heap: list[tuple[int, str, tuple[str, str]]] = [
@@ -1040,231 +1042,14 @@ def bpe_learn_local(
     )
 
 
-def bpe_learn(
-    df: DataFrame,
-    num_merges: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(rank, left_sym, right_sym, pair_count) — LEARN a BPE merge
-    table from the corpus (the training half; bpe_apply is the serving
-    half): per iteration, count word-frequency-weighted adjacent
-    symbol pairs over the current segmentations (overlapping
-    occurrences all count — the classic convention) and merge the
-    (count DESC, pair ASC) winner everywhere. Deterministic: the
-    tie-break is a total order, so the learned table is a pure
-    function of the corpus.
-
-    Vocabulary-factored like bpe_apply: the loop state is one row per
-    DISTINCT word (Zipf-small at any corpus scale) carrying its corpus
-    frequency; each iteration is one explode + one hash aggregate over
-    pairs of the vocab table plus a single-row argmax collect —
-    num_merges bounded driver round-trips, never a corpus rescan (the
-    corpus is read once to build the word-frequency table).
-
-    Measured cost model (BPE_SCALE.json, r7, local[32]): the loop is
-    O(num_merges) SEQUENTIAL driver round-trips — ~1-2 Spark jobs and
-    0.22-0.36 s per merge round on a 20k-word vocabulary (the lazy
-    localCheckpoint materializes inside the argmax action), i.e. a
-    production 32k-merge vocabulary is ~3 h of driver-loop scheduling
-    regardless of cluster size. Exact BPE is inherently sequential in
-    merge order; to go faster, learn on a frequency-capped vocabulary
-    sample or batch k non-overlapping merges per round (both change
-    the learned table and are therefore policy, not defaults)."""
-    words = (
-        df.select(F.explode(_tokens(F.col(text_col))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wc"))
-    )
-    state = words.select(
-        "word",
-        "wc",
-        F.concat_ws(
-            " ", F.filter(F.split(F.col("word"), ""), lambda c: F.length(c) > 0)
-        ).alias("s"),
-    ).localCheckpoint(eager=False)
-    spark = df.sparkSession
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, num_merges + 1):
-        syms = F.split(F.col("s"), " ")
-        pairs = state.select(
-            "wc",
-            F.explode(
-                F.zip_with(
-                    syms,
-                    F.slice(syms, 2, _REST),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                )
-            ).alias("pair"),
-        ).filter(F.col("pair").contains(" "))
-        best = (
-            pairs.groupBy("pair")
-            .agg(F.sum("wc").cast("long").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("pair").asc())
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        left, right = best[0]["pair"].split(" ")
-        merges.append((rank, left, right, best[0]["cnt"]))
-        l_lit, r_lit = F.lit(left), F.lit(right)
-        merged = F.aggregate(
-            F.slice(syms, 2, _REST),
-            F.element_at(syms, 1),
-            lambda acc, x: F.when(
-                (x == r_lit)
-                & ((acc == l_lit) | acc.endswith(F.concat(F.lit(" "), l_lit))),
-                F.concat(acc, x),
-            ).otherwise(F.concat(acc, F.lit(" "), x)),
-        )
-        state = state.select(
-            "word", "wc", F.coalesce(merged, F.col("s")).alias("s")
-        ).localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, "rank long, left_sym string, right_sym string, pair_count long"
-    )
-
-
-def bpe_learn_batched(
-    df: DataFrame,
-    num_merges: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_batch: int = 64,
-    stats_out: dict | None = None,
-) -> DataFrame:
-    """EXACTLY bpe_learn's merge table, learned with up to max_batch
-    merges applied per driver round instead of one — the scale path for
-    production-size vocabularies (closes VERDICT r7 missing #5: the
-    sequential loop extrapolates to ~3.2 h at 32k merges; batching cuts
-    driver round-trips by the realized batch width).
-
-    Provably bit-identical to the sequential learner — per round, the
-    accepted batch is a maximal PREFIX of the (count DESC, pair ASC)
-    sorted pair list such that three guards hold, each of which closes
-    a real divergence mode:
-
-    1. Pairwise symbol-disjoint, and a STOP at the first violation (not
-       skip-and-continue): applying a merge only changes counts of
-       pairs sharing one of its symbols, so every accepted pair's count
-       is invariant under the earlier accepted merges, and every
-       unaccepted pair sorts at/below the boundary.
-    2. STRICT count drop at the boundary (count(last accepted) >
-       count(first unaccepted)): new pairs created by an accepted merge
-       (x, ab) inherit at most the old count of a sharer pair (x, a),
-       which sorts past the boundary — strictness keeps any such
-       newcomer strictly below every accepted count, so it can never
-       win an intermediate argmax (not even by lexicographic tie).
-    3. No accepted pair's CONCATENATION is a live symbol (appears as a
-       side of any current pair): if "ab" already exists as a symbol,
-       merging (a, b) creates new "ab" tokens that grow counts of
-       existing (x, "ab") pairs mid-round and would be consumed by a
-       later same-round merge in the sequential order — either way the
-       batch diverges, so such a pick truncates the prefix.
-
-    The batch always keeps >= 1 pair (a 1-batch round IS the sequential
-    step), so degradation under adversarial tie/hazard structure is to
-    bpe_learn's exact behavior, never to a different table. Reported
-    pair_count equals the sequential learner's (guard 1: counts of
-    accepted pairs are unchanged at their sub-round). Application is
-    one pass per round: a left-to-right fold carrying (emitted, pending)
-    state with a merge-map lookup — greedy self-overlap semantics match
-    the single-pair fold, and guard 3 guarantees a just-merged token
-    can never chain into another same-round merge."""
-    words = (
-        df.select(F.explode(_tokens(F.col(text_col))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wc"))
-    )
-    state = words.select(
-        "word",
-        "wc",
-        F.concat_ws(
-            " ", F.filter(F.split(F.col("word"), ""), lambda c: F.length(c) > 0)
-        ).alias("s"),
-    ).localCheckpoint(eager=False)
-    spark = df.sparkSession
-    merges: list[tuple[int, str, str, int]] = []
-    while len(merges) < num_merges:
-        syms = F.split(F.col("s"), " ")
-        pairs = (
-            state.select(
-                "wc",
-                F.explode(
-                    F.zip_with(
-                        syms,
-                        F.slice(syms, 2, _REST),
-                        lambda a, b: F.concat_ws(" ", a, b),
-                    )
-                ).alias("pair"),
-            )
-            .filter(F.col("pair").contains(" "))
-            .groupBy("pair")
-            .agg(F.sum("wc").cast("long").alias("cnt"))
-        )
-        top = pairs.orderBy(
-            F.col("cnt").desc(), F.col("pair").asc()
-        ).limit(max_batch + 1).collect()
-        if not top:
-            break
-        # guard 1: maximal symbol-disjoint prefix (stop, don't skip)
-        used: set[str] = set()
-        accept: list[tuple[str, str, int]] = []
-        for row in top[:max_batch]:
-            left, right = row["pair"].split(" ")
-            if left in used or right in used:
-                break
-            accept.append((left, right, row["cnt"]))
-            used.update((left, right))
-        # guard 3: no accepted concat may be a live symbol anywhere
-        if len(accept) > 1:
-            concats = [l + r for l, r, _ in accept]
-            live = {
-                r["s"]
-                for r in pairs.select(
-                    F.explode(F.split("pair", " ")).alias("s")
-                )
-                .filter(F.col("s").isin(concats))
-                .distinct()
-                .collect()
-            }
-            if live:
-                first_bad = min(
-                    i for i, (l, r, _) in enumerate(accept) if l + r in live
-                )
-                accept = accept[: max(1, first_bad)]
-        # budget cap, then guard 2: strict count drop at the boundary
-        accept = accept[: num_merges - len(merges)]
-        while (
-            len(accept) > 1
-            and len(accept) < len(top)
-            and accept[-1][2] <= top[len(accept)]["cnt"]
-        ):
-            accept.pop()
-        if stats_out is not None:
-            stats_out.setdefault("widths", []).append(len(accept))
-        for left, right, cnt in accept:
-            merges.append((len(merges) + 1, left, right, cnt))
-        merged = _merge_batch_fold(syms, accept)
-        state = state.select(
-            "word", "wc", merged.alias("s")
-        ).localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, "rank long, left_sym string, right_sym string, pair_count long"
-    )
-
-
 def _merge_batch_fold(syms: Column, accept: list[tuple[str, str, int]]) -> Column:
     """One-pass left-to-right application of a merge BATCH: fold with
     (out, pend) state and a merge-map lookup — at each symbol x, if
     '(pend, x)' is a batch key, pend extends to the merged token,
     otherwise pend flushes to out. Greedy self-overlap matches the
     single-pair fold; a just-merged pend may itself chain into another
-    batch key (the dominance-batched learner permits this and its
-    oracle replays the identical semantics; the provably-exact batched
-    learner forbids the situation via its live-concat guard, so the
-    branch never fires there)."""
+    batch key (bpe_learn_greedy, the only caller, permits this and its
+    oracle replays the identical semantics)."""
     mp = F.create_map(
         *[
             F.lit(x)
@@ -1423,7 +1208,6 @@ def bpe_learn_greedy(
     df: DataFrame,
     num_merges: int = 10,
     text_col: str = "text",
-    id_col: str = "doc_id",
     max_batch: int = 256,
     stats_out: dict | None = None,
     incremental: bool | str = "auto",

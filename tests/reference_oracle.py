@@ -1,6 +1,6 @@
-"""Test-only behavioral oracle for the reference's flagship analysis
-("who talks after whom"), used purely for differential testing of the
-Spark pipeline (SURVEY.md §5.2 item 4).
+"""Test-only behavioral oracles, used purely for differential testing:
+the reference's flagship analysis ("who talks after whom", SURVEY.md
+§5.2 item 4) and, at the bottom, exact sequential BPE learning.
 
 Semantics observed from /root/reference/backend/main.py:255-342,
 re-expressed as a staged pipeline of tiny helpers (structure gate →
@@ -99,3 +99,37 @@ def analyze_network(
             weights[key] = weights.get(key, 0) + 1
         prev = sender
     return sorted(nodes), weights
+
+
+def bpe_merge_table(
+    word_counts: dict[str, int], k: int
+) -> list[tuple[int, str, str, int]]:
+    r"""[(rank, left, right, pair_count)] — exact sequential BPE learning
+    by full recount per merge: weighted adjacent-pair counts over the
+    current segmentations, winner = (count DESC, "left right" ASC),
+    then one left-to-right greedy merge pass per word. The tie-break
+    compares the SPACE-JOINED string, as the engine and the DuckDB
+    oracle do; tuple order differs once a symbol holds a character
+    below 0x20 (("a", "z") < ("a\x01", "b") but "a z" > "a\x01 b")."""
+    segs = {w: list(w) for w in word_counts}
+    merges: list[tuple[int, str, str, int]] = []
+    while len(merges) < k:
+        counts: dict[tuple[str, str], int] = {}
+        for w, syms in segs.items():
+            for p in zip(syms, syms[1:]):
+                counts[p] = counts.get(p, 0) + word_counts[w]
+        if not counts:
+            break
+        (left, right), c = min(
+            counts.items(), key=lambda kv: (-kv[1], f"{kv[0][0]} {kv[0][1]}")
+        )
+        merges.append((len(merges) + 1, left, right, c))
+        for w, syms in segs.items():
+            out = [syms[0]]
+            for x in syms[1:]:
+                if x == right and out[-1] == left:
+                    out[-1] = out[-1] + x
+                else:
+                    out.append(x)
+            segs[w] = out
+    return merges

@@ -360,59 +360,11 @@ def test_bpe_apply_matches_reference(spark, data):
 @settings(**_SETTINGS)
 @given(data=st.data())
 def test_bpe_learn_matches_reference(spark, data):
-    """bpe_learn == the independent Python reference learner on random
-    weighted vocabularies (weighted counts, total-order tie-break)."""
-    from poc_spark.operators.textstats import bpe_learn
-
-    alphabet = "abct"
-    wc = data.draw(
-        st.dictionaries(
-            st.text(alphabet=alphabet, min_size=1, max_size=6),
-            st.integers(min_value=1, max_value=5),
-            min_size=1,
-            max_size=6,
-        )
-    )
-    k = data.draw(st.integers(min_value=1, max_value=4))
-
-    segs = {w: list(w) for w in wc}
-    exp = []
-    for _ in range(k):
-        counts = {}
-        for w, syms in segs.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + wc[w]
-        if not counts:
-            break
-        (l, r), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        exp.append((len(exp) + 1, l, r, c))
-        for w, syms in segs.items():
-            out = [syms[0]]
-            for x in syms[1:]:
-                if x == r and out[-1] == l:
-                    out[-1] = out[-1] + x
-                else:
-                    out.append(x)
-            segs[w] = out
-
-    text = " ".join(w for w, c in wc.items() for _ in range(c))
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = [
-        (r["rank"], r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_learn(df, num_merges=k).orderBy("rank").collect()
-    ]
-    assert got == exp
-
-@settings(**_SETTINGS)
-@given(data=st.data())
-def test_bpe_learn_batched_matches_reference(spark, data):
-    """bpe_learn_batched == the independent Python SEQUENTIAL reference
-    on random weighted vocabularies — the tiny 'abct' alphabet is
-    hostile territory for batching (constant ties, shared symbols,
-    live-concat collisions), so the three safety guards are what is
-    actually under test here."""
-    from poc_spark.operators.textstats import bpe_learn_batched
+    """bpe_learn_local == the independent Python reference learner on
+    random weighted vocabularies (weighted counts, total-order
+    tie-break) — the tiny 'abct' alphabet keeps counts tied."""
+    from poc_spark.operators.textstats import bpe_learn_local
+    from tests.reference_oracle import bpe_merge_table
 
     alphabet = "abct"
     wc = data.draw(
@@ -424,38 +376,15 @@ def test_bpe_learn_batched_matches_reference(spark, data):
         )
     )
     k = data.draw(st.integers(min_value=1, max_value=5))
-    mb = data.draw(st.sampled_from([1, 2, 3, 64]))
-
-    segs = {w: list(w) for w in wc}
-    exp = []
-    for _ in range(k):
-        counts = {}
-        for w, syms in segs.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + wc[w]
-        if not counts:
-            break
-        (l, r), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        exp.append((len(exp) + 1, l, r, c))
-        for w, syms in segs.items():
-            out = [syms[0]]
-            for x in syms[1:]:
-                if x == r and out[-1] == l:
-                    out[-1] = out[-1] + x
-                else:
-                    out.append(x)
-            segs[w] = out
 
     text = " ".join(w for w, c in wc.items() for _ in range(c))
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
     got = [
-        (r["rank"], r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_learn_batched(df, num_merges=k, max_batch=mb)
-        .orderBy("rank")
-        .collect()
+        tuple(r)
+        for r in bpe_learn_local(df, num_merges=k).orderBy("rank").collect()
     ]
-    assert got == exp
+    assert got == bpe_merge_table(wc, k)
+
 
 def _ref_bpe_dominance(wc, k, max_batch=256):
     """Independent Python reference for dominance-batched BPE."""

@@ -626,6 +626,42 @@ def test_jpeg_chunked_idct_flush_matches_one_shot(monkeypatch):
         mm._jpeg_encode_blocks([[zig, [3] + [0] * 63]], 16, 8, [8] + [16] * 63)
     )
 
+    # 4:2:0 (two Y block rows per MCU row) on cropped multi-row MCU
+    # grids, with and without restart markers, plus 4:4:4 restart
+    # streams: one-row chunks flush between every MCU row, across
+    # restart intervals
+    def synth420(w, h, seed, restart_interval):
+        mw, mh = (w + 15) // 16, (h + 15) // 16
+        yb = [
+            [(seed + 7 * i) % 61 - 30, (i % 5) - 2] + [0] * 62
+            for i in range(4 * mw * mh)
+        ]
+        cb = [[(seed + 3 * i) % 21 - 10] + [0] * 63 for i in range(mw * mh)]
+        cr = [[(seed + 5 * i) % 17 - 8] + [0] * 63 for i in range(mw * mh)]
+        return mm._jpeg_encode_blocks_420(
+            yb, cb, cr, w, h, [8] + [16] * 63, restart_interval
+        )
+
+    p420 = [
+        synth420(w, h, i, ri)
+        for i, (w, h) in enumerate([(16, 16), (20, 18), (33, 40), (48, 9)])
+        for ri in (0, 1, 3)
+    ]
+    blocks444 = [
+        [[(c * 11 + i * 13) % 90 - 45] + [0] * 63 for i in range(12)]
+        for c in range(3)
+    ]
+    rst444 = [
+        mm._jpeg_encode_blocks(
+            blocks444, 32, 24, [8] + [16] * 63, restart_interval=ri
+        )
+        for ri in (1, 2, 5)
+    ]
+    # RST0 is really emitted (a one-interval image carries no marker)
+    assert sum(b"\xff\xd0" in p for p in p420) == 5
+    assert all(b"\xff\xd0" in p for p in rst444)
+    payloads += p420 + rst444
+
     ref = [mm._decode_jpeg(p) for p in payloads]
     assert all(r is not None for r in ref)
     monkeypatch.setattr(mm, "_IDCT_CHUNK_COEFS", 1)

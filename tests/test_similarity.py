@@ -909,3 +909,34 @@ def test_ivf_index_numpy_assignment_equals_expression(spark, emb):
     }
     assert got2 == want2
     assert got2[0] == 0  # tie between centroids 0 and 1 -> first
+
+
+def test_ivf_index_null_vector_gets_null_centroid(spark, emb):
+    """A NULL embedding (e.g. one row of ivf_append's incoming batch)
+    gets a NULL centroid, as the expression form gave it, instead of
+    failing the task; the good rows sharing its Arrow batch keep the
+    centroids they get without it."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    cents = ivf_centroids(emb, n_centroids=8)
+    good = emb.filter("vec_id < 20").select("vec_id", "embedding")
+    elem = good.schema["embedding"].dataType.elementType
+    schema = StructType(
+        [
+            StructField("vec_id", LongType()),
+            StructField("embedding", ArrayType(elem), True),
+        ]
+    )
+    mixed = good.unionByName(
+        spark.createDataFrame([(-1, None)], schema)
+    ).coalesce(1)
+    got = {
+        r["vec_id"]: r["centroid"]
+        for r in ivf_index(mixed, cents).select("vec_id", "centroid").collect()
+    }
+    want = {
+        r["vec_id"]: r["centroid"]
+        for r in ivf_index(good, cents).select("vec_id", "centroid").collect()
+    }
+    assert len(want) == 20 and None not in want.values()
+    assert got == {**want, -1: None}

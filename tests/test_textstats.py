@@ -14,6 +14,7 @@ from poc_spark.operators.textstats import (
     token_count,
     winnowing_fingerprints,
 )
+from tests.reference_oracle import bpe_merge_table
 
 DOCS = [
     (0, "the quick brown fox is in the barn and it is warm"),
@@ -384,52 +385,27 @@ def test_bigram_logprob_hand_computed(spark):
 
 
 def test_bpe_learn_hand_computed(spark):
-    """Pin the learner against an independent Python reference: weighted
+    """Pin the learner against the independent Python reference: weighted
     pair counts, (count DESC, pair ASC) tie-break, cascaded merges."""
+    from poc_spark.operators.textstats import bpe_learn_local
+
     word_counts = {"the": 5, "then": 2, "than": 3, "banana": 2,
                    "and": 4, "stand": 1, "a": 7, "x": 1}
-
-    def ref_learn(wc, k):
-        segs = {w: list(w) for w in wc}
-        merges = []
-        for _ in range(k):
-            counts = {}
-            for w, syms in segs.items():
-                for i in range(len(syms) - 1):
-                    p = (syms[i], syms[i + 1])
-                    counts[p] = counts.get(p, 0) + wc[w]
-            if not counts:
-                break
-            (l, r), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-            merges.append((l, r, c))
-            for w, syms in segs.items():
-                out = [syms[0]]
-                for x in syms[1:]:
-                    if x == r and out[-1] == l:
-                        out[-1] = out[-1] + x
-                    else:
-                        out.append(x)
-                segs[w] = out
-        return merges
-
-    from poc_spark.operators.textstats import bpe_learn
-
     # corpus reproducing the word frequencies exactly
     text = " ".join(w for w, c in word_counts.items() for _ in range(c))
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
     got = [
-        (r["rank"], r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_learn(df, num_merges=6).orderBy("rank").collect()
+        tuple(r)
+        for r in bpe_learn_local(df, num_merges=6).orderBy("rank").collect()
     ]
-    exp = [(i + 1, l, r, c) for i, (l, r, c) in enumerate(ref_learn(word_counts, 6))]
-    assert got == exp
+    assert got == bpe_merge_table(word_counts, 6)
 
 
 def test_bpe_learn_then_apply_roundtrip(spark):
     """Merges learned from a corpus, applied back to it via
     bpe_segment_vocab, reduce every frequent word to fewer symbols than
     its character split — the learn and apply halves compose."""
-    from poc_spark.operators.textstats import bpe_learn, bpe_segment_vocab
+    from poc_spark.operators.textstats import bpe_learn_local, bpe_segment_vocab
 
     df = spark.createDataFrame(
         [(1, "the the the thing then there"), (2, "the thin thing")],
@@ -437,7 +413,7 @@ def test_bpe_learn_then_apply_roundtrip(spark):
     )
     merges = [
         (r["left_sym"], r["right_sym"])
-        for r in bpe_learn(df, num_merges=4).orderBy("rank").collect()
+        for r in bpe_learn_local(df, num_merges=4).orderBy("rank").collect()
     ]
     assert len(merges) == 4
     vocab = spark.createDataFrame([("the",), ("thing",)], "word string")
@@ -447,61 +423,6 @@ def test_bpe_learn_then_apply_roundtrip(spark):
     assert merges[0] == ("t", "h")
     assert len(seg["the"].split(" ")) < 3
     assert len(seg["thing"].split(" ")) < 5
-
-
-def test_bpe_learn_batched_equals_sequential_on_corpus(spark, sf_dir):
-    """The batched learner's whole point: its merge table is
-    bit-identical to bpe_learn's on a real corpus, while taking fewer
-    driver rounds (realized widths > 1)."""
-    from poc_spark.operators.textstats import bpe_learn, bpe_learn_batched
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    seq = [tuple(r) for r in bpe_learn(docs, num_merges=25).collect()]
-    stats: dict = {}
-    bat = [
-        tuple(r)
-        for r in bpe_learn_batched(
-            docs, num_merges=25, stats_out=stats
-        ).collect()
-    ]
-    assert bat == seq
-    widths = stats["widths"]
-    assert sum(widths) == len(seq)
-    assert len(widths) < len(seq), "batching never exceeded width 1?"
-
-
-def test_bpe_learn_batched_tie_and_hazard_guards(spark):
-    """Adversarial structures that WOULD diverge without the guards:
-    (a) count ties at the batch boundary (guard 2), (b) a pair whose
-    concat is a live symbol — merging (a,b) when 'ab' already exists
-    as a symbol grows (x,ab) counts mid-round (guard 3), (c) shared
-    symbols between top pairs (guard 1). All must fall back toward
-    width 1 and stay identical to sequential."""
-    from poc_spark.operators.textstats import bpe_learn, bpe_learn_batched
-
-    corpora = [
-        # ties everywhere: every pair count equal
-        "ab cd ef gh ab cd ef gh",
-        # live-concat hazard: 'ab' exists as a word (single symbol after
-        # round 1) while (a,b) adjacencies remain in other words
-        "ab ab ab zab zab azb azb aabb aabb aabb",
-        # chained shared symbols: (a,b) and (b,c) both frequent
-        "abc abc abc bc bc ab ab a b c",
-        # self-overlapping runs
-        "aaaa aaaa aa aa a",
-    ]
-    for text in corpora:
-        df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        for k in (3, 7):
-            seq = [tuple(r) for r in bpe_learn(df, num_merges=k).collect()]
-            for mb in (2, 64):
-                bat = [
-                    tuple(r)
-                    for r in bpe_learn_batched(
-                        df, num_merges=k, max_batch=mb
-                    ).collect()
-                ]
-                assert bat == seq, (text, k, mb)
 
 
 def test_bpe_greedy_incremental_equals_recount(spark, sf_dir):
@@ -572,34 +493,48 @@ def test_bpe_greedy_auto_dispatch_reads_conf(spark):
     assert forced == default
 
 
-def test_bpe_learn_local_equals_distributed_sequential(spark, sf_dir):
-    """The driver-local trainer (distributed word count + in-memory
-    incremental-heap merge loop — the production tokenizer-trainer
-    architecture) must be BIT-IDENTICAL to the distributed sequential
-    learner, pair counts included, on the corpus and on the
-    adversarial tie/overlap structures."""
-    from poc_spark.operators.textstats import bpe_learn, bpe_learn_local
+def test_bpe_learn_local_matches_reference(spark, sf_dir):
+    """The exact learner (distributed word count + in-memory
+    incremental-heap merge loop) must learn the independent Python
+    reference's table, pair counts included, on the corpus and on
+    adversarial tie/overlap structures — including a tie that the
+    space-joined pair string and tuple order break differently (a
+    control character below the space sorts first in the string)."""
+    import re
+    from collections import Counter
+
+    from poc_spark.operators.textstats import bpe_learn_local
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    seq = [tuple(r) for r in bpe_learn(docs, num_merges=30).collect()]
+    # the engine's tokenizer: lower(), split on Java's ASCII \s+
+    word_counts = Counter(
+        w
+        for r in docs.select("text").collect()
+        if r["text"] is not None
+        for w in re.split(r"[ \t\n\x0b\f\r]+", r["text"].lower())
+        if w
+    )
     loc = [tuple(r) for r in bpe_learn_local(docs, num_merges=30).collect()]
-    assert loc == seq and len(seq) == 30
+    assert loc == bpe_merge_table(word_counts, 30) and len(loc) == 30
 
     corpora = [
         "ab cd ef gh ab cd ef gh",
         "ab ab ab zab zab azb azb aabb aabb aabb",
         "abc abc abc bc bc ab ab a b c",
         "aaaa aaaa aa aa a",
+        # string-key tie-break: ("a", "z") sorts before ("a\x01", "b")
+        # as tuples, but "a\x01 b" sorts before "a z" as strings
+        "a\x01 a\x01 a\x01 a\x01b a\x01b a\x01b az az az",
     ]
     for text in corpora:
         df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        word_counts = Counter(text.split(" "))
         for k in (3, 7, 12):
-            seq = [tuple(r) for r in bpe_learn(df, num_merges=k).collect()]
             loc = [
                 tuple(r)
                 for r in bpe_learn_local(df, num_merges=k).collect()
             ]
-            assert loc == seq, (text, k)
+            assert loc == bpe_merge_table(word_counts, k), (text, k)
 
 
 def test_bpe_learn_local_vocab_budget_guard(spark):

@@ -1,12 +1,19 @@
-"""BPE training-loop cost receipt (VERDICT r6 #6, batched per r7 #4):
-run bpe_learn AND bpe_learn_batched at production-shaped merge counts
-on the sf0.1 vocabulary and record the measured driver-loop models —
-wall clock, Spark jobs per merge, realized batch widths, the proof
-obligation (batched table == sequential table, bit-for-bit), and the
-extrapolation to a 32k-merge production vocabulary.
+"""BPE training-loop cost receipts, appended to BPE_SCALE.json at the
+repo root (the file's top-level `runs` are the historical receipt of
+the sequential and batched learners this repo no longer has).
 
-Usage: python tools/bpe_scale_probe.py [sf_dir] [merge_counts...]
-Writes BPE_SCALE.json at the repo root.
+Usage: python tools/bpe_scale_probe.py MODE N SF_DIR
+  --greedy-only N SF_DIR
+      one deep bpe_learn_greedy run on the widened corpus
+      (`greedy_deep_run`)
+  --incremental-only N SF_DIR
+      greedy recount vs incremental on the 160k-word corpus, tables
+      asserted identical (`incremental_bigvocab`)
+  --local-32k N SF_DIR
+      N merges of the exact learner bpe_learn_local on the 160k-word
+      corpus (`local_32k_run`)
+SF_DIR is the generated table directory; the committed receipts were
+taken at scale factor 0.1.
 """
 
 from __future__ import annotations
@@ -18,15 +25,53 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+_RECEIPT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "BPE_SCALE.json",
+)
+
+
+def _append_receipt(key: str, rec: dict) -> None:
+    """Set BPE_SCALE.json's `key` section to `rec`, keeping the rest."""
+    with open(_RECEIPT) as fh:
+        out = json.load(fh)
+    out[key] = rec
+    with open(_RECEIPT, "w") as fh:
+        json.dump(out, fh, indent=1)
+    print(json.dumps(rec))
+    print(f"updated {_RECEIPT}")
+
+
+def _bigvocab(docs):
+    """32 md5-hex words per document: ~160k distinct words at sf0.1."""
+    from pyspark.sql import functions as F
+
+    return (
+        docs.select(
+            "doc_id",
+            F.explode(F.sequence(F.lit(0), F.lit(31))).alias("i"),
+        )
+        .select(
+            "doc_id",
+            F.md5(
+                F.concat(
+                    F.col("doc_id").cast("string"),
+                    F.lit(":"),
+                    F.col("i").cast("string"),
+                )
+            ).alias("w"),
+        )
+        .groupBy("doc_id")
+        .agg(F.concat_ws(" ", F.collect_list("w")).alias("text"))
+    )
+
 
 def _greedy_only(sf_dir: str, n: int) -> int:
     """--greedy-only N: one deep dominance-batched run on the widened
-    corpus, appended to the existing BPE_SCALE.json as
+    corpus (four 8-hex-char md5 words per document), recorded as
     `greedy_deep_run` — shows how batch width GROWS with the symbol
     inventory (the dominance set widens as merges diversify symbols),
     so the 32k extrapolation from a shallow run is conservative."""
-    import time
-
     from pyspark.sql import functions as F
 
     from poc_spark.operators.textstats import bpe_learn_greedy
@@ -54,46 +99,37 @@ def _greedy_only(sf_dir: str, n: int) -> int:
     wall = time.perf_counter() - t0
     widths = stats.get("widths", [])
     q = len(widths) // 4 or 1
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BPE_SCALE.json",
+    _append_receipt(
+        "greedy_deep_run",
+        {
+            "corpus": "widened",
+            "num_merges": n,
+            "merges_learned": learned,
+            "wall_sec": round(wall, 2),
+            "sec_per_merge": round(wall / max(learned, 1), 4),
+            "rounds": len(widths),
+            "mean_batch_width": round(sum(widths) / max(len(widths), 1), 1),
+            "mean_width_by_quartile": [
+                round(sum(widths[i * q : (i + 1) * q])
+                      / max(len(widths[i * q : (i + 1) * q]), 1), 1)
+                for i in range(4)
+            ],
+            "max_batch_width": max(widths, default=0),
+            "extrapolated_32k_merges_hours": round(
+                wall / max(learned, 1) * 32000 / 3600, 2
+            ),
+        },
     )
-    with open(path) as fh:
-        out = json.load(fh)
-    out["greedy_deep_run"] = {
-        "corpus": "widened",
-        "num_merges": n,
-        "merges_learned": learned,
-        "wall_sec": round(wall, 2),
-        "sec_per_merge": round(wall / max(learned, 1), 4),
-        "rounds": len(widths),
-        "mean_batch_width": round(sum(widths) / max(len(widths), 1), 1),
-        "mean_width_by_quartile": [
-            round(sum(widths[i * q : (i + 1) * q])
-                  / max(len(widths[i * q : (i + 1) * q]), 1), 1)
-            for i in range(4)
-        ],
-        "max_batch_width": max(widths, default=0),
-        "extrapolated_32k_merges_hours": round(
-            wall / max(learned, 1) * 32000 / 3600, 2
-        ),
-    }
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(json.dumps(out["greedy_deep_run"]))
-    print(f"updated {path}")
     spark.stop()
     return 0
 
 
 def _incremental_only(sf_dir: str, n: int) -> int:
     """--incremental-only N: recount vs incremental greedy on a
-    LARGE-VOCABULARY corpus (160k distinct words — 32 md5 words per
-    document; the regime the incremental fork exists for: per-round
-    cost must scale with AFFECTED words, not the vocabulary), appended
-    as `incremental_bigvocab`. Asserts bit-identical tables."""
-    import time
-
+    LARGE-VOCABULARY corpus (_bigvocab; the regime the incremental fork
+    exists for: per-round cost must scale with AFFECTED words, not the
+    vocabulary), recorded as `incremental_bigvocab`. Asserts
+    bit-identical tables."""
     from pyspark.sql import functions as F
 
     from poc_spark.operators.textstats import bpe_learn_greedy
@@ -101,25 +137,7 @@ def _incremental_only(sf_dir: str, n: int) -> int:
     from poc_spark.sources.catalog import load_table
 
     spark = get_spark("bpe-incremental-probe")
-    docs = load_table(spark, sf_dir, "documents")
-    big = (
-        docs.select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(31))).alias("i"),
-        )
-        .select(
-            "doc_id",
-            F.md5(
-                F.concat(
-                    F.col("doc_id").cast("string"),
-                    F.lit(":"),
-                    F.col("i").cast("string"),
-                )
-            ).alias("w"),
-        )
-        .groupBy("doc_id")
-        .agg(F.concat_ws(" ", F.collect_list("w")).alias("text"))
-    )
+    big = _bigvocab(load_table(spark, sf_dir, "documents"))
     vocab = (
         big.select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
         .distinct()
@@ -134,43 +152,35 @@ def _incremental_only(sf_dir: str, n: int) -> int:
         big, num_merges=n, incremental=True, stats_out=st
     ).collect()
     t2 = time.perf_counter()
-    identical = [tuple(r) for r in rec] == [tuple(r) for r in inc]
-    if not identical:
+    if [tuple(r) for r in rec] != [tuple(r) for r in inc]:
         raise AssertionError("incremental diverged from recount")
     widths = st.get("widths", [])
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BPE_SCALE.json",
+    _append_receipt(
+        "incremental_bigvocab",
+        {
+            "corpus": "bigvocab (32 md5-hex words/doc)",
+            "vocab_rows": vocab,
+            "num_merges": n,
+            "tables_identical": True,
+            "recount_wall_sec": round(t1 - t0, 2),
+            "incremental_wall_sec": round(t2 - t1, 2),
+            "speedup_incremental": round((t1 - t0) / max(t2 - t1, 1e-9), 2),
+            "rounds": len(widths),
+            "mean_batch_width": round(sum(widths) / max(len(widths), 1), 1),
+            "note": (
+                "incremental=auto dispatches on vocab >= "
+                "spark.poc.bpe.incrementalMinVocab (default 100k): at the "
+                "tiny test vocabularies the delta machinery costs more "
+                "than the explode it saves (measured), at production "
+                "vocabularies per-round work follows the AFFECTED-word "
+                "set, which shrinks as merges get rarer. Selection is the "
+                "distributed min_by-per-symbol formulation on both paths "
+                "(no single-partition window — the prior global "
+                "row_number sort was a one-task bottleneck at millions "
+                "of distinct pairs)."
+            ),
+        },
     )
-    with open(path) as fh:
-        out = json.load(fh)
-    out["incremental_bigvocab"] = {
-        "corpus": "bigvocab (32 md5-hex words/doc)",
-        "vocab_rows": vocab,
-        "num_merges": n,
-        "tables_identical": True,
-        "recount_wall_sec": round(t1 - t0, 2),
-        "incremental_wall_sec": round(t2 - t1, 2),
-        "speedup_incremental": round((t1 - t0) / max(t2 - t1, 1e-9), 2),
-        "rounds": len(widths),
-        "mean_batch_width": round(sum(widths) / max(len(widths), 1), 1),
-        "note": (
-            "incremental=auto dispatches on vocab >= "
-            "spark.poc.bpe.incrementalMinVocab (default 100k): at the "
-            "tiny test vocabularies the delta machinery costs more "
-            "than the explode it saves (measured), at production "
-            "vocabularies per-round work follows the AFFECTED-word "
-            "set, which shrinks as merges get rarer. Selection is the "
-            "distributed min_by-per-symbol formulation on both paths "
-            "(no single-partition window — the prior global "
-            "row_number sort was a one-task bottleneck at millions "
-            "of distinct pairs)."
-        ),
-    }
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(json.dumps(out["incremental_bigvocab"]))
-    print(f"updated {path}")
     spark.stop()
     return 0
 
@@ -178,273 +188,57 @@ def _incremental_only(sf_dir: str, n: int) -> int:
 def _local_32k(sf_dir: str, n: int) -> int:
     """--local-32k N: a DIRECT production-size measurement (no
     extrapolation): bpe_learn_local — distributed word count +
-    driver-local incremental-heap merge loop, bit-identical to
-    bpe_learn (oracled as text_bpe_learn_local) — runs N real merges
-    on the 160k-word big-vocab corpus. Appended as `local_32k_run`."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from poc_spark.operators.textstats import bpe_learn, bpe_learn_local
+    driver-local incremental-heap merge loop, the exact learner
+    (oracled as text_bpe_learn) — runs N real merges on the 160k-word
+    corpus (_bigvocab). Recorded as `local_32k_run`."""
+    from poc_spark.operators.textstats import bpe_learn_local
     from poc_spark.session import get_spark
     from poc_spark.sources.catalog import load_table
 
     spark = get_spark("bpe-local-32k")
-    docs = load_table(spark, sf_dir, "documents")
-    big = (
-        docs.select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(31))).alias("i"),
-        )
-        .select(
-            "doc_id",
-            F.md5(
-                F.concat(
-                    F.col("doc_id").cast("string"),
-                    F.lit(":"),
-                    F.col("i").cast("string"),
-                )
-            ).alias("w"),
-        )
-        .groupBy("doc_id")
-        .agg(F.concat_ws(" ", F.collect_list("w")).alias("text"))
-    )
+    big = _bigvocab(load_table(spark, sf_dir, "documents"))
     big.count()  # warm
-    # sample equality spot-check vs the distributed sequential learner
-    # on this corpus (the full pin is the text_bpe_learn_local oracle
-    # + tests; here a 50-merge prefix re-asserts it in the receipt run)
-    pre_seq = [tuple(r) for r in bpe_learn(big, num_merges=50).collect()]
-    pre_loc = [
-        tuple(r) for r in bpe_learn_local(big, num_merges=50).collect()
-    ]
-    if pre_seq != pre_loc:
-        raise AssertionError("local trainer diverged from sequential")
     t0 = time.perf_counter()
     rows = bpe_learn_local(big, num_merges=n).collect()
     wall = time.perf_counter() - t0
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BPE_SCALE.json",
+    _append_receipt(
+        "local_32k_run",
+        {
+            "learner": "bpe_learn_local (distributed word count + "
+            "driver-local incremental-heap merge loop; oracled as "
+            "text_bpe_learn)",
+            "corpus": "bigvocab (32 md5-hex words/doc, 160k distinct words)",
+            "num_merges": n,
+            "merges_learned": len(rows),
+            "wall_sec": round(wall, 2),
+            "wall_hours": round(wall / 3600, 3),
+            "sec_per_merge": round(wall / max(len(rows), 1), 5),
+            "note": (
+                "A DIRECT measurement, not an extrapolation: the "
+                "inherently merge-order-sequential loop runs on the "
+                "collected Zipf-bounded vocabulary (the architecture "
+                "every production tokenizer trainer uses) while the "
+                "corpus-sized tokenize+count stays distributed. Above "
+                "the driver budget (max_local_vocab guard) the choice "
+                "is a larger budget or bpe_learn_greedy, a different "
+                "table."
+            ),
+        },
     )
-    with open(path) as fh:
-        out = json.load(fh)
-    out["local_32k_run"] = {
-        "learner": "bpe_learn_local (distributed word count + "
-        "driver-local incremental-heap merge loop; bit-identical to "
-        "bpe_learn, oracled as text_bpe_learn_local)",
-        "corpus": "bigvocab (32 md5-hex words/doc, 160k distinct words)",
-        "num_merges": n,
-        "merges_learned": len(rows),
-        "wall_sec": round(wall, 2),
-        "wall_hours": round(wall / 3600, 3),
-        "sec_per_merge": round(wall / max(len(rows), 1), 5),
-        "prefix_equality_vs_sequential": True,
-        "note": (
-            "A DIRECT measurement, not an extrapolation: the r7/r8 "
-            "bar ('32k merges well under an hour') is met by moving "
-            "the inherently merge-order-sequential loop onto the "
-            "collected Zipf-bounded vocabulary (the architecture "
-            "every production tokenizer trainer uses) while the "
-            "corpus-sized tokenize+count stays distributed. The "
-            "distributed learners remain for vocabularies above the "
-            "driver budget (max_local_vocab guard)."
-        ),
-    }
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(json.dumps(out["local_32k_run"]))
     spark.stop()
     return 0
 
 
 def main() -> int:
-    if len(sys.argv) > 1 and sys.argv[1] == "--local-32k":
-        return _local_32k(
-            sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1",
-            int(sys.argv[2]),
-        )
-    if len(sys.argv) > 1 and sys.argv[1] == "--greedy-only":
-        return _greedy_only(
-            sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1",
-            int(sys.argv[2]),
-        )
-    if len(sys.argv) > 1 and sys.argv[1] == "--incremental-only":
-        return _incremental_only(
-            sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1",
-            int(sys.argv[2]),
-        )
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    counts = [int(c) for c in sys.argv[2:]] or [100, 1000]
-
-    from pyspark.sql import functions as F
-
-    from poc_spark.operators.textstats import (
-        _tokens,
-        bpe_learn,
-        bpe_learn_batched,
-        bpe_learn_greedy,
-    )
-    from poc_spark.session import get_spark
-    from poc_spark.sources.catalog import load_table
-
-    spark = get_spark("bpe-scale-probe")
-    sc = spark.sparkContext
-    docs = load_table(spark, sf_dir, "documents")
-    vocab_rows = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
-        .distinct()
-        .count()
-    )
-    # The synthetic documents corpus has a TINY vocabulary (31 distinct
-    # words at sf0.1), so exact BPE fully converges after <100 merges —
-    # itself a recorded fact below. For a production-SHAPED merge count
-    # we also learn over a deterministically widened corpus: each doc
-    # contributes four 8-hex-char words (16-symbol alphabet, ~n_docs
-    # distinct words), which supports thousands of merges.
-    wide = docs.select(
-        F.col("doc_id"),
-        F.concat_ws(
-            " ",
-            F.substring(F.md5("text"), 1, 8),
-            F.substring(F.md5("text"), 9, 8),
-            F.substring(F.md5("text"), 17, 8),
-            F.substring(F.md5("text"), 25, 8),
-        ).alias("text"),
-    )
-    wide_vocab = (
-        wide.select(F.explode(_tokens(F.col("text"))).alias("word"))
-        .distinct()
-        .count()
-    )
-    # warm the scan so the first probe doesn't pay first-touch costs
-    docs.count()
-
-    results = []
-    batched_per_merge = None
-    for n in counts:
-        corpus, tag = (docs, "documents") if n <= 100 else (wide, "widened")
-        sc.setJobGroup(f"bpe_{n}", f"bpe_learn num_merges={n}")
-        t0 = time.perf_counter()
-        seq_rows = bpe_learn(corpus, num_merges=n).collect()
-        wall = time.perf_counter() - t0
-        jobs = len(sc.statusTracker().getJobIdsForGroup(f"bpe_{n}"))
-        learned = len(seq_rows)
-        sc.setJobGroup(f"bpeb_{n}", f"bpe_learn_batched num_merges={n}")
-        stats: dict = {}
-        t0 = time.perf_counter()
-        bat_rows = bpe_learn_batched(
-            corpus, num_merges=n, stats_out=stats
-        ).collect()
-        wall_b = time.perf_counter() - t0
-        jobs_b = len(sc.statusTracker().getJobIdsForGroup(f"bpeb_{n}"))
-        sc.setJobGroup("idle", "idle")
-        widths = stats.get("widths", [])
-        identical = [tuple(r) for r in seq_rows] == [tuple(r) for r in bat_rows]
-        if not identical:
-            raise AssertionError(
-                f"batched table diverged from sequential at n={n}"
-            )
-        sc.setJobGroup(f"bpeg_{n}", f"bpe_learn_greedy num_merges={n}")
-        gstats: dict = {}
-        t0 = time.perf_counter()
-        grd_rows = bpe_learn_greedy(
-            corpus, num_merges=n, stats_out=gstats
-        ).collect()
-        wall_g = time.perf_counter() - t0
-        jobs_g = len(sc.statusTracker().getJobIdsForGroup(f"bpeg_{n}"))
-        sc.setJobGroup("idle", "idle")
-        gw = gstats.get("widths", [])
-        results.append(
-            {
-                "corpus": tag,
-                "num_merges": n,
-                "merges_learned": learned,
-                "sequential": {
-                    "wall_sec": round(wall, 2),
-                    "sec_per_merge": round(wall / max(learned, 1), 4),
-                    "spark_jobs": jobs,
-                },
-                "batched": {
-                    "wall_sec": round(wall_b, 2),
-                    "sec_per_merge": round(wall_b / max(learned, 1), 4),
-                    "spark_jobs": jobs_b,
-                    "rounds": len(widths),
-                    "mean_batch_width": round(
-                        sum(widths) / max(len(widths), 1), 1
-                    ),
-                    "max_batch_width": max(widths, default=0),
-                },
-                "greedy": {
-                    "wall_sec": round(wall_g, 2),
-                    "sec_per_merge": round(wall_g / max(len(grd_rows), 1), 4),
-                    "spark_jobs": jobs_g,
-                    "merges_learned": len(grd_rows),
-                    "rounds": len(gw),
-                    "mean_batch_width": round(sum(gw) / max(len(gw), 1), 1),
-                    "max_batch_width": max(gw, default=0),
-                },
-                "tables_identical": identical,
-                "speedup_batched": round(wall / max(wall_b, 1e-9), 2),
-                "speedup_greedy": round(wall / max(wall_g, 1e-9), 2),
-            }
-        )
-        print(json.dumps(results[-1]))
-        if tag == "widened":
-            batched_per_merge = wall_b / max(learned, 1)
-            greedy_per_merge = wall_g / max(len(grd_rows), 1)
-
-    seq_per_merge = results[-1]["sequential"]["sec_per_merge"]
-    if batched_per_merge is None:
-        batched_per_merge = results[-1]["batched"]["sec_per_merge"]
-        greedy_per_merge = results[-1]["greedy"]["sec_per_merge"]
-    out = {
-        "sf_dir": sf_dir,
-        "vocab_rows_documents": vocab_rows,
-        "vocab_rows_widened": wide_vocab,
-        "runs": results,
-        "model": (
-            "bpe_learn is a sequential driver loop (one 1-row argmax "
-            "collect per merge). bpe_learn_batched accepts a provably-"
-            "safe symbol-disjoint prefix of the sorted pair list per "
-            "round (strict boundary drop + live-concat guard) — the "
-            "learned table is asserted bit-identical here. "
-            "bpe_learn_greedy accepts the full dominance set per round "
-            "(every pair not sharing a symbol with a higher-ranked "
-            "pair, capped at 256) — a different deterministic algorithm "
-            "with its own cross-engine oracle (text_bpe_learn_greedy). "
-            "Cost = rounds * sec_per_round with vocab-sized (not "
-            "corpus-sized) executor work per round."
-        ),
-        "extrapolated_32k_merges_hours_sequential": round(
-            seq_per_merge * 32000 / 3600, 2
-        ),
-        "extrapolated_32k_merges_hours_batched": round(
-            batched_per_merge * 32000 / 3600, 2
-        ),
-        "extrapolated_32k_merges_hours_greedy": round(
-            greedy_per_merge * 32000 / 3600, 2
-        ),
-        "note": (
-            "Batch width is data-dependent. The exact-batched learner's "
-            "safe prefix collapses toward 1 under ties and symbol "
-            "collisions (this 16-symbol widened corpus is the worst "
-            "case), so its win is corpus-dependent; the dominance-greedy "
-            "learner (its own oracled algorithm, text_bpe_learn_greedy) "
-            "skips conflicts instead of stopping and is the production "
-            "policy. 32k extrapolations use the measured widened-corpus "
-            "sec_per_merge of each learner. Greedy width also GROWS with "
-            "the symbol inventory, so its extrapolation is conservative."
-        ),
+    modes = {
+        "--greedy-only": _greedy_only,
+        "--incremental-only": _incremental_only,
+        "--local-32k": _local_32k,
     }
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BPE_SCALE.json",
-    )
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(f"wrote {path}")
-    spark.stop()
-    return 0
+    if len(sys.argv) != 4 or sys.argv[1] not in modes:
+        print(__doc__)
+        return 2
+    return modes[sys.argv[1]](sys.argv[3], int(sys.argv[2]))
 
 
 if __name__ == "__main__":
