@@ -21,24 +21,29 @@ Reference: GET /analyze/network/{filename}
   - OP-AGG-NODES: distinct senders of surviving messages — includes
     senders that never formed an edge (backend/main.py:313).
 
-Single pass (interaction_pairs): the request is ONE aggregate over every
-surviving message keyed by (least(prev, cur), greatest(prev, cur)).
-The stream head and every self-transition land on an (s, s) row, so
-the nodes are the endpoints of all rows and the links are the rows
-with source != target. The serving edge collects that aggregate once
-and splits it on the driver — one lineage, one scan of the export.
+One chain: every graph operator here is a projection of ONE lag chain
+(_chain: (prev, cur) per surviving message, the sender's lag in the
+message order, optionally over only the first `limit` messages) and
+ONE aggregate over it (_pair_counts: (least, greatest) → count).
+lag_edges keeps the prev != cur rows before counting; interaction_pairs
+counts every row, so the stream head and every self-transition land on
+an (s, s) row — the nodes are the endpoints of all rows and the links
+are the rows with source != target. The serving edge collects that
+aggregate once and splits it on the driver — one lineage, one scan of
+the export.
 
 Scale design: the window that orders the chain is partitioned by
 `partition_cols` (default: file_path — one chat per file). A single
 chat is at most a few hundred MB, so per-partition windows keep the
 plan shuffle-light at any corpus size; nothing is global. For a single
-giant totally-ordered stream, the operators below SELF-DISPATCH: when
-no partition cols are given and Catalyst's size estimate crosses the
-threshold (plans/dispatch.py, default ≈1M rows), they route to the
-exactly-equal range-chunked plans in plans/chunked_lag.py (boundary
-stitching, SURVEY.md §4.3) instead of a single-partition window.
-Equality of the two paths is pinned by tests/test_chunked_lag.py and
-tests/test_dispatch.py.
+giant totally-ordered stream, the chain SELF-DISPATCHES: when no
+partition cols are given and Catalyst's size estimate crosses the
+threshold (plans/dispatch.py, default ≈1M rows), _chain routes to the
+exactly-equal range-chunked chain in plans/chunked_lag.py (boundary
+stitching, SURVEY.md §4.3) instead of a single-partition window;
+ordered_limit makes the same decision for the limit alone. Equality
+of the two paths is pinned by tests/test_chunked_lag.py,
+tests/test_dispatch.py and tests/test_network.py.
 """
 
 from __future__ import annotations
@@ -86,18 +91,76 @@ def ordered_limit(
     )
 
 
+def _chain(
+    df: DataFrame,
+    sender_col: str,
+    order_cols: Sequence[str],
+    partition_cols: Sequence[str],
+    limit: int | None,
+    keep: Sequence[str] = (),
+) -> DataFrame:
+    """The chain every graph operator shares: (keep..., prev, cur), one
+    row per surviving message among the first `limit` (all when falsy)
+    of the order, prev = the lag of the sender (null on the stream
+    head). The only place the lag chain picks its plan:
+
+      - with partition cols, or below the dispatch threshold, one
+        window (per partition, else global). With a limit, row_number
+        shares the lag's window spec — one sort/exchange, not two.
+        Correct because the limit keeps a prefix of the order: each
+        kept row's predecessor is kept too, so lag-then-filter equals
+        filter-then-lag;
+      - otherwise plans.chunked_lag.chunked_lag_pairs with the limit:
+        per-chunk windows plus a boundary stitch, exactly equal, and
+        it lags inside the limit's own chunks.
+
+    `keep` carries group columns through the windowed path (they must
+    be among partition_cols; the chunked path never has any)."""
+    if not partition_cols and use_chunked(df):
+        from poc_spark.plans.chunked_lag import chunked_lag_pairs
+
+        return chunked_lag_pairs(df, sender_col, order_cols, limit=limit)
+    w = _chain_window(order_cols, partition_cols)
+    cols = [
+        *keep,
+        F.lag(sender_col).over(w).alias("prev"),
+        F.col(sender_col).alias("cur"),
+    ]
+    if not limit:
+        return df.select(*cols)
+    return (
+        df.select(F.row_number().over(w).alias("_rn"), *cols)
+        .filter(F.col("_rn") <= limit)
+        .drop("_rn")
+    )
+
+
+def _pair_counts(chain: DataFrame, keep: Sequence[str] = ()) -> DataFrame:
+    """OP-AGG-EDGEW: (keep..., source, target, weight) — the chain's
+    (prev, cur) rows counted per undirected pair (source <= target)."""
+    return chain.groupBy(
+        *keep,
+        F.least("prev", "cur").alias("source"),
+        F.greatest("prev", "cur").alias("target"),
+    ).agg(F.count(F.lit(1)).alias("weight"))
+
+
 def lag_edges(
     df: DataFrame,
     sender_col: str,
     order_cols: Sequence[str],
     partition_cols: Sequence[str] = (),
     group_output: bool = False,
+    limit: int | None = None,
 ) -> DataFrame:
     """OP-LAG-EDGE + OP-AGG-EDGEW: consecutive-sender transitions over the
     surviving rows → undirected weighted edges (source <= target).
+    With `limit`, over only the first `limit` rows of the order per
+    partition (OP-LIMIT-N fused into the chain's window).
 
     Self-transitions (same sender twice) emit nothing but still advance
-    the chain — lag gives that for free.
+    the chain — lag gives that for free; the head's null prev fails
+    `!=` too, so only real transitions remain.
 
     `partition_cols` bounds the chain windows (per-file / per-group —
     no cross-group edge ever forms); by default the weights still
@@ -106,68 +169,9 @@ def lag_edges(
     columns in the result — one graph PER group, the true production
     shape at scale: every window and the final aggregate shuffle on
     the group key, nothing is global."""
-    if not partition_cols and use_chunked(df):
-        from poc_spark.plans.chunked_lag import chunked_lag_edges
-
-        return chunked_lag_edges(df, sender_col, order_cols)
-    w = _chain_window(order_cols, partition_cols)
     keep = list(partition_cols) if group_output else []
-    s = F.col(sender_col)
-    prev = F.lag(sender_col).over(w)
-    return (
-        df.select(*keep, prev.alias("_prev"), s.alias("_cur"))
-        .filter(F.col("_prev").isNotNull() & (F.col("_prev") != F.col("_cur")))
-        .select(
-            *keep,
-            F.least("_prev", "_cur").alias("source"),
-            F.greatest("_prev", "_cur").alias("target"),
-        )
-        .groupBy(*keep, "source", "target")
-        .agg(F.count(F.lit(1)).alias("weight"))
-    )
-
-
-def lag_edges_limited(
-    df: DataFrame,
-    sender_col: str,
-    order_cols: Sequence[str],
-    limit: int,
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Fused OP-LIMIT-N + OP-LAG-EDGE: row_number and lag share one
-    window spec, so Spark computes both in a single sort/exchange pass
-    instead of two. Correct because the limit keeps a prefix of the
-    order: each surviving row's predecessor is also in the prefix, so
-    lag-then-filter(rn <= n) equals filter-then-lag.
-
-    Above the scale threshold the fused single window would itself be
-    the bottleneck — dispatch to the chunked chain, which lags inside
-    the limit's own chunks (equal by the same prefix property; chunks
-    past the limit are pruned before the lag ever runs)."""
-    if not partition_cols and use_chunked(df):
-        from poc_spark.plans.chunked_lag import chunked_lag_edges
-
-        return chunked_lag_edges(df, sender_col, order_cols, limit=limit)
-    w = _chain_window(order_cols, partition_cols)
-    s = F.col(sender_col)
-    return (
-        df.select(
-            F.row_number().over(w).alias("_rn"),
-            F.lag(sender_col).over(w).alias("_prev"),
-            s.alias("_cur"),
-        )
-        .filter(
-            (F.col("_rn") <= limit)
-            & F.col("_prev").isNotNull()
-            & (F.col("_prev") != F.col("_cur"))
-        )
-        .select(
-            F.least("_prev", "_cur").alias("source"),
-            F.greatest("_prev", "_cur").alias("target"),
-        )
-        .groupBy("source", "target")
-        .agg(F.count(F.lit(1)).alias("weight"))
-    )
+    chain = _chain(df, sender_col, order_cols, partition_cols, limit, keep)
+    return _pair_counts(chain.filter(F.col("prev") != F.col("cur")), keep)
 
 
 def interaction_pairs(
@@ -188,37 +192,14 @@ def interaction_pairs(
     self-transition land on an (s, s) row. Hence the node set is the
     set of endpoints of all rows (every surviving sender is the cur of
     some row), and the links are the rows with source != target. One
-    action on this DataFrame answers the whole request.
-
-    The chain is a global (or per-partition) window — lag plus, with a
-    limit, row_number in the same window spec (one sort/exchange; the
-    limit keeps a prefix, so each kept row's predecessor is kept too).
-    Above the dispatch threshold it is the chunked scale path instead:
-    chunked_lag_pairs with the limit, which parses the input once and
-    lags inside the limit's own chunks; its stitch emits the head as
-    (null, first), so no separate node scan is needed."""
+    action on this DataFrame answers the whole request. The chain is
+    the shared one (_chain); its chunked form emits the head as
+    (null, first) too, so no separate node scan is needed."""
     df = messages
     # both-bounds-only quirk (backend/main.py:305): a lone bound is a no-op.
     if start_date and end_date:
         df = df.filter(F.col(date_col).between(F.lit(start_date), F.lit(end_date)))
-
-    if not partition_cols and use_chunked(df):
-        from poc_spark.plans.chunked_lag import chunked_lag_pairs
-
-        chain = chunked_lag_pairs(df, sender_col, order_cols, limit=limit)
-    else:
-        w = _chain_window(order_cols, partition_cols)
-        cols = [F.lag(sender_col).over(w).alias("prev"), F.col(sender_col).alias("cur")]
-        if limit:
-            chain = df.select(F.row_number().over(w).alias("_rn"), *cols).filter(
-                F.col("_rn") <= limit
-            )
-        else:
-            chain = df.select(*cols)
-    return chain.groupBy(
-        F.least("prev", "cur").alias("source"),
-        F.greatest("prev", "cur").alias("target"),
-    ).agg(F.count(F.lit(1)).alias("weight"))
+    return _pair_counts(_chain(df, sender_col, order_cols, partition_cols, limit))
 
 
 def interaction_graph(

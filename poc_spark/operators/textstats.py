@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from poc_spark.plans.dispatch import use_chunked
+
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic.
 # Deliberately small and literal so the same lists embed in the SQL
 # oracle; real pipelines would swap in fastText — the Spark plumbing
@@ -486,19 +488,6 @@ _SCORED_MIN_BYTES_KEY = "spark.poc.ntile.minScoredBytes"
 _SCORED_DEFAULT_MIN_BYTES = 768 * 1024 * 1024
 
 
-def _should_chunk(scored: DataFrame) -> bool:
-    from poc_spark.plans.dispatch import CHUNK_FORCE_KEY, estimated_size_bytes
-
-    conf = scored.sparkSession.conf
-    force = conf.get(CHUNK_FORCE_KEY, None)
-    if force is not None:
-        return force.strip().lower() == "true"
-    threshold = int(
-        conf.get(_SCORED_MIN_BYTES_KEY, str(_SCORED_DEFAULT_MIN_BYTES))
-    )
-    return estimated_size_bytes(scored) >= threshold
-
-
 def perplexity_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -530,7 +519,9 @@ def perplexity_buckets(
     from pyspark.sql import Window
 
     scored = unigram_logprob(df, text_col, id_col)
-    if num_chunks is None and _should_chunk(scored):
+    if num_chunks is None and use_chunked(
+        scored, _SCORED_MIN_BYTES_KEY, _SCORED_DEFAULT_MIN_BYTES
+    ):
         num_chunks = 32
     if num_chunks:
         from poc_spark.plans.ntile import chunked_ntile

@@ -5,7 +5,9 @@ The reference-parity lag (operators/network.py) uses a global window:
 one partition, fine for a chat file, hostile at 100 TB. This module
 computes the same (prev, cur) adjacency, optionally over only the
 first `limit` rows of the order, without ever materializing a global
-order. chunked_lag_pairs is the one chain builder:
+order. chunked_lag_pairs is the one chunked chain builder — the scale
+form of operators.network._chain, which dispatches to it and puts the
+edge aggregate on top:
 
   1. materialize the narrow projection (order columns + value) once,
      with an eager localCheckpoint — every later pass reads that
@@ -94,9 +96,12 @@ def _limit_walk(
     limit of n rows: (the chunks wholly inside the limit, the one chunk
     that straddles it or None, how many of its rows the limit keeps).
     A falsy n is no limit (reference `if limit and ...`): every chunk
-    is whole."""
+    is whole. A negative n keeps nothing (the reference's
+    `count >= limit` breaks before the first line)."""
     if not n:
         return sorted(counts), None, 0
+    if n < 0:
+        return [], None, 0
     cum = 0
     full: list[int] = []
     for c in sorted(counts):
@@ -257,26 +262,3 @@ def chunked_ordered_limit(
         out = out.unionByName(p)
     return out.drop("_key_num", "_chunk")
 
-
-def chunked_lag_edges(
-    df: DataFrame,
-    sender_col: str,
-    order_cols: Sequence[str],
-    num_chunks: int = 32,
-    limit: int | None = None,
-) -> DataFrame:
-    """OP-LAG-EDGE + OP-AGG-EDGEW at scale, over the first `limit` rows
-    (all when falsy): same output as operators.network.lag_edges /
-    lag_edges_limited with a global window, but shuffles by chunk
-    instead of collapsing to one partition."""
-    pairs = chunked_lag_pairs(df, sender_col, order_cols, num_chunks, limit)
-    # the head's null prev fails `!=` too: only real transitions remain
-    return (
-        pairs.filter(F.col("prev") != F.col("cur"))
-        .select(
-            F.least("prev", "cur").alias("source"),
-            F.greatest("prev", "cur").alias("target"),
-        )
-        .groupBy("source", "target")
-        .agg(F.count(F.lit(1)).alias("weight"))
-    )

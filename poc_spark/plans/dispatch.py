@@ -10,8 +10,10 @@ scale paths (plans/chunked_lag.py) take over above.
 This module makes the operators enforce that policy automatically:
 `use_chunked(df)` consults Catalyst's optimized-plan sizeInBytes
 estimate — free, no job, filter-selectivity-aware — against a
-configurable byte threshold. Callers (operators/network.py) route to
-the exactly-equal chunked implementation when it trips. Unknown/huge
+configurable byte threshold. Callers (operators/network.py; the
+perplexity buckets in operators/textstats.py, under their own
+threshold key) route to the exactly-equal chunked implementation when
+it trips. Unknown/huge
 estimates (post-join plans without stats) dispatch chunked: the safe
 direction at scale.
 
@@ -44,12 +46,19 @@ def estimated_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def use_chunked(df: DataFrame) -> bool:
+def use_chunked(
+    df: DataFrame,
+    min_bytes_key: str = CHUNK_MIN_BYTES_KEY,
+    default_min_bytes: int = DEFAULT_MIN_BYTES,
+) -> bool:
     """True when a global-window operator should take the range-chunked
-    scale path for this input."""
+    scale path for this input: the force key when set, else the plan
+    estimate against the threshold under `min_bytes_key` (an operator
+    whose input is much wider per row than an event scan brings its own
+    key and default, so the crossover stays at the same row count)."""
     conf = df.sparkSession.conf
     force = conf.get(CHUNK_FORCE_KEY, None)
     if force is not None:
         return force.strip().lower() == "true"
-    threshold = int(conf.get(CHUNK_MIN_BYTES_KEY, str(DEFAULT_MIN_BYTES)))
+    threshold = int(conf.get(min_bytes_key, str(default_min_bytes)))
     return estimated_size_bytes(df) >= threshold

@@ -7,52 +7,32 @@ decodes with errors="replace" and splitlines (backend/main.py:357-360).
 The file's line order is the single load-bearing order in the whole
 system (edge construction is lag-over-line-order), so the source must
 attach a line_id whose ORDER equals file order. Contiguity is NOT
-load-bearing — only ordering is — and that distinction is the
-performance story:
-
-  - default: line_id = monotonically_increasing_id(), computed JVM-side
-    with zero shuffles and zero Python serialization. Within one file,
-    partitions are split-ordered and mid is increasing within each
-    partition, so mid order == file order. (A Python rdd.zipWithIndex
-    formulation benches ~5x slower at 2M lines — every row crosses the
-    JVM/Python boundary twice.)
-  - contiguous=True: exact 0-based per-file line numbers via a
-    row_number window over mid, partitioned by file — one shuffle; use
-    only when the ids themselves are the product (e.g. exporting
-    line-numbered tables).
+load-bearing — only ordering is — so line_id =
+monotonically_increasing_id(), computed JVM-side with zero shuffles
+and zero Python serialization. Within one file, partitions are
+split-ordered and mid is increasing within each partition, so mid
+order == file order. (A Python rdd.zipWithIndex formulation benches
+~5x slower at 2M lines — every row crosses the JVM/Python boundary
+twice.)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_chat_lines(
-    spark: SparkSession,
-    path: str,
-    per_file: bool = False,
-    contiguous: bool = False,
-) -> DataFrame:
+def read_chat_lines(spark: SparkSession, path: str) -> DataFrame:
     """Return raw_chat(value, file_path, line_id) for chat exports.
 
-    per_file is kept for API compatibility; ordering is always safe
-    per file (mid is only comparable WITHIN a file — downstream windows
-    over multiple files must partition by file_path, which
-    operators/network.py supports via partition_cols).
+    Ordering is safe per file only (mid is comparable WITHIN a file —
+    downstream windows over multiple files must partition by
+    file_path, which operators/network.py supports via partition_cols).
     """
-    raw = spark.read.text(path).select(
+    return spark.read.text(path).select(
         F.col("value"),
         F.input_file_name().alias("file_path"),
         F.monotonically_increasing_id().alias("line_id"),
-    )
-    if not contiguous:
-        return raw
-    w = Window.partitionBy("file_path").orderBy("line_id")
-    return raw.select(
-        "value",
-        "file_path",
-        (F.row_number().over(w) - F.lit(1)).alias("line_id"),
     )
 
 

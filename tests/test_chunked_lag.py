@@ -10,22 +10,35 @@ from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from poc_spark.operators.network import lag_edges
-from poc_spark.plans.chunked_lag import _range_chunks, chunked_lag_edges, chunked_lag_pairs
+from poc_spark.plans.chunked_lag import _range_chunks, chunked_lag_pairs
 
 
-def _edges_map(df):
-    return {(r["source"], r["target"]): r["weight"] for r in df.collect()}
+def _pairs(df):
+    return Counter((r["prev"], r["cur"]) for r in df.collect())
+
+
+def _global_pairs(df, value_col, order_cols, n=None):
+    """The global form: row_number() <= n (every row when n is falsy)
+    plus lag, one window."""
+    w = Window.orderBy(*order_cols)
+    g = df.select(
+        F.row_number().over(w).alias("_rn"),
+        F.lag(value_col).over(w).alias("prev"),
+        F.col(value_col).alias("cur"),
+    )
+    if n:
+        g = g.filter(F.col("_rn") <= n)
+    return _pairs(g)
 
 
 def test_equals_global_window_on_events(spark, sf_dir):
     from poc_spark.sources.catalog import load_table
 
     events = load_table(spark, sf_dir, "events")
-    glob = _edges_map(lag_edges(events, "user_id", ("ts", "event_id")))
+    order = ("ts", "event_id")
+    glob = _global_pairs(events, "user_id", order)
     for n in (1, 4, 32):
-        chunked = _edges_map(chunked_lag_edges(events, "user_id", ("ts", "event_id"), n))
-        assert chunked == glob, f"num_chunks={n}"
+        assert _pairs(chunked_lag_pairs(events, "user_id", order, n)) == glob, n
 
 
 def test_skewed_key_duplicate_quantiles(spark):
@@ -35,9 +48,8 @@ def test_skewed_key_duplicate_quantiles(spark):
         (float(2 + i), 95 + i, f"s{i % 3}") for i in range(5)
     ]
     df = spark.createDataFrame(rows, "k double, tie long, sender string")
-    glob = _edges_map(lag_edges(df, "sender", ("k", "tie")))
-    chunked = _edges_map(chunked_lag_edges(df, "sender", ("k", "tie"), 16))
-    assert chunked == glob
+    glob = _global_pairs(df, "sender", ("k", "tie"))
+    assert _pairs(chunked_lag_pairs(df, "sender", ("k", "tie"), 16)) == glob
 
 
 def test_chunked_ordered_limit_equals_global(spark, sf_dir):
@@ -75,20 +87,9 @@ def test_pair_count_invariant(spark):
 
 # --- the limited builder against the global form ---------------------------
 
-_LIMITS = ("none", "zero", "one", "all", "past_all", "chunk_edge", "inside")
-
-
-def _global_pairs(df, value_col, order_cols, n):
-    """The global form: row_number() <= n plus lag, one window."""
-    w = Window.orderBy(*order_cols)
-    g = df.select(
-        F.row_number().over(w).alias("_rn"),
-        F.lag(value_col).over(w).alias("prev"),
-        F.col(value_col).alias("cur"),
-    )
-    if n:
-        g = g.filter(F.col("_rn") <= n)
-    return Counter((r["prev"], r["cur"]) for r in g.collect())
+_LIMITS = (
+    "none", "zero", "negative", "one", "all", "past_all", "chunk_edge", "inside"
+)
 
 
 @settings(
@@ -108,6 +109,8 @@ def _global_pairs(df, value_col, order_cols, n):
 )
 @example(rows=[], num_chunks=8, value_col="sender", mode="one", pick=0)
 @example(rows=[], num_chunks=2, value_col="sender", mode="none", pick=0)
+@example(rows=[(0, "a"), (1, "b"), (2, "c")], num_chunks=2, value_col="sender",
+         mode="negative", pick=4)
 # a null value inside a chunk is a real prev, not a chunk's first row
 @example(rows=[(0, None), (0, "a"), (1, "b")], num_chunks=1, value_col="sender",
          mode="none", pick=0)
@@ -122,8 +125,9 @@ def _global_pairs(df, value_col, order_cols, n):
 def test_limited_pairs_equal_global_form(spark, rows, num_chunks, value_col, mode, pick):
     """chunked_lag_pairs(..., limit=n) equals row_number() <= n plus lag
     over the global order, for every kind of limit: falsy (no limit),
-    1, exactly the row count or past it, exactly a cumulative chunk
-    count (no straddling chunk), and inside a chunk."""
+    negative (nothing, not even the stream head), 1, exactly the row
+    count or past it, exactly a cumulative chunk count (no straddling
+    chunk), and inside a chunk."""
     # the tie column is unique but not in input order
     data = [(k, (i * 7919) % 10007, s) for i, (k, s) in enumerate(rows)]
     df = spark.createDataFrame(data, "k long, tie long, sender string")
@@ -135,11 +139,12 @@ def test_limited_pairs_equal_global_form(spark, rows, num_chunks, value_col, mod
     n = {
         "none": None,
         "zero": 0,
+        "negative": -1 - pick % 5,
         "one": 1,
         "all": len(data),
         "past_all": len(data) + 3,
         "chunk_edge": edges[pick % len(edges)] if edges else 1,
         "inside": 1 + pick % len(data) if data else 1,
     }[mode]
-    got = Counter(map(tuple, chunked_lag_pairs(df, value_col, order, num_chunks, n).collect()))
+    got = _pairs(chunked_lag_pairs(df, value_col, order, num_chunks, n))
     assert got == _global_pairs(df, value_col, order, n)

@@ -1,40 +1,32 @@
 """Registry-order invariants: the driver records (at most) the first
 ~50 entries of queries() in dict order, so everything that must appear
-in CORRECTNESS_r{N}.json has to sit inside that window."""
+in CORRECTNESS_r{N}.json is named in contract.DRIVER_HEAD, which the
+registry puts first; every other entry follows, sorted by name."""
 
 from __future__ import annotations
 
-from poc_spark.contract import REGISTRY, _TAIL
+from poc_spark.contract import DRIVER_HEAD, REGISTRY
 
 WINDOW = 50
 
 
-def test_every_oracled_entry_inside_driver_window():
+def test_driver_head_is_the_window_prefix():
     names = list(REGISTRY)
-    window = set(names[:WINDOW])
-    oracled = {n for n, s in REGISTRY.items() if s.sql is not None}
-    # the declared tail may sacrifice an oracled entry (a deliberate
-    # trade when the window is full); anything else must fit inside
-    missing = oracled - window - set(_TAIL)
-    assert not missing, f"oracled entries outside the driver window: {missing}"
+    assert len(DRIVER_HEAD) <= WINDOW
+    assert names[: len(DRIVER_HEAD)] == DRIVER_HEAD
 
 
 def test_must_be_green_rows_only_entries_inside_window():
-    names = list(REGISTRY)
-    window = set(names[:WINDOW])
-    assert "mm_decode" in window  # round-1 red row's successor — now oracled
+    assert "mm_decode" in DRIVER_HEAD  # round-1 red row's successor — now oracled
 
 
-def test_overflow_is_exactly_the_declared_tail():
-    names = list(REGISTRY)
-    overflow = set(names[WINDOW:])
-    assert overflow <= set(_TAIL), (
-        f"undeclared entries pushed past the driver window: "
-        f"{overflow - set(_TAIL)}"
-    )
+def test_tail_is_sorted():
+    tail = list(REGISTRY)[len(DRIVER_HEAD):]
+    assert tail == sorted(tail)
 
 
 def test_no_duplicate_or_lost_entries():
     names = list(REGISTRY)
     assert len(names) == len(set(names))
-    assert set(_TAIL) <= set(names)
+    assert len(DRIVER_HEAD) == len(set(DRIVER_HEAD))
+    assert set(DRIVER_HEAD) <= set(names)

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from poc_spark.operators.network import (
     interaction_graph,
     lag_edges,
-    lag_edges_limited,
     ordered_limit,
 )
 from poc_spark.plans.dispatch import (
@@ -57,6 +56,9 @@ def test_threshold_logic(spark, events):
         assert use_chunked(events)
     finally:
         spark.conf.unset(CHUNK_MIN_BYTES_KEY)
+    # an operator may bring its own threshold key and default
+    assert use_chunked(events, "spark.test.unsetMinBytes", 1)
+    assert not use_chunked(events, "spark.test.unsetMinBytes", 2**62)
     # force overrides the estimate in both directions
     spark.conf.set(CHUNK_FORCE_KEY, "false")
     spark.conf.set(CHUNK_MIN_BYTES_KEY, "1")
@@ -96,12 +98,12 @@ def test_ordered_limit_dispatch_equal(spark, events, forced):
 
 
 def test_fused_flagship_dispatch_equal(spark, events, forced):
-    chunked = lag_edges_limited(events, "user_id", ORDER, 400)
+    chunked = lag_edges(events, "user_id", ORDER, limit=400)
     nodes_c, edges_c = interaction_graph(
         events, sender_col="user_id", date_col="ts", order_cols=ORDER, limit=400
     )
     spark.conf.set(CHUNK_FORCE_KEY, "false")
-    global_form = lag_edges_limited(events, "user_id", ORDER, 400)
+    global_form = lag_edges(events, "user_id", ORDER, limit=400)
     nodes_g, edges_g = interaction_graph(
         events, sender_col="user_id", date_col="ts", order_cols=ORDER, limit=400
     )

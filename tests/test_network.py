@@ -6,13 +6,18 @@ from __future__ import annotations
 import random
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from poc_spark.functions.chat_parse import parse_chat_lines
 from poc_spark.operators.network import (
     induced_subgraph,
     interaction_graph,
+    interaction_pairs,
+    lag_edges,
     search_nodes,
 )
+from poc_spark.plans.dispatch import CHUNK_FORCE_KEY
 from poc_spark.sources.chat import chat_lines_from_strings
 from tests.reference_oracle import analyze_network
 
@@ -153,11 +158,57 @@ def test_append_filtered_lines_is_invariant(spark):
     assert _graph(spark, noisy) == base
 
 
+_h_line = st.one_of(
+    st.builds(
+        lambda d, s: f"[{d}.1.2023, 10:00:00] {s}: m",
+        st.integers(min_value=1, max_value=9),
+        st.sampled_from(["A", "B", "C", "~ D"]),
+    ),
+    st.sampled_from(["plain text", "[2.1.2023, 10:00:00] A: הושמט"]),
+)
+
+
+@pytest.mark.parametrize("force", ["false", "true"], ids=["global", "chunked"])
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    lines=st.lists(_h_line, max_size=24),
+    kind=st.sampled_from(["none", "zero", "one", "mid", "past_end"]),
+)
+@example(lines=["[1.1.2023, 10:00:00] A: m", "[1.1.2023, 10:00:00] B: m"], kind="one")
+def test_lag_edges_are_the_links_of_interaction_pairs(spark, force, lines, kind):
+    """Both operators are projections of the one shared chain: the
+    edges of lag_edges(limit=n) are exactly the source != target rows
+    of interaction_pairs(limit=n), on either dispatch path."""
+    n = {
+        "none": None,
+        "zero": 0,
+        "one": 1,
+        "mid": max(1, len(lines) // 2),
+        "past_end": len(lines) + 3,
+    }[kind]
+    msgs = parse_chat_lines(chat_lines_from_strings(spark, lines))
+    spark.conf.set(CHUNK_FORCE_KEY, force)
+    try:
+        edges = lag_edges(msgs, "sender", ("line_id",), limit=n).collect()
+        pairs = interaction_pairs(msgs, limit=n).collect()
+    finally:
+        spark.conf.unset(CHUNK_FORCE_KEY)
+    got = {(r["source"], r["target"]): r["weight"] for r in edges}
+    assert len(got) == len(edges)
+    assert got == {
+        (r["source"], r["target"]): r["weight"]
+        for r in pairs
+        if r["source"] != r["target"]
+    }
+
+
 def test_lag_edges_grouped_output_no_cross_group_edges(spark):
     """group_output=True: one graph per group — chains never cross the
     partition boundary, and the group key survives into the result."""
-    from poc_spark.operators.network import lag_edges
-
     rows = [
         # group g1: A B A  -> edges (A,B):2
         ("g1", 1, "A"), ("g1", 2, "B"), ("g1", 3, "A"),

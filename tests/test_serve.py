@@ -151,12 +151,18 @@ _h_range = st.sampled_from(
 @given(
     lines=st.lists(_h_line, max_size=30),
     bounds=_h_range,
-    limit=st.sampled_from([None, 0, 1, 4]),
+    limit=st.sampled_from([None, 0, 1, 4, -1]),
 )
 @example(lines=[], bounds=(None, None), limit=None)
 @example(lines=[], bounds=(None, None), limit=4)
 @example(lines=["[1.1.2023, 10:00:00] A: m"], bounds=(None, None), limit=None)
 @example(lines=["[1.1.2023, 10:00:00] A: m"], bounds=(None, None), limit=1)
+# a negative limit keeps nothing (the reference breaks before line one)
+@example(
+    lines=["[1.1.2023, 10:00:00] A: m", "[2.1.2023, 10:00:00] B: m"],
+    bounds=(None, None),
+    limit=-1,
+)
 # the range keeps exactly one message: its sender is a node with no link
 @example(
     lines=[
