@@ -1777,7 +1777,8 @@ def sim_knn_join(spark, sf_dir):
     merges per-cell top-k — NOTHING transits the driver (the r4 form
     collected the corpus via toPandas; VERDICT r4 #1). The oracle is
     the quadratic window over all pairs — DuckDB verifies the values,
-    pytest pins tiled == one-block bit-exactly."""
+    pytest pins them bit-exactly against the pure-Python reference
+    (tests/reference_oracle.knn_topk)."""
     from poc_spark.operators.similarity import knn_join_tiled
 
     return knn_join_tiled(_t(spark, sf_dir, "embeddings"), k=5)
@@ -7887,9 +7888,10 @@ def sim_ivfpq_rerank(spark, sf_dir):
     shortlist. All three stages replay in the oracle from the stored
     artifacts — probe membership, shortlist membership, and every
     re-ranked double are value-hashed. Recall vs (n_probe, k') is
-    receipted in PQ_RECALL.json ('ivfpq_rerank' block): probing 4/16
-    lists matches the full-scan re-rank curve within noise while
-    reading a quarter of the codes."""
+    receipted in PQ_RECALL.json ('ivfpq_rerank' block): at k'=50,
+    probing 8/16 lists matches the full scan (recall@10 0.335 vs 0.33)
+    while reading half the codes, and this entry's 4/16 reads a
+    quarter of them for 0.27."""
     from poc_spark.operators.similarity import (
         build_ivf_index,
         ivfpq_rerank_topk,
@@ -8052,10 +8054,14 @@ def sim_ivfpq_residual(spark, sf_dir):
     # (r15, VERDICT r14 what's-wrong #1 / next-round #5): residual
     # vectors cluster tightly around zero and the local Lloyd kernel —
     # strided OR kmeans++-seeded — measured recall@10 0.18–0.205 at
-    # the contract setting vs k-means||'s 0.225 (PQ_RECALL.json); the
+    # the contract setting vs k-means||'s 0.225 at local[32]; the
     # quality gap is specific to residual geometry (raw-vector cheap
     # fits are within noise of k-means||), so this one train keeps the
-    # distributed path and pays its ~6 Lloyd job floors. The IVF build
+    # distributed path and pays its ~6 Lloyd job floors. The k-means||
+    # init follows the session's partitioning: at local[4] the same
+    # fit reads 0.20 (PQ_RECALL.json 'ivfpq_residual', n_probe=4) and
+    # the kmeans++-seeded local fit 0.21, so the gap is not measured
+    # on every core count. The IVF build
     # above stays on the cheap local dispatch (its recall receipt is
     # fit-mode-insensitive).
     _old_bound = spark.conf.get("spark.poc.sim.localFitMaxRows", None)

@@ -265,6 +265,27 @@ def ann_hyperplane(
 # ---------------------------------------------------------------------------
 
 
+def _local_fit_sample(sample: DataFrame, min_rows: int):
+    """The size gate of the cheap-fit local dispatch (docstring of
+    ivf_centroids_kmeans): the caller's already-sampled training set
+    `sample` (one double-array column `v`) as a float64 numpy matrix
+    when it holds between `min_rows` and `spark.poc.sim.localFitMaxRows`
+    rows, else None (the caller fits distributed). The probe is one
+    `limit(bound+1).collect()`, so it stops scanning past the bound;
+    a bound of 0 always answers None."""
+    bound = int(
+        sample.sparkSession.conf.get("spark.poc.sim.localFitMaxRows", "65536")
+    )
+    if bound <= 0:
+        return None
+    head = sample.limit(bound + 1).collect()
+    if not min_rows <= len(head) <= bound:
+        return None
+    import numpy as np
+
+    return np.array([r["v"] for r in head], dtype=np.float64)
+
+
 def ivf_centroids_kmeans(
     df: DataFrame,
     n_centroids: int = 16,
@@ -301,19 +322,13 @@ def ivf_centroids_kmeans(
     only, receipted in PQ_RECALL.json). `localFitMaxRows=0` forces the
     distributed path everywhere (tools/forced_sweep.sh keeps it
     oracled)."""
-    spark = df.sparkSession
-    bound = int(spark.conf.get("spark.poc.sim.localFitMaxRows", "65536"))
     data = df.select(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")
     )
     if sample_fraction is not None:
         data = data.sample(withReplacement=False, fraction=sample_fraction, seed=seed)
-    if bound > 0 and sample_fraction is not None:
-        head = data.limit(bound + 1).collect()
-        if n_centroids <= len(head) <= bound:
-            import numpy as np
-
-            X = np.array([r["v"] for r in head], dtype=np.float64)
+        X = _local_fit_sample(data, n_centroids)
+        if X is not None:
             centers = _lloyd_local(X, n_centroids, n_iter=max(12, max_iter))
             return [
                 (i, [float(x) for x in c]) for i, c in enumerate(centers)
@@ -528,106 +543,6 @@ def ivf_query(
     )
 
 
-# one-block GEMM kernels collect a side to the driver: hard-cap the
-# collected rows so a scale misuse fails loudly with a pointer to the
-# tiled form instead of OOM-ing the driver (VERDICT r4 #1).
-_MAX_ONE_BLOCK_ROWS = 250_000
-
-
-def _guard_one_block(n_rows: int, fn: str, scale_fn: str) -> None:
-    if n_rows > _MAX_ONE_BLOCK_ROWS:
-        raise ValueError(
-            f"{fn} collected {n_rows} rows to the driver "
-            f"(max {_MAX_ONE_BLOCK_ROWS}); use {scale_fn} for large inputs"
-        )
-
-
-def knn_join_blocked(
-    df: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Batch k-NN JOIN: for EVERY vector, its top-k cosine neighbors
-    (self excluded) — the all-queries-at-once form of knn_brute, the
-    workhorse of batch semantic retrieval. Blocked GEMM like
-    dedup.embedding_near_pairs_blocked: the corpus broadcasts as a
-    dense float64 matrix, each Arrow batch multiplies against it in
-    numpy and keeps its own top-k rows.
-
-    Float parity with the SQL oracle: the k-loop accumulates dim-wise
-    (sequential index order == DuckDB's list_cosine_similarity loop)
-    and ties order by (cos desc, neighbor id asc) via lexsort — so the
-    (id, rank) table is deterministic cross-engine.
-
-    Scale: ONE-BLOCK ONLY — the corpus transits the driver, so this is
-    the verification/small-corpus form (guarded by _MAX_ONE_BLOCK_ROWS).
-    The distributed form is knn_join_tiled below: same kernel, same
-    bit-exact output, nothing through the driver.
-
-    Output: (id, neighbor_id, cos, rank) with rank 1..k.
-    """
-    import numpy as np
-    import pandas as pd
-
-    pdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
-    _guard_one_block(len(pdf), "knn_join_blocked", "knn_join_tiled")
-    if len(pdf) == 0:
-        return df.sparkSession.createDataFrame(
-            [], "id long, neighbor_id long, cos double, rank long"
-        )
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-    dim = mat.shape[1]
-    nrm_sq = np.zeros(len(ids))
-    for j in range(dim):
-        nrm_sq += mat[:, j] * mat[:, j]
-    nrm = np.sqrt(nrm_sq)
-
-    spark = df.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_nrm = spark.sparkContext.broadcast(nrm)
-
-    def gen(batches):
-        all_ids, all_mat, all_nrm = b_ids.value, b_mat.value, b_nrm.value
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            a_ids = batch["id"].to_numpy(dtype=np.int64)
-            a = np.stack([np.asarray(v, dtype=np.float64) for v in batch["v"]])
-            a_nrm_sq = np.zeros(len(a_ids))
-            for j in range(dim):
-                a_nrm_sq += a[:, j] * a[:, j]
-            a_nrm = np.sqrt(a_nrm_sq)
-            c = np.zeros((len(a_ids), len(all_ids)))
-            for j in range(dim):
-                c += np.outer(a[:, j], all_mat[:, j])
-            cos = np.floor(c / np.outer(a_nrm, all_nrm) * 1e6 + 0.5) / 1e6
-            out_id, out_nb, out_cos, out_rank = [], [], [], []
-            for i, qid in enumerate(a_ids):
-                row = cos[i].copy()
-                mask = all_ids != qid  # exclude self
-                cand_ids, cand_cos = all_ids[mask], row[mask]
-                order = np.lexsort((cand_ids, -cand_cos))[:k]
-                out_id.extend([qid] * len(order))
-                out_nb.extend(cand_ids[order])
-                out_cos.extend(cand_cos[order])
-                out_rank.extend(range(1, len(order) + 1))
-            yield pd.DataFrame(
-                {
-                    "id": np.asarray(out_id, dtype=np.int64),
-                    "neighbor_id": np.asarray(out_nb, dtype=np.int64),
-                    "cos": out_cos,
-                    "rank": np.asarray(out_rank, dtype=np.int64),
-                }
-            )
-
-    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).mapInPandas(
-        gen, "id long, neighbor_id long, cos double, rank long"
-    )
-
-
 def knn_join_tiled(
     df: DataFrame,
     k: int = 5,
@@ -638,18 +553,21 @@ def knn_join_tiled(
     n_rows: int | None = None,
     target_cell_bytes: int = 512 << 20,
 ) -> DataFrame:
-    """Batch k-NN join as a DISTRIBUTED tiled block-grid GEMM — the
-    100 TB form of knn_join_blocked, with NOTHING transiting the
-    driver (VERDICT r4 #1: the one-block form toPandas()'d the whole
-    corpus and broadcast a dense matrix — a driver OOM at scale).
+    """Batch k-NN JOIN: for EVERY vector, its top-k cosine neighbors
+    (self excluded) — the all-queries-at-once form of knn_brute, the
+    workhorse of batch semantic retrieval — as a DISTRIBUTED tiled
+    block-grid GEMM with NOTHING transiting the driver (VERDICT r4 #1:
+    the one-block form it replaced toPandas()'d the whole corpus and
+    broadcast a dense matrix — a driver OOM at scale).
 
     Topology: both sides hash into blocks via pmod(xxhash64(id), B) —
     uniform for ANY id type (string doc-ids included; dense integer ids
     are just one special case). The query side replicates once per
     CORPUS block, the corpus side once per QUERY block, and a cogrouped
     applyInPandas computes the dense (query-block x corpus-block) cell
-    product with EXACTLY the one-block kernel's arithmetic (dim-order
-    accumulation, half-up round-6), emitting a per-cell top-k. One
+    product in numpy — dim-order accumulation (sequential index order
+    == DuckDB's list_cosine_similarity loop), half-up round-6 via
+    floor(x*1e6 + 0.5) — emitting a per-cell top-k. One
     row_number window over (cos desc, neighbor_id asc) merges the
     per-cell winners into the global top-k — the merge is associative,
     so cells never need to see each other. String neighbor ties break
@@ -673,10 +591,14 @@ def knn_join_tiled(
     that's infeasible, ann_join_hyperplane / ivf_join are the pruned
     forms; this is the exact form sized so memory never breaks first.)
 
-    Bit-parity with knn_join_blocked (and therefore with the DuckDB
-    oracle) is pinned in tests/test_similarity.py (including string-id
-    inputs and multiple block-count choices): same float64 sums, same
-    rounding, same (cos desc, id asc) tie-break.
+    Bit-parity with the pure-Python reference
+    tests/reference_oracle.knn_topk (same float64 sums in index order,
+    same rounding, same (cos desc, id asc) tie-break) is pinned in
+    tests/test_similarity.py and tests/test_hypothesis_kernels.py,
+    including string-id inputs and many block-count choices; the
+    sim_knn_join entry checks it against the DuckDB oracle.
+
+    Output: (id, neighbor_id, cos, rank) with rank 1..k.
     """
     import math
 
@@ -757,7 +679,7 @@ def knn_join_tiled(
         dim = a.shape[1]
         a_nrm_sq = np.zeros(len(a_ids))
         c_nrm_sq = np.zeros(len(c_ids))
-        for j in range(dim):  # index-order accumulation == one-block kernel
+        for j in range(dim):  # index-order accumulation (see docstring)
             a_nrm_sq += a[:, j] * a[:, j]
             c_nrm_sq += c_mat[:, j] * c_mat[:, j]
         a_nrm, c_nrm = np.sqrt(a_nrm_sq), np.sqrt(c_nrm_sq)
@@ -970,34 +892,16 @@ def pq_train(
     # dispatch as ivf_centroids_kmeans (docstring there) — ONE bounded
     # collect of the sampled training set feeds all m_sub numpy Lloyd
     # fits (sliced views, no per-subspace Spark job), vs m_sub
-    # concurrent k-means|| fits at ~10 job floors each. limit(bound+1)
-    # keeps the probe cheap on a huge corpus; sample_fraction=None
-    # (full-quality ask) or localFitMaxRows=0 forces the distributed
-    # path (forced_sweep.sh keeps it oracled). Centers differ between
-    # paths; artifact-is-truth absorbs it (recall receipted in
-    # PQ_RECALL.json).
-    bound = int(spark.conf.get("spark.poc.sim.localFitMaxRows", "65536"))
-    local_rows = None
-    if bound > 0 and sample_fraction is not None:
-        samp = df.select(vec.alias("v"))
-        if sample_fraction is not None:
-            samp = samp.sample(False, sample_fraction, seed)
-        head = samp.limit(bound + 1).collect()
-        if k <= len(head) <= bound:
-            import numpy as np
-
-            X = np.array([r["v"] for r in head], dtype=np.float64)
-            local_rows = [
-                (j, c, [float(x) for x in center])
-                for j in range(m_sub)
-                for c, center in enumerate(
-                    _lloyd_local(
-                        X[:, j * d_sub : (j + 1) * d_sub],
-                        k,
-                        n_iter=max(12, max_iter),
-                    )
-                )
-            ]
+    # concurrent k-means|| fits at ~10 job floors each.
+    # sample_fraction=None (full-quality ask) or localFitMaxRows=0
+    # forces the distributed path (forced_sweep.sh keeps it oracled).
+    # Centers differ between paths; artifact-is-truth absorbs it
+    # (recall receipted in PQ_RECALL.json).
+    X = None
+    if sample_fraction is not None:
+        X = _local_fit_sample(
+            df.select(vec.alias("v")).sample(False, sample_fraction, seed), k
+        )
 
     def _fit_sub(j: int) -> list[tuple[int, int, list[float]]]:
         data = df.select(
@@ -1013,8 +917,16 @@ def pq_train(
             for c, center in enumerate(model.clusterCenters())
         ]
 
-    if local_rows is not None:
-        rows = local_rows
+    if X is not None:
+        rows = [
+            (j, c, [float(x) for x in center])
+            for j in range(m_sub)
+            for c, center in enumerate(
+                _lloyd_local(
+                    X[:, j * d_sub : (j + 1) * d_sub], k, n_iter=max(12, max_iter)
+                )
+            )
+        ]
     else:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1308,10 +1220,11 @@ def _lloyd_local(X, k: int, n_iter: int = 12, seed: int = 42, n_init: int = 4):
 
     r15: the r14 strided-row init picked adjacent/duplicate-ish rows on
     clustered samples and cost ivfpq_residual recall 0.225 → 0.185
-    (VERDICT r14 what's-wrong #1); D² seeding + best-of-n_init
-    recovers it (PQ_RECALL.json receipt). Deterministic: fixed seeds
-    seed..seed+n_init-1, same X → same centers (fit==fit is
-    pytest-pinned). Cost is n_init small numpy fits on a bounded
+    (VERDICT r14 what's-wrong #1); D² seeding + best-of-n_init is the
+    fix for raw-vector fits (PQ_RECALL.json's 'pq' block), while the
+    residual train stays on k-means|| (sim_ivfpq_residual).
+    Deterministic: fixed seeds seed..seed+n_init-1, same X → same
+    centers (fit==fit is pytest-pinned). Cost is n_init small numpy fits on a bounded
     in-process sample — microseconds-to-milliseconds at the contract
     sizes, never a Spark job."""
     import numpy as np

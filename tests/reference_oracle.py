@@ -1,6 +1,7 @@
 """Test-only behavioral oracles, used purely for differential testing:
 the reference's flagship analysis ("who talks after whom", SURVEY.md
-§5.2 item 4) and, at the bottom, exact sequential BPE learning.
+§5.2 item 4) and, at the bottom, exact sequential BPE learning and the
+exact batch cosine kNN join.
 
 Semantics observed from /root/reference/backend/main.py:255-342,
 re-expressed as a staged pipeline of tiny helpers (structure gate →
@@ -12,6 +13,7 @@ loop; only the observable behavior (including its quirks) is shared.
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 # tokens that mark WhatsApp's "<media> omitted" lines in Hebrew exports;
 # the reference drops any line containing them (backend/main.py:289).
@@ -133,3 +135,38 @@ def bpe_merge_table(
                     out.append(x)
             segs[w] = out
     return merges
+
+
+def knn_topk(rows, k: int) -> dict:
+    """{(id, rank): (neighbor_id, cos)} — every vector's top-k cosine
+    neighbors, self excluded, in plain Python floats: each dot product
+    and squared norm sums in index order, cos = dot / (|a|·|b|) rounds
+    half-up to 6 places as floor(x*1e6 + 0.5) / 1e6, and neighbors rank
+    by (cos DESC, id ASC). The explicit loops are the point: `sum()`
+    may compensate (Python 3.12+), and that would not be the engine's
+    sequential float64 arithmetic. `rows` is [(id, vector)] with
+    non-zero vectors; ids are ints or strings (strings compare by code
+    point, as UTF-8 bytes do)."""
+    vecs = [(i, [float(x) for x in v]) for i, v in rows]
+    norms = []
+    for _, v in vecs:
+        acc = 0.0
+        for x in v:
+            acc += x * x
+        norms.append(math.sqrt(acc))
+    cos: dict = {}
+    for a, (ia, va) in enumerate(vecs):
+        for b in range(a + 1, len(vecs)):
+            ib, vb = vecs[b]
+            dot = 0.0
+            for x, y in zip(va, vb):
+                dot += x * y
+            c = math.floor(dot / (norms[a] * norms[b]) * 1e6 + 0.5) / 1e6
+            cos.setdefault(ia, []).append((ib, c))
+            cos.setdefault(ib, []).append((ia, c))
+    out = {}
+    for i, _ in vecs:
+        ranked = sorted(cos.get(i, []), key=lambda t: (-t[1], t[0]))[:k]
+        for rank, (nb, c) in enumerate(ranked, start=1):
+            out[(i, rank)] = (nb, c)
+    return out

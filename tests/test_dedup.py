@@ -349,7 +349,7 @@ def test_blocked_and_bitset_empty_inputs(spark):
         embedding_near_pairs_blocked,
         jaccard_bitset_pairs,
     )
-    from poc_spark.operators.similarity import knn_join_blocked
+    from poc_spark.operators.similarity import knn_join_tiled
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
     assert jaccard_bitset_pairs(empty_docs, threshold=0.9).count() == 0
@@ -359,7 +359,7 @@ def test_blocked_and_bitset_empty_inputs(spark):
 
     empty_vecs = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert embedding_near_pairs_blocked(empty_vecs).count() == 0
-    assert knn_join_blocked(empty_vecs).count() == 0
+    assert knn_join_tiled(empty_vecs).count() == 0
 
 
 def test_dedup_incremental_finds_cross_split_pairs(spark):

@@ -3,9 +3,10 @@
 - the bitset/prefix/all-pairs Jaccard triple must agree EXACTLY across
   the max_vocab cutover (the dictionary-probe fork at 63/64/65 distinct
   tokens is where a capacity off-by-one hides — r4 shipped one);
-- the tiled block-grid kNN join must be bit-identical to the one-block
-  kernel for adversarial shapes (empty, single-vector, more blocks than
-  rows, non-square grids).
+- the tiled block-grid kNN join must be bit-identical to the plain
+  Python reference (tests/reference_oracle.knn_topk) for adversarial
+  shapes (empty, single-vector, more blocks than rows, non-square
+  grids).
 """
 
 from __future__ import annotations
@@ -80,10 +81,11 @@ def test_jaccard_triple_agrees_across_vocab_cutover(
     corpus_blocks=st.integers(min_value=1, max_value=5),
     k=st.integers(min_value=1, max_value=4),
 )
-def test_tiled_knn_equals_one_block_adversarial_shapes(
+def test_tiled_knn_equals_reference_adversarial_shapes(
     spark, data, n_vecs, dim, query_blocks, corpus_blocks, k
 ):
-    from poc_spark.operators.similarity import knn_join_blocked, knn_join_tiled
+    from poc_spark.operators.similarity import knn_join_tiled
+    from tests.reference_oracle import knn_topk
 
     rows = [
         (
@@ -96,10 +98,7 @@ def test_tiled_knn_equals_one_block_adversarial_shapes(
         for i in range(n_vecs)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    one = {
-        (r["id"], r["rank"]): (r["neighbor_id"], r["cos"])
-        for r in knn_join_blocked(df, k=k).collect()
-    }
+    one = knn_topk(rows, k)
     tiled = {
         (r["id"], r["rank"]): (r["neighbor_id"], r["cos"])
         for r in knn_join_tiled(

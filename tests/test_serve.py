@@ -192,3 +192,48 @@ def test_served_json_matches_reference(spark, tmp_path_repo, force, lines, bound
     assert len(links) == len(body["links"])
     assert all(s < t for s, t in links)
     assert links == exp_links
+
+
+def test_line_order_survives_input_splits(spark, tmp_path_repo):
+    """read_chat_lines orders lines by monotonically_increasing_id, so
+    file order holds only while one file's splits land in partitions in
+    offset order. Read a generated export cut into many splits: line_id
+    order must be file order, and the served graph must equal the
+    reference loop over the file's lines."""
+    import random
+
+    import pyspark.sql.functions as F
+
+    from poc_spark.sources.chat import read_chat_lines
+
+    rng = random.Random(7)
+    senders = ["Alice", "Bob", "~ Carol X", "דנה", "🦆", "Eve"]
+    lines = [
+        f"[{1 + i // 400}.1.2023, 10:{i % 60:02d}:00] {rng.choice(senders)}: m{i}"
+        if i % 97 else f"noise line {i}"
+        for i in range(3000)
+    ]
+    path = tmp_path_repo / "split.txt"
+    path.write_text("".join(f"{line}\n" for line in lines), encoding="utf-8")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    try:
+        for split_bytes in (4096, 10007, 65536):
+            spark.conf.set(key, str(split_bytes))
+            raw = read_chat_lines(spark, str(path))
+            parts = raw.select(F.spark_partition_id()).distinct().count()
+            assert parts >= path.stat().st_size // split_bytes >= 1
+            assert parts > 1
+            got = [r["value"] for r in raw.orderBy("line_id").collect()]
+            assert got == lines
+            for args in ((None, None, None), ("2023-01-03", "2023-01-06", 700)):
+                body = analyze_network(spark, str(path), *args)
+                exp_nodes, exp_links = reference_network(lines, *args)
+                assert [n["id"] for n in body["nodes"]] == exp_nodes
+                links = {(l["source"], l["target"]): l["weight"] for l in body["links"]}
+                assert links == exp_links and len(links) == len(body["links"])
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
