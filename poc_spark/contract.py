@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from poc_spark.functions.chat_parse import normalize_sender
+from poc_spark.functions.chat_parse import PY_WHITESPACE, normalize_sender
 from poc_spark.operators.dedup import (
     duplicated_ngram_spans,
     embedding_near_pairs,
@@ -322,18 +322,23 @@ def op_parse_regex(spark, sf_dir):
     )
 
 
+# the str.isspace() set as a DuckDB string expression (printable SQL)
+_PY_WHITESPACE_SQL = " || ".join(f"chr({ord(c)})" for c in PY_WHITESPACE)
+
+
 @register(
     "op_norm_sender",
-    """
+    f"""
     SELECT p_partkey,
-           trim(replace(regexp_replace(p_name, '^~+|~+$', ''), ' ', ''))
+           trim(replace(trim(p_name, '~'), ' ', ''), {_PY_WHITESPACE_SQL})
              AS norm_name
     FROM part
     """,
 )
 def op_norm_sender(spark, sf_dir):
     """OP-NORM-SENDER applied to part names: strip edge '~', delete ALL
-    spaces, trim (backend/main.py:310)."""
+    spaces, strip every str.isspace() character from the ends
+    (backend/main.py:310)."""
     return _t(spark, sf_dir, "part").select(
         "p_partkey", normalize_sender(F.col("p_name")).alias("norm_name")
     )

@@ -2,6 +2,10 @@
 
 Every function returns a Column (pure expression builders — everything
 stays inside whole-stage codegen; no Python UDFs anywhere on this path).
+The structural steps are plain string expressions (instr, substr,
+substring_index, btrim, replace), not regex splits: Spark's `split`
+hands its pattern to Java's String.split, which compiles it on every
+row unless the pattern is one literal character, and `] ` is two.
 
 Reference semantics reproduced exactly (citations into /root/reference):
   - media-omitted filter: skip lines containing Hebrew "הושמטה"/"הושמט"
@@ -14,7 +18,8 @@ Reference semantics reproduced exactly (citations into /root/reference):
   - tolerant date parse: %d.%m.%Y with non-zero-padded day/month; parse
     failure skips the row, never fails the job (backend/main.py:298-302).
   - sender normalization: text before first ":", strip leading/trailing
-    "~", delete ALL spaces (interior included), strip whitespace
+    "~", delete ALL spaces (interior included), strip whitespace — every
+    character Python's str.isspace() accepts, not only ASCII
     (backend/main.py:310).
   - regex message parse: \\[([^\\]]+)\\]\\s*([^:]+):\\s*(.+)
     (backend/main.py:347).
@@ -25,11 +30,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# identical to the reference regex (backend/main.py:347); works verbatim
-# in Spark's regexp_extract (Java regex superset covers it).
+# identical to the reference regex (backend/main.py:347). Python's \s
+# and `.` are Unicode-aware and Java's are not, so the ETL parse
+# (operators/etl.py) hands Java a respelled copy.
 CHAT_LINE_PATTERN = r"\[([^\]]+)\]\s*([^:]+):\s*(.+)"
 
 OMITTED_TOKENS = ("הושמטה", "הושמט")
+
+# every character for which Python's str.isspace() is true — what the
+# reference's .strip() and re's \s remove. Spark's trim() removes only
+# ASCII space, and Java's \s matches only ASCII whitespace.
+PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
+)
 
 
 def is_media_omitted(line: Column) -> Column:
@@ -46,28 +61,27 @@ def is_message_format(line: Column) -> Column:
     return line.startswith("[") & line.contains("]") & line.contains(": ")
 
 
-def _after_first_bracket(line: Column) -> Column:
-    """Text after the FIRST `] ` — Python `line.split("] ", 1)[1]`.
+def _after_first(text: Column, sep: str) -> Column:
+    """Text after the FIRST `sep` — Python `text.split(sep, 1)[1]` —
+    or null when `sep` is absent (instr is 0). Null, not an error: the
+    reference's per-line catch-all skips such rows (the unpack raises,
+    backend/main.py:325-327)."""
+    at = F.instr(text, sep)
+    return F.when(at > 0, F.substr(text, at + len(sep)))
 
-    Null (not error) when the line has no "] ": the reference's
-    per-line catch-all skips such rows (the unpack raises,
-    backend/main.py:325-327); under ANSI mode getItem(1) would CRASH
-    the job, so this must be the null-tolerant get()."""
-    return F.get(F.split(line, r"\] ", 2), 1)
 
-
-def _before_first_bracket(line: Column) -> Column:
-    """Text before the FIRST `] ` — Python `line.split("] ", 1)[0]`."""
-    return F.split(line, r"\] ", 2).getItem(0)
+def stamp(line: Column) -> Column:
+    """`[7.10.2023, 19:43:25] x: y` → `7.10.2023, 19:43:25`: the text
+    before the first `] ` (the whole line when there is none, as
+    Python's split gives), edge `[`/`]` stripped — Python strip("[]")
+    removes that char SET from the ends, as btrim does."""
+    return F.btrim(F.substring_index(line, "] ", 1), F.lit("[]"))
 
 
 def date_string(line: Column) -> Column:
-    """OP-PARSE-SPLIT: `[7.10.2023, 19:43:25] x: y` → `7.10.2023`.
-    Python strip("[]") removes the char-set only from the ends."""
-    stripped = F.regexp_replace(
-        _before_first_bracket(line), r"^[\[\]]+|[\[\]]+$", ""
-    )
-    return F.split(stripped, ",").getItem(0)
+    """OP-PARSE-SPLIT: `[7.10.2023, 19:43:25] x: y` → `7.10.2023`, the
+    stamp's text before the first `,`."""
+    return F.substring_index(stamp(line), ",", 1)
 
 
 def parse_msg_date(date_str: Column) -> Column:
@@ -76,32 +90,31 @@ def parse_msg_date(date_str: Column) -> Column:
 
 
 def normalize_sender(text_before_colon: Column) -> Column:
-    """OP-NORM-SENDER: strip edge '~', delete every space, trim whitespace.
+    """OP-NORM-SENDER: strip edge '~', delete every space, strip whitespace.
 
-    Python `.strip('~')` strips a *set* of chars from both ends →
-    regexp anchors; `.replace(' ', '')` removes interior spaces too
-    ("~ John Doe" → "JohnDoe").
+    Python `.strip('~')` strips a *set* of chars from both ends, as
+    btrim does; `.replace(' ', '')` removes interior spaces too
+    ("~ John Doe" → "JohnDoe"); `.strip()` removes every str.isspace()
+    character from the ends (tab, NBSP, ideographic space, ...).
     """
-    no_tilde = F.regexp_replace(text_before_colon, r"^~+|~+$", "")
-    no_spaces = F.regexp_replace(no_tilde, " ", "")
-    return F.trim(no_spaces)
+    no_tilde = F.btrim(text_before_colon, F.lit("~"))
+    no_spaces = F.replace(no_tilde, F.lit(" "), F.lit(""))
+    return F.btrim(no_spaces, F.lit(PY_WHITESPACE))
 
 
 def extract_sender(line: Column) -> Column:
     """Sender from a format-valid line: message-part text before the first
     `:`, normalized (backend/main.py:310)."""
-    return normalize_sender(F.substring_index(_after_first_bracket(line), ":", 1))
+    return normalize_sender(F.substring_index(_after_first(line, "] "), ":", 1))
 
 
 def extract_message_text(line: Column) -> Column:
     """Message text after `sender:`, leading whitespace swallowed (the
-    reference regex group 3 behind `:\\s*`)."""
-    msg = _after_first_bracket(line)
-    # get(): a message part without any ":" yields null, not an
-    # ANSI index error (the ": " the format predicate saw may sit in
-    # the timestamp part)
-    after_colon = F.get(F.split(msg, ":", 2), 1)
-    return F.regexp_replace(after_colon, r"^\s+", "")
+    reference regex group 3 behind `:\\s*`, Python's Unicode \\s). Null
+    when the message part has no ":" (the ": " the format predicate saw
+    may sit in the timestamp part)."""
+    after_colon = _after_first(_after_first(line, "] "), ":")
+    return F.ltrim(after_colon, F.lit(PY_WHITESPACE))
 
 
 def parse_chat_lines(raw_chat: DataFrame) -> DataFrame:

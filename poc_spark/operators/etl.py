@@ -3,7 +3,10 @@
 Reference: POST /upload-chats (/root/reference/backend/main.py:349-395):
   - each line is str.strip()ed, then matched ANCHORED at the start
     against \\[([^\\]]+)\\]\\s*([^:]+):\\s*(.+)  (backend/main.py:347);
-    Python `pattern.match` anchors — the Spark regex gets a ^ prefix;
+    Python `pattern.match` anchors — the Spark regex gets a ^ prefix.
+    Python's strip(), \\s and `.` are Unicode-aware; the Spark forms
+    use the same 29-character whitespace set (chat_parse.PY_WHITESPACE)
+    and Java's UNIX_LINES flag, so they accept the same lines;
   - the FIRST matched line's sender (group 2, raw, NOT normalized)
     becomes `group_name`; that line is skipped (backend/main.py:373-376);
   - every later line whose sender == group_name is skipped
@@ -23,9 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from poc_spark.functions.chat_parse import CHAT_LINE_PATTERN
+from poc_spark.functions.chat_parse import CHAT_LINE_PATTERN, PY_WHITESPACE
 
-_ANCHORED = "^" + CHAT_LINE_PATTERN
+# the reference regex, anchored, with Python's meaning in Java: Python's
+# \s is every str.isspace() character (Java's is ASCII only), and
+# Python's `.` stops only at \n — Java's also stops at \r, \u0085,
+# \u2028 and \u2029 unless UNIX_LINES, (?d), is on.
+_WS = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in PY_WHITESPACE) + "]"
+_ANCHORED = "(?d)^" + CHAT_LINE_PATTERN.replace(r"\s", _WS)
 
 
 def parse_chat_table(raw_chat: DataFrame) -> DataFrame:
@@ -35,7 +43,7 @@ def parse_chat_table(raw_chat: DataFrame) -> DataFrame:
     date_time is the raw "7.10.2023, 19:43:25" string (reference keeps it
     untyped); use `typed_messages` for the proper TimestampType column.
     """
-    trimmed = F.regexp_replace("value", r"^\s+|\s+$", "")
+    trimmed = F.btrim("value", F.lit(PY_WHITESPACE))
     parsed = raw_chat.select(
         "file_path",
         "line_id",

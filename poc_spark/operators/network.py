@@ -40,7 +40,10 @@ giant totally-ordered stream, the chain SELF-DISPATCHES: when no
 partition cols are given and Catalyst's size estimate crosses the
 threshold (plans/dispatch.py, default ≈1M rows), _chain routes to the
 exactly-equal range-chunked chain in plans/chunked_lag.py (boundary
-stitching, SURVEY.md §4.3) instead of a single-partition window;
+stitching, SURVEY.md §4.3) instead of a single-partition window. On a
+chat export the chunks are the text scan's input splits, read off
+line_id's upper bits (sources/chat.py marks the column), so the chain
+runs no quantile pass; other order keys get quantile chunks.
 ordered_limit makes the same decision for the limit alone. Equality
 of the two paths is pinned by tests/test_chunked_lag.py,
 tests/test_dispatch.py and tests/test_network.py.

@@ -13,9 +13,13 @@ edge aggregate on top:
      with an eager localCheckpoint — every later pass reads that
      working set, so the source (a chat export's text) is scanned and
      parsed exactly once;
-  2. range-chunk it: one approxQuantile pass gives num_chunks-1
-     approximate boundaries of the leading order key, and every row is
-     bucketed by a literal when-chain (no shuffle of its own);
+  2. range-chunk it. A leading order key that its source marks as
+     split-ordered (a chat export's line_id, sources/chat.py) is its
+     own partition: the chunk is the input-split index in the key's
+     upper bits, coarsened by integer division to at most num_chunks
+     chunks — no job. Any other key takes one approxQuantile pass for
+     num_chunks-1 approximate boundaries, and every row is bucketed by
+     a literal when-chain (no shuffle of its own);
   3. collect each present chunk's count, first value and last value in
      one job (≤ num_chunks rows);
   4. on the driver, walk the cumulative counts against the limit: the
@@ -30,9 +34,12 @@ edge aggregate on top:
 
 Equality with the global window (row_number() <= limit, then lag) is
 exact: the range partition respects the total order, and a limit keeps
-a prefix of it, so each kept row's predecessor is kept too. Pinned by
-tests/test_chunked_lag.py. chunked_ordered_limit (the limit alone)
-shares steps 2 and 4.
+a prefix of it, so each kept row's predecessor is kept too. Any
+monotone function of the leading key is such a partition, so the
+split-ordered chunks are exact for every input; the mark only promises
+they are balanced. Pinned by tests/test_chunked_lag.py.
+chunked_ordered_limit (the limit alone) shares the quantile chunks and
+step 4.
 """
 
 from __future__ import annotations
@@ -42,6 +49,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from poc_spark.sources.chat import SPLIT_ORDERED, SPLIT_SHIFT
 
 
 def _order_struct(order_cols: Sequence[str]):
@@ -89,6 +98,20 @@ def _range_chunks(
     return keyed.withColumn("_chunk", chunk)
 
 
+def _split_chunks(df: DataFrame, key: str, num_chunks: int) -> DataFrame:
+    """df + `_chunk` for a SPLIT_ORDERED key, from the input-split index
+    in the key's upper bits — a range partition of the key that the
+    scan already balanced. split * num_chunks // splits (df's
+    partitions) gives each split its own chunk up to num_chunks splits
+    and folds runs of neighbouring splits beyond; `least` caps the id
+    for a df whose partitions are not the scan's. Every step is
+    monotone in the key."""
+    n_splits = df._jdf.rdd().getNumPartitions()
+    split = F.shiftright(F.col(key), SPLIT_SHIFT)
+    chunk = F.least(F.floor(split * num_chunks / n_splits), F.lit(num_chunks - 1))
+    return df.withColumn("_chunk", chunk)
+
+
 def _limit_walk(
     counts: dict[int, int], n: int | None
 ) -> tuple[list[int], int | None, int]:
@@ -116,11 +139,14 @@ def _limit_walk(
 
 def _narrow_working_set(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """df projected to `cols`, materialized once (eager localCheckpoint):
-    the chunked chain runs three actions over its input (the quantile
-    pass, the per-chunk stats, the final job), and without the barrier
-    each would re-derive the input from its source — for a chat export,
-    re-scan and re-parse the text. Only the narrow projection is kept,
+    the chunked chain runs two or three actions over its input (the
+    quantile pass unless the key is split-ordered, the per-chunk stats,
+    the final job), and without the barrier each would re-derive the
+    input from its source — for a chat export, re-scan and re-parse the
+    text; two parses of a chat export cost more than one parse plus the
+    checkpoint's writes and reads. Only the narrow projection is kept,
     so the working set is a few columns wide, not the parsed table.
+    Column metadata (the SPLIT_ORDERED mark) survives the checkpoint.
 
     localCheckpoint, NOT .cache(): .cache() registers the plan in the
     session CacheManager, whose entries never free themselves (VERDICT
@@ -159,11 +185,17 @@ def chunked_lag_pairs(
         [StructField("prev", value_type, True), StructField("cur", value_type, True)]
     )
 
-    # 2. shared range chunking (approx bounds + strict-> bucketing)
-    bucketed = _range_chunks(narrow, order_cols[0], num_chunks)
+    # 2. range chunks: the source's splits for a split-ordered key,
+    # else approx bounds + strict-> bucketing
+    key = order_cols[0]
+    if narrow.schema[key].metadata.get(SPLIT_ORDERED):
+        bucketed = _split_chunks(narrow, key, num_chunks)
+    else:
+        bucketed = _range_chunks(narrow, key, num_chunks)
 
     # 3. one job: each present chunk's count, first and last value.
-    # An approx-quantile chunk can come out empty; it is simply absent.
+    # A chunk can come out empty (an approx-quantile chunk, or a split
+    # whose lines all failed the filters); it is simply absent.
     ord_s = _order_struct(order_cols)
     stats = sorted(
         bucketed.groupBy("_chunk")

@@ -2,9 +2,14 @@
 
 The reference's flagship semantics need a TOTAL order (one chat
 stream); a global `Window.orderBy(...)` expresses it but collapses to a
-single partition — fine below ~1M rows (the chunked form costs 2 extra
-fixed jobs and benches slower there), hostile at 100 TB. CLAUDE.md
-policy: global-window forms are the default below ~1M rows; the chunked
+single partition — fine below ~1M rows, hostile at 100 TB. Below it the
+chunked form benches slower: it runs fixed planning jobs of its own,
+the narrow checkpoint and the per-chunk stats (3 jobs), plus an
+approxQuantile pass (2 more) unless the order key is split-ordered —
+a served chat request takes 6 jobs chunked against 2 global. The
+threshold was set against the quantile chain and has not been
+re-measured for the split-ordered one. Project policy: global-window
+forms are the default below ~1M rows; the chunked
 scale paths (plans/chunked_lag.py) take over above.
 
 This module makes the operators enforce that policy automatically:

@@ -21,12 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poc_spark.functions.chat_parse import (
-    _after_first_bracket,
-    _before_first_bracket,
     extract_message_text,
+    extract_sender,
     is_media_omitted,
     is_message_format,
-    normalize_sender,
+    stamp,
 )
 
 
@@ -53,15 +52,12 @@ def parse_chat_stream(raw: DataFrame) -> DataFrame:
     """Streaming twin of parse_chat_lines: same filters/normalization,
     full timestamp extracted for event time (d.M.yyyy, HH:mm:ss)."""
     line = F.col("value")
-    stamp = F.regexp_replace(_before_first_bracket(line), r"^[\[\]]+|[\[\]]+$", "")
     return (
         raw.filter(~is_media_omitted(line))
         .filter(is_message_format(line))
-        .withColumn("ts", F.try_to_timestamp(stamp, F.lit("d.M.yyyy, HH:mm:ss")))
+        .withColumn("ts", F.try_to_timestamp(stamp(line), F.lit("d.M.yyyy, HH:mm:ss")))
         .filter(F.col("ts").isNotNull())
-        .withColumn(
-            "sender", normalize_sender(F.substring_index(_after_first_bracket(line), ":", 1))
-        )
+        .withColumn("sender", extract_sender(line))
         .filter(F.length("sender") > 0)
         .withColumn("message", extract_message_text(line))
         .select("file_path", "ts", "sender", "message")

@@ -148,3 +148,107 @@ def test_limited_pairs_equal_global_form(spark, rows, num_chunks, value_col, mod
     }[mode]
     got = _pairs(chunked_lag_pairs(df, value_col, order, num_chunks, n))
     assert got == _global_pairs(df, value_col, order, n)
+
+
+# --- split-ordered chunks: a chat export's line_id --------------------------
+
+
+def test_split_ordered_chunks_equal_global(spark, tmp_path_repo, monkeypatch):
+    """read_chat_lines marks line_id as split-ordered, so the chunked
+    chain takes its chunks from the input splits: no quantile pass, at
+    most num_chunks chunks (the 2048-byte read has more splits than
+    the chain's 32), and under forced chunked the served aggregate
+    equals the global window for every kind of limit and date range."""
+    import random
+
+    from poc_spark.functions.chat_parse import parse_chat_lines
+    from poc_spark.operators.network import interaction_pairs
+    from poc_spark.plans import chunked_lag
+    from poc_spark.plans.dispatch import CHUNK_FORCE_KEY
+    from poc_spark.sources.chat import read_chat_lines
+
+    calls = Counter()
+    chunk_ids = []
+    range_chunks, split_chunks = chunked_lag._range_chunks, chunked_lag._split_chunks
+
+    def spy_range(*a):
+        calls["quantile"] += 1
+        return range_chunks(*a)
+
+    def spy_split(df, key, num_chunks):
+        out = split_chunks(df, key, num_chunks)
+        ids = sorted(r["_chunk"] for r in out.select("_chunk").distinct().collect())
+        chunk_ids.append((df.rdd.getNumPartitions(), num_chunks, ids))
+        return out
+
+    monkeypatch.setattr(chunked_lag, "_range_chunks", spy_range)
+    monkeypatch.setattr(chunked_lag, "_split_chunks", spy_split)
+
+    rng = random.Random(11)
+    senders = ["Alice", "Bob", "~ Carol X", "דנה", "Eve"]
+    lines = [
+        f"[{1 + i // 300}.1.2023, 10:{i % 60:02d}:00] {rng.choice(senders)}: m{i}"
+        if i % 89 else f"noise {i}"
+        for i in range(3000)
+    ]
+    path = tmp_path_repo / "aligned.txt"
+    path.write_text("".join(f"{line}\n" for line in lines), encoding="utf-8")
+    shapes = [
+        (s, e, n)
+        for s, e in ((None, None), ("2023-01-03", "2023-01-07"))
+        for n in (None, 0, 1, -1, 1234, 10**6)
+    ]
+    key = "spark.sql.files.maxPartitionBytes"
+    try:
+        spark.conf.set(CHUNK_FORCE_KEY, "false")
+        msgs = parse_chat_lines(read_chat_lines(spark, str(path)))
+        expected = {a: Counter(map(tuple, interaction_pairs(msgs, *a).collect())) for a in shapes}
+        spark.conf.set(CHUNK_FORCE_KEY, "true")
+        # every shape on 6 splits; a few on 50 tiny splits (slow per task)
+        for split_bytes, todo in ((16384, shapes), (2048, shapes[0:12:4] + shapes[10:11])):
+            spark.conf.set(key, str(split_bytes))
+            msgs = parse_chat_lines(read_chat_lines(spark, str(path)))
+            for a in todo:
+                got = Counter(map(tuple, interaction_pairs(msgs, *a).collect()))
+                assert got == expected[a], (split_bytes, a)
+            # the chain's own num_chunks, and a small one that folds splits
+            raw_splits = read_chat_lines(spark, str(path)).rdd.getNumPartitions()
+            glob = _global_pairs(msgs, "sender", ("line_id",), 700)
+            assert _pairs(chunked_lag_pairs(msgs, "sender", ("line_id",), 4, 700)) == glob
+            # every split holds messages, so every chunk is present;
+            # past 4 splits, neighbouring splits fold into one chunk
+            assert chunk_ids[-1] == (raw_splits, 4, list(range(min(raw_splits, 4))))
+    finally:
+        spark.conf.unset(CHUNK_FORCE_KEY)
+        spark.conf.unset(key)
+    assert calls["quantile"] == 0
+    assert all(ids and ids[-1] < k for _, k, ids in chunk_ids)
+    # the 2048-byte read has more splits than the served chain's 32 chunks
+    assert any(n > 32 and ids == list(range(32)) for n, k, ids in chunk_ids if k == 32)
+
+
+def test_unmarked_keys_take_the_quantile_pass(spark, sf_dir, monkeypatch):
+    """Only a split-ordered key skips approxQuantile: in-memory chat
+    lines and a parquet table's keys keep the quantile chunks."""
+    from poc_spark.functions.chat_parse import parse_chat_lines
+    from poc_spark.plans import chunked_lag
+    from poc_spark.sources.catalog import load_table
+    from poc_spark.sources.chat import chat_lines_from_strings
+
+    calls = []
+    range_chunks = chunked_lag._range_chunks
+
+    def spy_range(df, key, num_chunks):
+        calls.append(key)
+        return range_chunks(df, key, num_chunks)
+
+    monkeypatch.setattr(chunked_lag, "_range_chunks", spy_range)
+    lines = [f"[{1 + i % 9}.1.2023, 10:00:00] {'AB'[i % 2]}: m" for i in range(50)]
+    msgs = parse_chat_lines(chat_lines_from_strings(spark, lines))
+    events = load_table(spark, sf_dir, "events")
+    assert _pairs(chunked_lag_pairs(msgs, "sender", ("line_id",), 4)) == _global_pairs(
+        msgs, "sender", ("line_id",)
+    )
+    chunked_lag_pairs(events, "user_id", ("ts", "event_id"), 4).collect()
+    chunked_lag_pairs(events, "user_id", ("event_id",), 4, 10).collect()
+    assert calls == ["line_id", "ts", "event_id"]

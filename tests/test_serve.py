@@ -100,17 +100,18 @@ _RANGE_LIMIT = ("2023-10-02", "2023-10-04", 2)
         pytest.param(_UNFILTERED, "false", 2, id="unfiltered"),
         pytest.param(("2023-10-02", "2023-10-04", None), "false", 2, id="range"),
         pytest.param(_RANGE_LIMIT, "false", 2, id="range_limit"),
-        pytest.param(_UNFILTERED, "true", 8, id="forced_chunked-unfiltered"),
-        pytest.param(_RANGE_LIMIT, "true", 8, id="forced_chunked-range_limit"),
+        pytest.param(_UNFILTERED, "true", 6, id="forced_chunked-unfiltered"),
+        pytest.param(_RANGE_LIMIT, "true", 6, id="forced_chunked-range_limit"),
     ],
 )
 def test_analyze_network_job_count(spark, tmp_path_repo, args, force, max_jobs):
     """The request collects ONE aggregate: on the global path AQE runs
     it as at most 2 jobs (the window's exchange, then the aggregate),
     where separate node and edge collects ran 4. The chunked path,
-    with or without a limit, runs 8: the narrow materialization, the
-    quantile pass (2), the per-chunk stats (2), the final aggregate
-    (3)."""
+    with or without a limit, runs 6: the narrow materialization, the
+    per-chunk stats (2), the final aggregate (3). The export's line_id
+    is split-ordered, so the chunks are its input splits and the
+    quantile pass (2 more jobs) is gone."""
     path = tmp_path_repo / "jobs.txt"
     path.write_text(_RANGE_CHAT, encoding="utf-8")
     sc = spark.sparkContext
