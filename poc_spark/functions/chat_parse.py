@@ -15,8 +15,9 @@ Reference semantics reproduced exactly (citations into /root/reference):
   - structural split: text before FIRST "] " → date part, strip "[]" from
     the ends, take text before first "," as the date string
     (backend/main.py:294-295).
-  - tolerant date parse: %d.%m.%Y with non-zero-padded day/month; parse
-    failure skips the row, never fails the job (backend/main.py:298-302).
+  - tolerant date parse: strptime's %d.%m.%Y, whose day may be
+    unpadded, zero-padded or space-padded (" 1"); parse failure skips
+    the row, never fails the job (backend/main.py:298-302).
   - sender normalization: text before first ":", strip leading/trailing
     "~", delete ALL spaces (interior included), strip whitespace — every
     character Python's str.isspace() accepts, not only ASCII
@@ -36,6 +37,17 @@ from pyspark.sql import functions as F
 CHAT_LINE_PATTERN = r"\[([^\]]+)\]\s*([^:]+):\s*(.+)"
 
 OMITTED_TOKENS = ("הושמטה", "הושמט")
+
+# the day strptime("%d.%m.%Y") reads, at the stamp's head up to its
+# first `,` or its end: _strptime's regexes for %d (unpadded, zero- or
+# space-padded), %m and %Y (exactly four digits), respelled with ASCII
+# digits; year 0000 is out of datetime's range. Spark's d.M.yyyy alone
+# takes no space pad and does take "001" and year 0000. rlike compiles
+# a literal pattern once per task.
+_PY_DATE_HEAD = (
+    r"^(?:3[01]|[12][0-9]|0[1-9]|[1-9]| [1-9])\.(?:1[0-2]|0[1-9]|[1-9])\."
+    r"(?!0000)[0-9]{4}(?:,|\z)"
+)
 
 # every character for which Python's str.isspace() is true — what the
 # reference's .strip() and re's \s remove. Spark's trim() removes only
@@ -74,8 +86,16 @@ def stamp(line: Column) -> Column:
     """`[7.10.2023, 19:43:25] x: y` → `7.10.2023, 19:43:25`: the text
     before the first `] ` (the whole line when there is none, as
     Python's split gives), edge `[`/`]` stripped — Python strip("[]")
-    removes that char SET from the ends, as btrim does."""
-    return F.btrim(F.substring_index(line, "] ", 1), F.lit("[]"))
+    removes that char SET from the ends, as btrim does.
+
+    The one date expression of both chat parses (the graph's
+    `date_string`, the stream's full timestamp): null unless the text
+    before its first `,` is a day strptime("%d.%m.%Y") can read
+    (_PY_DATE_HEAD), with a space-padded day's pad dropped, since
+    Spark's `d` takes no pad. Calendar checks (31.2.) stay with Spark's
+    strict parser."""
+    text = F.btrim(F.substring_index(line, "] ", 1), F.lit("[]"))
+    return F.when(text.rlike(_PY_DATE_HEAD), F.ltrim(text))
 
 
 def date_string(line: Column) -> Column:
@@ -85,7 +105,9 @@ def date_string(line: Column) -> Column:
 
 
 def parse_msg_date(date_str: Column) -> Column:
-    """OP-PARSE-DATE: tolerant d.M.yyyy (no zero padding); null on failure."""
+    """OP-PARSE-DATE: tolerant d.M.yyyy (day and month padded or not);
+    null on failure. Takes `date_string`, which has checked the day's
+    shape and dropped a space pad."""
     return F.try_to_timestamp(date_str, F.lit("d.M.yyyy")).cast("date")
 
 

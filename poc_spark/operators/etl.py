@@ -19,6 +19,11 @@ Spark-first notes: the reference does one INSERT round-trip per row; the
 engine writes set-based partition batches. The group-name "argmin by
 position" is a running `first()` window per file — per-file windows, so
 a directory of many chat files parallelizes with no global shuffle.
+The served upload (serve.upload_chats_response) caches nothing: it
+writes with `write_messages` once and reads the response's group name
+and row count from an Observation on that write. `append_messages`
+(write, then a second count job) stays for the benchmark's per-layer
+probe, which perfbench/workloads.py times through it.
 """
 
 from __future__ import annotations

@@ -7,6 +7,14 @@ single pair aggregate (operators.network.interaction_pairs) whose
 (s, s) rows carry the senders that formed no link; the driver splits
 the collected rows into nodes and links.
 
+The upload is one pass too: no cache, no aggregate job. The parquet
+write carries the response's group name and row count as observed
+metrics (DataFrame.observe with an Observation), read once the write
+has run.
+
+`network_response` (two collects) stays for the benchmark's per-layer
+probe: perfbench/workloads.py times `interaction_graph` through it.
+
 Reference responses reproduced:
   GET /analyze/network/{filename} → {"nodes": [{"id": ...}],
       "links": [{"source","target","weight"}]}   (backend/main.py:328-338)
@@ -20,11 +28,11 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from poc_spark.functions.chat_parse import parse_chat_lines
-from poc_spark.operators.etl import parse_chat_table
+from poc_spark.operators.etl import parse_chat_table, write_messages
 from poc_spark.operators.network import interaction_pairs
 from poc_spark.operators.text import top_k_words, word_freq
 from poc_spark.sources.chat import read_chat_lines
@@ -85,28 +93,27 @@ def analyze_network(
 
 def upload_chats_response(spark: SparkSession, path: str, table_path: str) -> dict:
     """POST /upload-chats end to end: parse → group-name exclusion →
-    append sink → counts (backend/main.py:349-395)."""
-    from poc_spark.operators.etl import write_messages
-
-    # cache: the parsed table feeds both the counts and the append sink.
-    # try/finally unpersist — a serving process handles many uploads
-    # per session, and CacheManager entries never free themselves
-    # (VERDICT r4 #7).
-    msgs = parse_chat_table(read_chat_lines(spark, path)).cache()
-    try:
-        # group name and row count in ONE aggregate, not a limit(1)
-        # take: a take scans the cached partitions in scale-up rounds,
-        # one job each, and the per-file window puts the rows in the
-        # shuffle partition the file's path hashes to — so a take's
-        # job count would depend on where the file lives.
-        group, inserted = msgs.agg(
-            F.min_by("group_name", F.struct("file_path", "line_id")),
-            F.count(F.lit(1)),
-        ).first()
-        write_messages(msgs, table_path)
-        return {"status": "success", "inserted_rows": inserted, "group_name": group}
-    finally:
-        msgs.unpersist()
+    append sink → counts (backend/main.py:349-395), in one pass of 2
+    jobs: the per-file window's exchange, then the parquet write. The
+    group name and row count ride on the write as observed metrics. The
+    group name is the first kept row's in (file_path, line_id) order, a
+    min_by: a take's job count would depend on the shuffle partition
+    the file's path hashes to. An export with no message line returns
+    0 rows under group name None. A failing write raises before the
+    metrics are read."""
+    obs = Observation()
+    msgs = parse_chat_table(read_chat_lines(spark, path)).observe(
+        obs,
+        F.min_by("group_name", F.struct("file_path", "line_id")).alias("group_name"),
+        F.count(F.lit(1)).alias("inserted_rows"),
+    )
+    write_messages(msgs, table_path)
+    metrics = obs.get
+    return {
+        "status": "success",
+        "inserted_rows": metrics["inserted_rows"],
+        "group_name": metrics["group_name"],
+    }
 
 
 def analyze_words_response(messages: DataFrame, k: int = 10) -> dict:

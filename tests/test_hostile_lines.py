@@ -1,5 +1,6 @@
 """Hostile-line differentials for both chat parses: lines built from
-brackets, `] ` at either edge, runs of `~`, `:` and `,`, every
+brackets, `] ` at either edge, noise at the stamp's leading edge
+(a space-padded day), runs of `~`, `:` and `,`, every
 character Python's str.isspace() accepts (Spark's trim and Java's \\s
 know only ASCII), Java-only line terminators and the Hebrew omitted
 marks. The served graph must equal the reference oracle on both
@@ -35,12 +36,15 @@ _piece = st.sampled_from(
 _noise = st.lists(_piece, max_size=4).map("".join)
 _stamp = st.sampled_from(["1.1.2023", "2.1.2023, 10:00:00", "3.1.2023,x", "31.2.2023", "x"])
 _sender = st.sampled_from(["A", "B", "~C~", " D ", "דני", "x y"])
+# noise at the stamp's leading edge, inside the bracket: strptime's %d
+# takes one space pad (" 1.1.2023") and Spark's d takes none
+_edge = st.one_of(_noise, st.sampled_from([" ", "  ", "0", "00", " 0"]))
 _line = st.one_of(
     st.builds(
-        lambda lead, stamp, mid, pre, sender, post, msg:
-            f"{lead}[{stamp}{mid}] {pre}{sender}{post}: {msg}",
+        lambda lead, edge, stamp, mid, pre, sender, post, msg:
+            f"{lead}[{edge}{stamp}{mid}] {pre}{sender}{post}: {msg}",
         st.sampled_from(["", "[", "] ", " ", "\xa0", "\u3000"]),
-        _stamp, _noise, _noise, _sender, _noise, _noise,
+        _edge, _stamp, _noise, _noise, _sender, _noise, _noise,
     ),
     _noise,
 )
@@ -67,6 +71,12 @@ def _read_like_reference(path) -> list[str]:
 )
 @example(
     lines=["[1.1.2023] \xa0A\u3000: m", "[2.1.2023] ~B\u2028~: m", "[3.1.2023] A: m"],
+    bounds=(None, None),
+    limit=None,
+)
+@example(
+    lines=["[ 1.1.2023, 10:00] A: m", "[ 2.1.2023, 10:00] B: m", "[  3.1.2023] A: m",
+           "[ 3.1.2023] C: m", "[01.1.2023] D: m", "[001.1.2023] A: m"],
     bounds=(None, None),
     limit=None,
 )

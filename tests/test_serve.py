@@ -51,11 +51,13 @@ def test_upload_chats_response(spark, tmp_path_repo):
 
 
 def test_upload_job_count_is_steady(spark, tmp_path_repo):
-    """POST /upload-chats runs the same number of jobs on every call:
-    three calls on one file, and one call on each of five copies at
-    other paths. The per-file window puts a file's rows in the shuffle
-    partition its path hashes to, so a take-based group probe would run
-    one to three scan-up jobs depending on the path."""
+    """POST /upload-chats runs 2 jobs on every call (the per-file
+    window's exchange, then the parquet write, which carries the group
+    name and row count as observed metrics): three calls on one file,
+    and one call on each of five copies at other paths. The per-file
+    window puts a file's rows in the shuffle partition its path hashes
+    to, so a take-based group probe would run one to three scan-up jobs
+    depending on the path."""
     sc = spark.sparkContext
     table = str(tmp_path_repo / "tbl")
     paths = [_write(tmp_path_repo)] * 3 + [
@@ -70,9 +72,49 @@ def test_upload_job_count_is_steady(spark, tmp_path_repo):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-    assert len(set(counts)) == 1, counts
+    assert counts == [2] * len(paths), counts
     assert all(b == bodies[0] for b in bodies)
     assert spark.read.parquet(table).count() == 3 * len(paths)
+
+
+@pytest.mark.parametrize(
+    "text", ["", "plain text\n[no stamp] here\n"], ids=["empty", "no_match"]
+)
+def test_upload_without_messages(spark, tmp_path_repo, text):
+    """An export with no message line inserts nothing: the observed
+    min_by over zero rows is null and the count 0, as the aggregate
+    over an empty table gave."""
+    path = tmp_path_repo / "none.txt"
+    path.write_text(text, encoding="utf-8")
+    resp = upload_chats_response(spark, str(path), str(tmp_path_repo / "tbl"))
+    assert resp == {"status": "success", "inserted_rows": 0, "group_name": None}
+
+
+def test_upload_failing_write_raises(spark, tmp_path_repo):
+    """A write that fails raises out of the request; it never reaches
+    Observation.get, which would wait for metrics that never come. A
+    regular file where the table's parent directory should be makes the
+    write fail. Bounded: a hang fails the test instead of the suite."""
+    import threading
+
+    blocker = tmp_path_repo / "not_a_dir"
+    blocker.write_text("x", encoding="utf-8")
+    outcome: list = []
+
+    def call():
+        try:
+            outcome.append(
+                upload_chats_response(spark, _write(tmp_path_repo), str(blocker / "tbl"))
+            )
+        except Exception as exc:  # noqa: BLE001 — the test inspects it
+            outcome.append(exc)
+
+    t = threading.Thread(target=call, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "upload_chats_response hung after a failed write"
+    assert len(outcome) == 1 and isinstance(outcome[0], Exception), outcome
+    assert "not a directory" in str(outcome[0]).lower()
 
 
 def test_analyze_words_response(spark):
@@ -238,3 +280,48 @@ def test_line_order_survives_input_splits(spark, tmp_path_repo):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+
+
+def _export(path, n_lines: int, seed: int) -> list[str]:
+    import random
+
+    rng = random.Random(seed)
+    senders = ["Alice", "Bob", "~ Carol X", "דנה", "🦆", "Eve", "Frank"]
+    lines = [
+        f"[{1 + i * 28 // n_lines}.2.2023, 10:{i % 60:02d}:00] {rng.choice(senders)}: "
+        f"message {i} {'x' * rng.randint(0, 40)}"
+        if i % 97 else f"noise line {i}"
+        for i in range(n_lines)
+    ]
+    path.write_text("".join(f"{line}\n" for line in lines), encoding="utf-8")
+    return lines
+
+
+def test_session_splits_chat_scans_to_the_cores(spark, tmp_path_repo):
+    """Under the session defaults (file open cost 256 KiB), an export of
+    about 2 MB reads as several input splits, where Spark's 4 MiB
+    default read it as one; a file under 256 KiB still reads as one.
+    The served graph of the multi-split read equals the reference on
+    both dispatch paths, unfiltered and with range + limit."""
+    from poc_spark.sources.chat import read_chat_lines
+
+    small = tmp_path_repo / "small.txt"
+    _export(small, 2500, 3)
+    assert small.stat().st_size < 256 * 1024
+    assert read_chat_lines(spark, str(small)).rdd.getNumPartitions() == 1
+
+    path = tmp_path_repo / "two_mb.txt"
+    lines = _export(path, 30000, 5)
+    assert 1.5e6 < path.stat().st_size < 2.5e6
+    assert read_chat_lines(spark, str(path)).rdd.getNumPartitions() > 1
+    for force in ("false", "true"):
+        spark.conf.set(CHUNK_FORCE_KEY, force)
+        try:
+            for args in ((None, None, None), ("2023-02-05", "2023-02-20", 9000)):
+                body = analyze_network(spark, str(path), *args)
+                exp_nodes, exp_links = reference_network(lines, *args)
+                assert [n["id"] for n in body["nodes"]] == exp_nodes
+                links = {(l["source"], l["target"]): l["weight"] for l in body["links"]}
+                assert links == exp_links and len(links) == len(body["links"])
+        finally:
+            spark.conf.unset(CHUNK_FORCE_KEY)

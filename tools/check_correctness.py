@@ -7,10 +7,18 @@ Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [query ...]
 With ``--json`` the per-entry outcomes are also written in the driver's
 CORRECTNESS_r{N}.json shape, so a full-registry run can be committed as
 round evidence for entries outside the driver's ~50-entry window.
+
+Entries stage their inputs in fixed directories under ``.tmp/``, so two
+sweeps of one checkout (this tool and ``tools/forced_sweep.sh``, which
+execs it) would overwrite each other's files. A run therefore holds an
+exclusive lock on ``.tmp/.sweep.lock`` from start to end; a second run
+prints one line and waits for it.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import math
 import os
@@ -19,7 +27,10 @@ import sys
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+LOCK_PATH = os.path.join(ROOT, ".tmp", ".sweep.lock")
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -68,6 +79,21 @@ def compare(name: str, got: pd.DataFrame, exp: pd.DataFrame) -> list[str]:
                 i = int(neq.idxmax())
                 problems.append(f"col {c}: {int(neq.sum())} mismatches, first at row {i}: spark={gv[i]!r} oracle={ev[i]!r}")
     return problems
+
+
+@contextlib.contextmanager
+def sweep_lock(path: str = LOCK_PATH, say=lambda line: print(line, flush=True)):
+    """Hold an exclusive flock on `path` for the block. When another
+    process (or open file) holds it, `say` one line, then wait. The
+    kernel drops the lock when the holder exits, however it exits."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "a") as fh:
+        try:
+            fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            say(f"WAIT another sweep holds {path}; waiting for it to finish")
+            fcntl.flock(fh, fcntl.LOCK_EX)
+        yield
 
 
 def main() -> int:
@@ -171,4 +197,5 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    with sweep_lock():
+        raise SystemExit(main())
