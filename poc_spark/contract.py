@@ -4929,10 +4929,8 @@ def stream_rollup_maintenance(spark, sf_dir):
             f"stream_rollup_maintenance: expected a multi-batch drain, "
             f"got {n_batches} — the incremental-merge claim needs >1"
         )
-    # read through the pointer resolver (manifest-first): under the
-    # forced fake-objectstore/symlink-off gates the root is not a
-    # path at all (the r9 fake gate caught exactly this latent
-    # symlink dependency)
+    # read through the manifest: the root of a versioned tree is not
+    # a path at all
     from poc_spark.sources.lake import read_snapshot
 
     # the hive directory value day=2024-01-01 type-infers back as

@@ -245,22 +245,17 @@ def read_orc(
 # new tree, never a mix; a writer crash before the flip leaves the
 # current version untouched.
 #
-# TWO pointer representations are maintained (r7 VERDICT #1):
-#   - the MANIFEST file `<root>._VERSION.json` — a small JSON naming
-#     the current version directory (the Iceberg version-hint shape).
-#     Written via temp-file + rename locally; on an object store the
-#     equivalent is a single small PUT, which S3/GCS make atomic — so
-#     the commit point itself needs no POSIX semantics. The manifest
-#     is the SOURCE OF TRUTH: it is written first on every publish and
-#     preferred on every resolve.
-#   - the SYMLINK `<root> -> <root>.vNNNNNN` — the POSIX fast path,
-#     kept so `spark.read.parquet(root)`, DuckDB, and any plain reader
-#     resolve the current snapshot with zero library code. Skipped for
-#     object-store paths or when conf `spark.poc.lake.symlink=off`
-#     (pure-manifest mode, pinned in tests). After a crash between the
-#     two writes the symlink can lag by exactly one commit — still a
-#     complete RETAINED snapshot (publish keeps current + previous),
-#     never a mix; the next publish heals it.
+# ONE pointer: the MANIFEST file `<root>._VERSION.json`, a small JSON
+# naming the current version directory (the Iceberg version-hint
+# shape). It is written with one atomic small-object write
+# (temp-file + rename + directory fsync locally, a single PUT on an
+# object store, which S3/GCS make atomic), so the commit point itself
+# needs no POSIX semantics. Every publish commits with that one write
+# and every read resolves through it (`resolve_snapshot` /
+# `read_snapshot`): `<root>` itself is not a path of a versioned tree.
+# A REAL directory at `<root>` is a plain, not-yet-versioned table and
+# wins over any manifest (a plain overwrite replaced the tree); the
+# first commit migrates it into the version layout.
 #
 # WRITER concurrency (r7 VERDICT #2): creating the next version
 # directory is EXCLUSIVE (os.makedirs without a destructive rmtree) —
@@ -351,8 +346,8 @@ def _manifest_payload(new_dir: str) -> bytes:
 
 def _read_manifest(root: str, fs=None) -> dict | None:
     """The version manifest ({"current": "<base>.vNNNNNN", "version":
-    N}) or None when the tree has no manifest (legacy symlink-only or
-    plain directory)."""
+    N}) or None when the tree has no manifest (plain directory or
+    absent)."""
     import json
 
     fs = _fs(root=root, fs=fs)
@@ -371,16 +366,6 @@ def _write_manifest(root: str, new_dir: str, fs) -> None:
     fs.put_atomic(_manifest_path(root), _manifest_payload(new_dir))
 
 
-def _symlink_enabled(spark, root: str, fs) -> bool:
-    """Whether publishes maintain the POSIX symlink fast path beside
-    the manifest: off when the storage backend has no symlinks (object
-    stores), for `://` paths, and under conf
-    `spark.poc.lake.symlink=off` (pure-manifest mode)."""
-    if not fs.supports_symlink or "://" in root:
-        return False
-    return _lake_conf(spark, "spark.poc.lake.symlink", "on") != "off"
-
-
 def _lake_conf(spark, key: str, default: str) -> str:
     if spark is None:
         return default
@@ -390,68 +375,48 @@ def _lake_conf(spark, key: str, default: str) -> str:
         return default
 
 
-def _resolve_current(root: str, mode: str = "auto", fs=None) -> str | None:
-    """Current version directory of a pointer tree, or None when the
-    tree has no pointer yet (plain directory or absent). `mode`:
-    "auto" prefers the manifest and falls back to the symlink;
-    "manifest" REQUIRES the manifest (the forced gate — proves no
-    write path forgot to write it); "symlink" resolves the legacy
-    pointer only."""
+def _resolve_current(root: str, fs=None) -> str | None:
+    """Current version directory of a pointer tree (the one its
+    manifest names), or None when the tree has no pointer yet (plain
+    directory or absent). A symlink at `root` is a pointer written
+    before the manifest existed, never a plain directory: with a
+    manifest beside it the manifest decides, and without one the tree
+    is refused."""
     import os
 
     fs = _fs(root=root, fs=fs)
-    if mode not in ("auto", "manifest", "symlink"):
-        raise ValueError(f"unknown pointer mode {mode!r}")
     if fs.is_dir(root) and not os.path.islink(root):
         # a REAL directory at the root means a plain (non-pointer)
-        # write replaced the whole table — Spark's overwrite swaps the
-        # symlink for a real directory and cannot know about the
+        # write replaced the whole table and cannot know about the
         # sibling manifest. The fresh tree supersedes any stale
         # pointer; the next pointer commit migrates it to a new
         # generation and rewrites the manifest.
         return None
-    if mode != "symlink":
-        man = _read_manifest(root, fs)
-        if man is not None:
-            cur = os.path.join(os.path.dirname(root), man["current"])
-            if not fs.is_dir(cur):
-                raise ValueError(
-                    f"version manifest {_manifest_path(root)} names "
-                    f"{man['current']!r} which is not a directory; "
-                    "restore the version or delete the manifest"
-                )
-            return cur
-        if mode == "manifest":
-            if os.path.islink(root):
-                # a versioned (symlink-pointer) tree with no manifest:
-                # strict mode refuses the legacy fallback
-                raise ValueError(
-                    f"pointer mode 'manifest' but {_manifest_path(root)} "
-                    "does not exist — the tree was last published by a "
-                    "pre-manifest writer; republish once to migrate"
-                )
-            return None  # not versioned yet: caller migrates/bootstraps
-    if os.path.islink(root):
-        cur = os.path.join(os.path.dirname(root), os.readlink(root))
-        if not os.path.isdir(cur):
+    man = _read_manifest(root, fs)
+    if man is None:
+        if os.path.islink(root):
             raise ValueError(
-                f"version pointer {root} -> {os.readlink(root)} is "
-                "dangling; restore or delete the pointer"
+                f"{root} is a symlink pointer but {_manifest_path(root)} "
+                "does not exist — the tree was last published by a "
+                "pre-manifest writer; drop_tree it and rebuild"
             )
-        return cur
-    return None
+        return None  # not versioned yet: caller migrates/bootstraps
+    cur = os.path.join(os.path.dirname(root), man["current"])
+    if not fs.is_dir(cur):
+        raise ValueError(
+            f"version manifest {_manifest_path(root)} names "
+            f"{man['current']!r} which is not a directory; "
+            "restore the version or delete the manifest"
+        )
+    return cur
 
 
 def resolve_snapshot(root: str, spark=None, fs=None) -> str:
     """PUBLIC resolver: the directory a reader should scan for the
-    CURRENT snapshot of `root` — the manifest's version dir when a
-    manifest exists (the object-store-safe path), the symlink target
-    for legacy trees, `root` itself for a plain unversioned directory.
-    Conf `spark.poc.lake.pointer=manifest` forces manifest-only
-    resolution (raises if any tree lacks one — the forced gate)."""
+    CURRENT snapshot of `root` — the version directory its manifest
+    names, or `root` itself for a plain unversioned directory."""
     fs = _fs(spark, root, fs)
-    mode = _lake_conf(spark, "spark.poc.lake.pointer", "auto")
-    cur = _resolve_current(root, mode, fs)
+    cur = _resolve_current(root, fs)
     if cur is not None:
         return cur
     if fs.is_dir(root):
@@ -521,9 +486,9 @@ def _read_tree_dir(spark: SparkSession, d: str, fs=None) -> DataFrame:
 
 
 def read_snapshot(spark: SparkSession, root: str) -> DataFrame:
-    """Read the current snapshot through the pointer resolver — works
-    for manifest-only trees (where `root` itself does not exist as a
-    path) as well as symlink and plain-directory trees. The scan uses
+    """Read the current snapshot through the manifest — `root` itself
+    is not a path of a versioned tree — or `root` for a plain
+    unversioned directory. The scan uses
     the snapshot's own logged schema when present (schema evolution:
     post-evolution snapshots serve added columns with NULL backfill
     for pre-evolution files)."""
@@ -559,26 +524,24 @@ def _ensure_versioned(root: str, spark=None, fs=None) -> str:
     deployments therefore migrate under a writer/reader quiesce, or —
     better — never have a plain phase at all (create_table_versioned).
     The migration happens once per tree, before any concurrent-reader
-    guarantee is claimed. Already-
-    versioned trees (manifest or symlink) resolve and, if the manifest
-    is missing (legacy symlink-only lineage), are healed by writing
-    one."""
-    import os
+    guarantee is claimed. Already-versioned trees resolve through
+    their manifest.
 
+    The manifest naming the first version is written BEFORE the plain
+    tree moves there: while the plain directory exists it wins over
+    any manifest, so the move itself is the commit point. A crash
+    before it leaves the plain tree serving reads, and the retry
+    migrates again; written after the move, a crash between the two
+    would leave neither a plain tree nor a manifest (no table)."""
     fs = _fs(spark, root, fs)
-    mode = _lake_conf(spark, "spark.poc.lake.pointer", "auto")
-    cur = _resolve_current(root, mode, fs)
+    cur = _resolve_current(root, fs)
     if cur is not None:
-        if _read_manifest(root, fs) is None:
-            _write_manifest(root, cur, fs)  # heal legacy symlink tree
         return cur
     if not fs.is_dir(root):
         raise ValueError(f"_ensure_versioned: no table at {root!r}")
     v1 = _fresh_generation_dir(root, fs)
-    fs.migrate_tree(root, v1)
     _write_manifest(root, v1, fs)
-    if _symlink_enabled(spark, root, fs):
-        fs.replace_symlink(os.path.basename(v1), root)
+    fs.migrate_tree(root, v1)
     return v1
 
 
@@ -733,7 +696,6 @@ def _publish_version(
 ) -> None:
     """Atomically repoint `root` at `new_dir`: the MANIFEST write is
     the commit point (one atomic small-object write on every backend),
-    then the POSIX symlink fast path is updated (unless disabled),
     then versions beyond the retention depth are pruned (conf
     `spark.poc.lake.retain`, default current + previous — the previous
     stays for readers that resolved the pointer just before the flip).
@@ -760,8 +722,6 @@ def _publish_version(
                 "new snapshot"
             )
     _write_manifest(root, new_dir, fs)
-    if _symlink_enabled(spark, root, fs):
-        fs.replace_symlink(os.path.basename(new_dir), root)
     keep = _retention_keep(spark)
     hours = _retention_hours(spark)
     parent, base = os.path.split(root)
@@ -794,13 +754,10 @@ def create_table_versioned(
     (ConcurrentCommitError for the rest — same contract as the rollup
     bootstrap, whose commit sequence this shares). Fails if the table
     already exists in any form."""
-    import os
     import uuid
 
     fs = _fs(spark, root)
-    if fs.is_dir(root) or fs.exists(_manifest_path(root)) or os.path.islink(
-        root
-    ):
+    if fs.exists(root) or fs.exists(_manifest_path(root)):
         raise ValueError(
             f"create_table_versioned: a table already exists at {root!r}"
         )
@@ -827,8 +784,6 @@ def create_table_versioned(
                 "create_table_versioned: the table was created by a "
                 "concurrent writer — read the existing table instead"
             )
-        if _symlink_enabled(spark, root, fs):
-            fs.replace_symlink(os.path.basename(v1), root)
     finally:
         fs.delete_tree(build)
     spark.catalog.refreshByPath(root)
@@ -931,7 +886,7 @@ def merge_upsert_partitioned(
       3. the next version directory = hardlinks of every untouched
          partition + the staged affected partitions renamed in; a
          partition the merge EMPTIES is simply never added. One
-         atomic symlink replace publishes it.
+         atomic manifest write publishes it.
 
     Concurrent readers see the complete old tree or the complete new
     tree, never a mix (pinned in tests/test_lake.py with a
@@ -1162,8 +1117,8 @@ def _commit_partitions(
     as carries of every untouched partition (hardlinks on POSIX,
     server-side copies on an object store — zero bytes through the
     client either way) plus the staged rewrites, and publish with one
-    atomic pointer update (manifest first, then the symlink fast
-    path), re-checking the base version right before the flip. A
+    atomic manifest write, re-checking the base version right before
+    it. A
     partition the rewrite EMPTIES is simply never added. On a detected
     conflict the claimed directory is removed (it is exclusively ours)
     and ConcurrentCommitError propagates — the losing commit changes
@@ -1291,7 +1246,6 @@ def _bootstrap_partitioned(
     writer's batch-0 (breaking exactly-once replay). A crash anywhere
     before the manifest leaves NO pointer and read_tree_meta() == {},
     so replay re-applies batch 0."""
-    import os
     import uuid
 
     v1 = _fresh_generation_dir(root, fs)
@@ -1315,8 +1269,6 @@ def _bootstrap_partitioned(
                 f"{label}: the table was bootstrapped by a concurrent "
                 "writer — retry as an incremental apply"
             )
-        if _symlink_enabled(spark, root, fs):
-            fs.replace_symlink(os.path.basename(v1), root)
     finally:
         fs.delete_tree(build)
     spark.catalog.refreshByPath(root)
@@ -1495,8 +1447,8 @@ def compact_inplace(
 ) -> int:
     """In-place small-files compaction with the same atomic
     version-pointer commit as merge_upsert_partitioned: the compacted
-    rewrite lands in the next version directory and one symlink
-    replace publishes it, so a reader mid-compaction sees the old
+    rewrite lands in the next version directory and one manifest
+    write publishes it, so a reader mid-compaction sees the old
     fragmented tree or the new compacted one — never a partially
     deleted directory (which is exactly what overwrite-mode in-place
     compaction produces). Sizing math identical to compact():
@@ -1757,8 +1709,8 @@ def read_version(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
     """Time-travel read of a version-pointer tree (the `VERSION AS OF`
-    shape on plain parquet): `version=None` resolves the pointer —
-    the current snapshot, identical to `spark.read.parquet(root)` —
+    shape on plain parquet): `version=None` resolves the manifest —
+    the current snapshot, identical to `read_snapshot(spark, root)` —
     and an explicit number reads that retained immutable version
     directory. Because published versions are never mutated (writers
     only ever build the NEXT version and flip the pointer), a reader
@@ -1775,9 +1727,6 @@ def read_version(
     IS the data (hardlinked, not copied), so partition pruning and
     pushdown apply unchanged."""
     if version is None:
-        # resolve through the pointer (manifest-first): identical data
-        # to spark.read.parquet(root) on symlink trees, and the ONLY
-        # path that works for manifest-only (object-store-shape) trees
         return read_snapshot(spark, root)
     # each retained snapshot reads under ITS OWN logged schema: a
     # version committed before a column was added keeps serving the
@@ -2244,12 +2193,12 @@ def change_feed(
 
 
 def drop_tree(root: str, fs=None) -> None:
-    """Remove a version-pointer tree completely: the pointer (or plain
-    directory), every retained version, stage leftovers, and a stray
-    pointer temp. The reset a rebuild-fresh consumer (tests, the
-    contract entries' stale-artifact rule) needs — plain rmtree on a
-    symlink root would only delete the link's target's CONTENTS and
-    leave stale version dirs to confuse the next generation."""
+    """Remove a version-pointer tree completely: the manifest (or plain
+    directory), every retained version, stage and build leftovers, and
+    a root symlink a pre-manifest writer left. The reset a
+    rebuild-fresh consumer (tests, the contract entries' stale-artifact
+    rule) needs — plain rmtree of `root` would leave the version dirs
+    to confuse the next generation."""
     import os
 
     fs = _fs(root=root, fs=fs)
@@ -2265,12 +2214,11 @@ def drop_tree(root: str, fs=None) -> None:
             e.startswith(base + ".v")
             or e.startswith(base + ".stage-")
             or e.startswith(base + ".commit-")
-            or e == base + ".ptr.tmp"
             or e == base + _MANIFEST_SUFFIX
             or e == base + _MANIFEST_SUFFIX + ".tmp"
         ):
             p = os.path.join(parent, e)
-            if fs.is_dir(p) and not os.path.islink(p):
+            if fs.is_dir(p):
                 fs.delete_tree(p)
             else:
                 fs.delete_obj(p)

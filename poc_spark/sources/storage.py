@@ -1,9 +1,9 @@
 """Storage abstraction for the lake's commit protocol.
 
 The version-pointer lake (sources/lake.py) used to reach the filesystem
-directly with ``os.rename`` / ``os.link`` / ``os.symlink`` — primitives
-object stores do not have — so the commit *protocol* ported to S3/GCS
-but the *code* did not (r8 VERDICT #1). This module is the seam: every
+directly with ``os.rename`` / ``os.link`` — primitives object stores do
+not have — so the commit *protocol* ported to S3/GCS but the *code*
+did not (r8 VERDICT #1). This module is the seam: every
 mutation the lake performs goes through the small API below, expressed
 in operations object stores actually offer:
 
@@ -40,10 +40,10 @@ Two implementations:
 
 Backend selection: ``storage_for(spark)`` reads conf
 ``spark.poc.lake.fs`` (``posix`` default, ``fake-objectstore`` the
-forced gate — same pattern as the r8 ``spark.poc.lake.pointer``
-force). A real S3/GCS backend is a third implementation of this class
-away (boto3/gcs client; not in this container) — the protocol above is
-everything it must provide.
+forced gate, which always has the harsh shape: 2-name listing pages
+and 64-byte copy chunks). A real S3/GCS backend is a third
+implementation of this class away (boto3/gcs client; not in this
+container) — the protocol above is everything it must provide.
 
 Reference parity: the reference persists via NDJSON upload + MySQL rows
 (backend/main.py:137-176) and has no table format at all; this layer is
@@ -80,8 +80,6 @@ class Storage:
     prefix (object store). All implementations must be safe to share
     across threads (they hold no state)."""
 
-    #: whether the backend can maintain the POSIX symlink fast path
-    supports_symlink = False
     name = "abstract"
 
     # -- reads -----------------------------------------------------------
@@ -159,16 +157,10 @@ class Storage:
     def delete_tree(self, path: str) -> None:
         raise NotImplementedError
 
-    def replace_symlink(self, target_name: str, link_path: str) -> None:
-        raise NotImplementedError(
-            f"{self.name}: symlinks are not supported by this backend"
-        )
-
 
 class PosixStorage(Storage):
     """Local-filesystem fast path: hardlink carry, rename promote."""
 
-    supports_symlink = True
     name = "posix"
 
     def get_bytes(self, path: str) -> bytes:
@@ -273,13 +265,6 @@ class PosixStorage(Storage):
     def delete_tree(self, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
-    def replace_symlink(self, target_name: str, link_path: str) -> None:
-        tmp = f"{link_path}.ptr.tmp"
-        if os.path.lexists(tmp):
-            os.unlink(tmp)
-        os.symlink(target_name, tmp)
-        os.replace(tmp, link_path)
-
 
 class FakeObjectStorage(Storage):
     """Directory-backed object-store double: the API surface offers NO
@@ -297,7 +282,6 @@ class FakeObjectStorage(Storage):
     marker stays in the prefix afterwards — underscore-prefixed, so
     Spark's file listing ignores it like ``_SUCCESS``."""
 
-    supports_symlink = False
     name = "fake-objectstore"
     CLAIM = "_CLAIM"
 
@@ -315,16 +299,16 @@ class FakeObjectStorage(Storage):
         # the two real-store quirks the r9 double was friendlier than
         # (r9 VERDICT missing #2): listings come back in PAGES behind
         # an opaque continuation token, and server-side copy caps the
-        # per-request size. Both forceable tiny via conf
-        # (spark.poc.lake.fake.pageSize / .copyChunk) so the protocol
-        # is exercised against them registry-wide without a network.
+        # per-request size. The conf-selected instance (storage_for)
+        # sets both tiny, so the protocol is exercised against them
+        # registry-wide without a network.
         self.page_size = int(page_size or self.DEFAULT_PAGE_SIZE)
         self.copy_chunk_bytes = int(
             copy_chunk_bytes or self.DEFAULT_COPY_CHUNK
         )
         if self.page_size < 1 or self.copy_chunk_bytes < 1:
             raise ValueError(
-                "fake-objectstore pageSize/copyChunk must be >= 1"
+                "fake-objectstore page_size/copy_chunk_bytes must be >= 1"
             )
 
     def get_bytes(self, path: str) -> bytes:
@@ -366,7 +350,7 @@ class FakeObjectStorage(Storage):
 
     def list_names(self, parent: str) -> list[str]:
         # drain the paged protocol — a consumer that assumed one
-        # complete listing breaks the moment pageSize is forced to 2
+        # complete listing breaks the moment page_size is 2
         out: list[str] = []
         token: str | None = None
         while True:
@@ -497,7 +481,9 @@ class FakeObjectStorage(Storage):
 
 
 _POSIX = PosixStorage()
-_FAKE = FakeObjectStorage()
+# the forced gate's harsh shape: a listing paged every 2 names and a
+# multipart copy for any object over 64 bytes
+_FAKE = FakeObjectStorage(page_size=2, copy_chunk_bytes=64)
 
 
 def storage_for(spark=None, root: str | None = None) -> Storage:
@@ -526,28 +512,7 @@ def storage_for(spark=None, root: str | None = None) -> Storage:
         except Exception:
             mode = "posix"
     if mode == "fake-objectstore":
-        # optional hardening knobs: force tiny listing pages / copy
-        # chunks so the protocol runs against real-store limits
-        def _iconf(key):
-            try:
-                v = spark.conf.get(key, "") if spark is not None else ""
-            except Exception:
-                v = ""
-            if not v:
-                return None
-            try:
-                return int(v)
-            except ValueError:
-                raise ValueError(
-                    f"{key}={v!r} is not an integer; set a positive "
-                    "byte/row count or unset the conf"
-                ) from None
-
-        ps = _iconf("spark.poc.lake.fake.pageSize")
-        cc = _iconf("spark.poc.lake.fake.copyChunk")
-        if ps is None and cc is None:
-            return _FAKE
-        return FakeObjectStorage(page_size=ps, copy_chunk_bytes=cc)
+        return _FAKE
     if mode != "posix":
         raise ValueError(
             f"spark.poc.lake.fs={mode!r} is not a known storage backend "

@@ -246,7 +246,7 @@ def apply_rollup_batch_exactly_once(
     a crash, and the sink must deduplicate redelivery). The applied
     batch ids ride the rollup tree's own commit metadata, so "batch
     recorded" and "batch's rows summed in" are the SAME atomic
-    symlink flip — there is no window where one is true and the other
+    manifest write — there is no window where one is true and the other
     is not. A replayed id returns False without touching the tree."""
     from poc_spark.sources.lake import read_tree_meta, rollup_incremental
 

@@ -334,6 +334,8 @@ def test_merge_upsert_rewrites_only_affected_partitions(spark, tmp_path):
 
     from poc_spark.sources.lake import (
         merge_upsert_partitioned,
+        read_snapshot,
+        resolve_snapshot,
         write_partitioned,
     )
 
@@ -350,7 +352,7 @@ def test_merge_upsert_rewrites_only_affected_partitions(spark, tmp_path):
     write_partitioned(base, root, ["lang"])
 
     def snapshot(part):
-        d = os.path.join(root, f"lang={part}")
+        d = os.path.join(resolve_snapshot(root), f"lang={part}")
         return sorted(
             (f, os.path.getsize(os.path.join(d, f)),
              os.path.getmtime(os.path.join(d, f)))
@@ -375,7 +377,7 @@ def test_merge_upsert_rewrites_only_affected_partitions(spark, tmp_path):
 
     got = {
         r["doc_id"]: (r["text"], r["lang"], r["n_chars"])
-        for r in spark.read.parquet(root).collect()
+        for r in read_snapshot(spark, root).collect()
     }
     assert got == {
         1: ("alpha v2", "en", 8),
@@ -392,6 +394,7 @@ def test_merge_upsert_key_moves_partition(spark, tmp_path):
     duplicate survives anywhere in the tree."""
     from poc_spark.sources.lake import (
         merge_upsert_partitioned,
+        read_snapshot,
         write_partitioned,
     )
 
@@ -409,7 +412,7 @@ def test_merge_upsert_key_moves_partition(spark, tmp_path):
     assert affected == ["de", "en"]
     rows = sorted(
         (r["doc_id"], r["text"], r["lang"])
-        for r in spark.read.parquet(root).collect()
+        for r in read_snapshot(spark, root).collect()
     )
     assert rows == [(1, "a-moved", "de"), (2, "b", "de")]
 
@@ -460,19 +463,22 @@ def test_snapshot_diff_no_compare_cols_raises(spark, tmp_path):
 
 
 def _tree_content(spark, root):
+    from poc_spark.sources.lake import read_snapshot
+
     return sorted(
         (r["doc_id"], r["text"], r["lang"], r["n_chars"])
-        for r in spark.read.parquet(root).collect()
+        for r in read_snapshot(spark, root).collect()
     )
 
 
 def test_merge_upsert_reader_sees_old_or_new_never_mix(spark, tmp_path):
     """The VERDICT r6 #5 'done' criterion: snapshot the LIVE tree (as
-    any concurrent reader resolves it, through `root`) at the moment
+    any concurrent reader resolves it, through the manifest) at the moment
     the rewrite is fully staged but not yet published — it must be
     byte-identical to the pre-merge tree; after publish it is the
     complete merged tree. And the untouched partition's data is
     PROVABLY the same bytes: same inode, hardlinked across versions."""
+    import json
     import os
 
     from poc_spark.sources.lake import (
@@ -492,7 +498,7 @@ def test_merge_upsert_reader_sees_old_or_new_never_mix(spark, tmp_path):
 
     def hook():
         # a "concurrent reader": list + read the tree through the
-        # pointer while the new version is fully staged
+        # manifest while the new version is fully staged
         spark.catalog.refreshByPath(root)
         mid_snapshots.append(_tree_content(spark, root))
 
@@ -514,7 +520,9 @@ def test_merge_upsert_reader_sees_old_or_new_never_mix(spark, tmp_path):
                 for f in os.listdir(d) if f.endswith(".parquet")}
 
     v1, v2 = f"{root}.v000001", f"{root}.v000002"
-    assert os.path.islink(root) and os.readlink(root).endswith("v000002")
+    with open(f"{root}._VERSION.json") as f:
+        assert json.load(f)["current"] == "tree.v000002"
+    assert not os.path.lexists(root)
     for part in ("lang=de", "lang=fr"):
         assert inodes(os.path.join(v1, part)) == inodes(
             os.path.join(v2, part)
@@ -565,13 +573,17 @@ def test_merge_upsert_crash_before_publish_leaves_old_tree(spark, tmp_path):
 def test_compact_inplace_atomic_and_cross_engine(spark, tmp_path):
     """In-place compaction: mid-rewrite readers see the old fragmented
     tree (same files, same content); after publish, n uniform files
-    with identical content — and DuckDB resolves the version pointer
-    like any POSIX reader (the oracle-compatibility pin)."""
+    with identical content — and DuckDB reads the version directory
+    the manifest names (the oracle-compatibility pin)."""
     import os
 
     import duckdb
 
-    from poc_spark.sources.lake import compact_inplace
+    from poc_spark.sources.lake import (
+        compact_inplace,
+        read_snapshot,
+        resolve_snapshot,
+    )
 
     root = str(tmp_path / "frag")
     df = spark.range(0, 5000).selectExpr(
@@ -584,8 +596,9 @@ def test_compact_inplace_atomic_and_cross_engine(spark, tmp_path):
 
     def hook():
         spark.catalog.refreshByPath(root)
-        files = [f for f in os.listdir(root) if f.endswith(".parquet")]
-        rows = sorted(r["doc_id"] for r in spark.read.parquet(root).collect())
+        snap = resolve_snapshot(root)
+        files = [f for f in os.listdir(snap) if f.endswith(".parquet")]
+        rows = sorted(r["doc_id"] for r in read_snapshot(spark, root).collect())
         mid.append((len(files), rows))
 
     n = compact_inplace(
@@ -593,14 +606,15 @@ def test_compact_inplace_atomic_and_cross_engine(spark, tmp_path):
     )
     assert n == 1
     assert mid == [(16, want)]  # mid-write: old fragmented tree intact
+    snap = resolve_snapshot(root)
     assert (
-        len([f for f in os.listdir(root) if f.endswith(".parquet")]) == 1
+        len([f for f in os.listdir(snap) if f.endswith(".parquet")]) == 1
     )
     assert sorted(
-        r["doc_id"] for r in spark.read.parquet(root).collect()
+        r["doc_id"] for r in read_snapshot(spark, root).collect()
     ) == want
     got = duckdb.sql(
-        f"SELECT count(*), sum(doc_id) FROM read_parquet('{root}/*.parquet')"
+        f"SELECT count(*), sum(doc_id) FROM read_parquet('{snap}/*.parquet')"
     ).fetchone()
     assert got == (5000, sum(range(5000)))
 
@@ -714,6 +728,8 @@ def test_rollup_incremental_merges_partials_and_carries_rest(spark, tmp_path):
 
     from poc_spark.sources.lake import (
         rollup_incremental,
+        read_snapshot,
+        resolve_snapshot,
         rollup_partial,
         write_partitioned,
     )
@@ -742,7 +758,7 @@ def test_rollup_incremental_merges_partials_and_carries_rest(spark, tmp_path):
     )
 
     def snapshot(month):
-        d = os.path.join(root, f"month={month}")
+        d = os.path.join(resolve_snapshot(root), f"month={month}")
         return sorted(
             (f, os.path.getsize(os.path.join(d, f)),
              os.path.getmtime(os.path.join(d, f)))
@@ -766,7 +782,7 @@ def test_rollup_incremental_merges_partials_and_carries_rest(spark, tmp_path):
     want = state(
         rollup_partial(base.unionByName(delta), "month", ["k"], ["v"])
     )
-    assert state(spark.read.parquet(root)) == want
+    assert state(read_snapshot(spark, root)) == want
 
     # empty delta: no partitions touched, content unchanged
     assert (
@@ -775,7 +791,7 @@ def test_rollup_incremental_merges_partials_and_carries_rest(spark, tmp_path):
         )
         == []
     )
-    assert state(spark.read.parquet(root)) == want
+    assert state(read_snapshot(spark, root)) == want
 
 
 def test_stats_index_skips_files_without_losing_rows(spark, tmp_path):
@@ -875,7 +891,12 @@ def test_merge_apply_cdc_delete_arm(spark, tmp_path):
     no affected key are carried byte-for-byte."""
     import os
 
-    from poc_spark.sources.lake import merge_apply_cdc, write_partitioned
+    from poc_spark.sources.lake import (
+        merge_apply_cdc,
+        read_snapshot,
+        resolve_snapshot,
+        write_partitioned,
+    )
 
     base_schema = "k long, text string, lang string, n long"
     base = spark.createDataFrame(
@@ -891,7 +912,7 @@ def test_merge_apply_cdc_delete_arm(spark, tmp_path):
     write_partitioned(base, root, ["lang"])
 
     def snapshot(part):
-        d = os.path.join(root, f"lang={part}")
+        d = os.path.join(resolve_snapshot(root), f"lang={part}")
         return sorted(
             (f, os.path.getsize(os.path.join(d, f)),
              os.path.getmtime(os.path.join(d, f)))
@@ -918,7 +939,7 @@ def test_merge_apply_cdc_delete_arm(spark, tmp_path):
 
     got = {
         r["k"]: (r["text"], r["lang"], r["n"])
-        for r in spark.read.parquet(root).collect()
+        for r in read_snapshot(spark, root).collect()
     }
     assert got == {
         1: ("a2", "en", 10),
@@ -981,6 +1002,7 @@ def test_rollup_min_max_merge(spark, tmp_path):
     the other decomposable aggregate family."""
     from poc_spark.sources.lake import (
         rollup_incremental,
+        read_snapshot,
         rollup_partial,
         write_partitioned,
     )
@@ -1006,7 +1028,7 @@ def test_rollup_min_max_merge(spark, tmp_path):
     )
     got = {
         (r["month"], r["k"]): (r["n_rows"], r["sum_v"], r["min_v"], r["max_v"])
-        for r in spark.read.parquet(root).collect()
+        for r in read_snapshot(spark, root).collect()
     }
     assert got == {
         ("2024-01", "a"): (4, 113, 1, 99),
@@ -1021,6 +1043,7 @@ def test_vacuum_tree_removes_only_unreachable(spark, tmp_path):
 
     from poc_spark.sources.lake import (
         merge_upsert_partitioned,
+        read_snapshot,
         vacuum_tree,
         write_partitioned,
     )
@@ -1038,7 +1061,7 @@ def test_vacuum_tree_removes_only_unreachable(spark, tmp_path):
     names = {os.path.basename(r) for r in removed}
     assert names == {"tree.stage-deadbeef", "tree.v000000"}
     # both retained versions still readable
-    assert spark.read.parquet(root).count() == 1
+    assert read_snapshot(spark, root).count() == 1
     assert os.path.isdir(f"{root}.v000001")
 
 
@@ -1051,6 +1074,7 @@ def test_clone_tree_zero_copy_and_isolated(spark, tmp_path):
     from poc_spark.sources.lake import (
         clone_tree,
         merge_upsert_partitioned,
+        read_snapshot,
         write_partitioned,
     )
 
@@ -1076,7 +1100,7 @@ def test_clone_tree_zero_copy_and_isolated(spark, tmp_path):
 
     def state(path):
         return {
-            r["k"]: r["text"] for r in spark.read.parquet(path).collect()
+            r["k"]: r["text"] for r in read_snapshot(spark, path).collect()
         }
 
     before = state(dst)
@@ -1385,10 +1409,10 @@ def test_publish_base_recheck_detects_foreign_commit(spark, tmp_path):
 
 
 def test_manifest_only_tree_full_lifecycle(spark, tmp_path):
-    """Pure-manifest mode (conf spark.poc.lake.symlink=off — the
-    object-store shape, where no symlink and no `root` path exist):
-    migration, mid-write reader isolation, crash-before-publish, and
-    time travel all hold with the manifest as the ONLY pointer."""
+    """The manifest is the ONLY pointer (the object-store shape: no
+    `root` path exists once the tree is versioned): migration,
+    mid-write reader isolation, crash-before-publish, and time travel
+    all hold."""
     import os
 
     import pytest
@@ -1403,90 +1427,152 @@ def test_manifest_only_tree_full_lifecycle(spark, tmp_path):
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     root = str(tmp_path / "tree")
-    spark.conf.set("spark.poc.lake.symlink", "off")
-    spark.conf.set("spark.poc.lake.pointer", "manifest")
-    try:
-        base = spark.createDataFrame(
-            [(1, "a", "en", "w", 1), (2, "b", "de", "w", 1)], schema
+    base = spark.createDataFrame(
+        [(1, "a", "en", "w", 1), (2, "b", "de", "w", 1)], schema
+    )
+    write_partitioned(base, root, ["lang"])
+    up = spark.createDataFrame([(1, "a2", "en", "w", 9)], schema)
+
+    def content():
+        return sorted(
+            (r["doc_id"], r["text"]) for r in
+            read_snapshot(spark, root).collect()
         )
-        write_partitioned(base, root, ["lang"])
-        up = spark.createDataFrame([(1, "a2", "en", "w", 9)], schema)
 
-        def content():
-            return sorted(
-                (r["doc_id"], r["text"]) for r in
-                read_snapshot(spark, root).collect()
-            )
+    mid = []
 
-        mid = []
+    def reader_mid_write():
+        mid.append(content())
 
-        def reader_mid_write():
-            mid.append(content())
+    before = [(1, "a"), (2, "b")]
 
-        before = [(1, "a"), (2, "b")]
+    def crash():
+        raise RuntimeError("died before publish")
 
-        def crash():
-            raise RuntimeError("died before publish")
-
-        with pytest.raises(RuntimeError, match="before publish"):
-            merge_upsert_partitioned(
-                spark, root, up, "doc_id", "lang", _pre_publish_hook=crash
-            )
-        # after migration+crash: manifest serves the complete OLD tree,
-        # and the root path no longer exists at all (no symlink)
-        assert not os.path.lexists(root)
-        assert os.path.exists(f"{root}._VERSION.json")
-        assert content() == before
-
+    with pytest.raises(RuntimeError, match="before publish"):
         merge_upsert_partitioned(
-            spark, root, up, "doc_id", "lang",
-            _pre_publish_hook=reader_mid_write,
+            spark, root, up, "doc_id", "lang", _pre_publish_hook=crash
         )
-        assert mid == [before]  # mid-write reader saw the old snapshot
-        assert content() == [(1, "a2"), (2, "b")]
-        assert not os.path.lexists(root)
+    # after migration+crash: manifest serves the complete OLD tree,
+    # and the root path no longer exists at all
+    assert not os.path.lexists(root)
+    assert os.path.exists(f"{root}._VERSION.json")
+    assert content() == before
 
-        # time travel still works through version numbers
-        vs = list_versions(root)
-        assert len(vs) == 2
-        assert sorted(
-            (r["doc_id"], r["text"])
-            for r in read_version(spark, root, vs[0]).collect()
-        ) == before
-    finally:
-        spark.conf.unset("spark.poc.lake.symlink")
-        spark.conf.unset("spark.poc.lake.pointer")
+    merge_upsert_partitioned(
+        spark, root, up, "doc_id", "lang",
+        _pre_publish_hook=reader_mid_write,
+    )
+    assert mid == [before]  # mid-write reader saw the old snapshot
+    assert content() == [(1, "a2"), (2, "b")]
+    assert not os.path.lexists(root)
+
+    # time travel still works through version numbers
+    vs = list_versions(root)
+    assert len(vs) == 2
+    assert sorted(
+        (r["doc_id"], r["text"])
+        for r in read_version(spark, root, vs[0]).collect()
+    ) == before
 
 
-def test_manifest_preferred_over_symlink(spark, tmp_path):
-    """The manifest is the source of truth: when the two pointers
-    disagree (a crash between the manifest write and the symlink
-    flip), resolve_snapshot follows the manifest; the symlink serves a
-    complete retained PREVIOUS snapshot to plain-path readers."""
+def _link_root(root, version):
+    """The root symlink a writer from before the manifest-only lake
+    kept beside (or instead of) the manifest."""
+    import os
+
+    os.symlink(f"{os.path.basename(root)}.v{version:06d}", root)
+
+
+def test_root_symlink_beside_manifest_resolves_merges_and_drops(
+    spark, tmp_path
+):
+    """A tree an older writer left with a manifest AND a root symlink
+    (here lagging one commit behind, its crash window): the link is
+    never taken for a plain directory, the manifest decides, one merge
+    commits on top, and drop_tree removes the whole tree, link
+    included."""
     import os
 
     from poc_spark.sources.lake import (
-        _write_manifest,
+        drop_tree,
         merge_upsert_partitioned,
+        read_snapshot,
         resolve_snapshot,
         write_partitioned,
     )
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    schema = "k long, text string, lang string, n long"
     root = str(tmp_path / "tree")
-    base = spark.createDataFrame([(1, "a", "en", "w", 1)], schema)
-    write_partitioned(base, root, ["lang"])
-    up = spark.createDataFrame([(1, "a2", "en", "w", 9)], schema)
-    merge_upsert_partitioned(spark, root, up, "doc_id", "lang")
-    # both pointers at v2 now; simulate the crash window by pointing
-    # the manifest back at v1 (manifest newer in the real scenario —
-    # direction is irrelevant, only precedence is under test)
-    from poc_spark.sources.storage import PosixStorage
-    _write_manifest(root, f"{root}.v000001", PosixStorage())
-    assert resolve_snapshot(root).endswith(".v000001")
-    assert os.readlink(root).endswith(".v000002") or os.readlink(
-        root
-    ).endswith("v000002")
+    write_partitioned(
+        spark.createDataFrame([(1, "a", "en", 1)], schema), root, ["lang"]
+    )
+    merge_upsert_partitioned(
+        spark, root, spark.createDataFrame([(1, "a2", "en", 2)], schema),
+        "k", "lang",
+    )
+    _link_root(root, 1)
+    assert resolve_snapshot(root) == f"{root}.v000002"
+    assert [(r["k"], r["text"]) for r in
+            read_snapshot(spark, root).collect()] == [(1, "a2")]
+
+    merge_upsert_partitioned(
+        spark, root, spark.createDataFrame([(2, "b", "de", 1)], schema),
+        "k", "lang",
+    )
+    assert resolve_snapshot(root) == f"{root}.v000003"
+    assert sorted(
+        (r["k"], r["text"]) for r in read_snapshot(spark, root).collect()
+    ) == [(1, "a2"), (2, "b")]
+
+    drop_tree(root)
+    assert os.listdir(tmp_path) == []
+
+
+def test_symlink_only_tree_is_refused_not_healed(spark, tmp_path):
+    """A symlink-only tree (no manifest) predates the manifest: reads
+    and writes refuse it with a named error, and nothing is written
+    to heal it."""
+    import os
+
+    import pytest
+
+    from poc_spark.sources.lake import (
+        drop_tree,
+        merge_upsert_partitioned,
+        read_snapshot,
+    )
+
+    schema = "k long, text string, lang string, n long"
+    root = str(tmp_path / "tree")
+    df = spark.createDataFrame([(1, "a", "en", 1)], schema)
+    df.write.partitionBy("lang").parquet(f"{root}.v000001")
+    _link_root(root, 1)
+    with pytest.raises(ValueError, match="pre-manifest writer"):
+        read_snapshot(spark, root)
+    with pytest.raises(ValueError, match="pre-manifest writer"):
+        merge_upsert_partitioned(spark, root, df, "k", "lang")
+    assert not os.path.exists(f"{root}._VERSION.json")
+    drop_tree(root)
+    assert os.listdir(tmp_path) == []
+
+
+def test_create_table_versioned_leaves_no_root_path(spark, tmp_path):
+    """A table versioned from birth has no path at `root`: the
+    manifest is its only pointer."""
+    import os
+
+    from poc_spark.sources.lake import create_table_versioned, read_snapshot
+
+    root = str(tmp_path / "tree")
+    schema = "k long, text string, lang string, n long"
+    create_table_versioned(
+        spark, spark.createDataFrame([(1, "a", "en", 1)], schema), root,
+        ["lang"],
+    )
+    assert not os.path.lexists(root)
+    assert [(r["k"], r["text"]) for r in
+            read_snapshot(spark, root).collect()] == [(1, "a")]
 
 
 def test_hive_escaped_partition_values_rewrite_cleanly(spark, tmp_path):
@@ -1499,6 +1585,8 @@ def test_hive_escaped_partition_values_rewrite_cleanly(spark, tmp_path):
 
     from poc_spark.sources.lake import (
         merge_upsert_partitioned,
+        read_snapshot,
+        resolve_snapshot,
         write_partitioned,
     )
 
@@ -1515,13 +1603,13 @@ def test_hive_escaped_partition_values_rewrite_cleanly(spark, tmp_path):
     spark.catalog.refreshByPath(root)
     got = sorted(
         (r["k"], r["text"], r["part"])
-        for r in spark.read.parquet(root).collect()
+        for r in read_snapshot(spark, root).collect()
     )
     assert got == [(1, "a2", "a:b"), (2, "b2", "x/y"),
                    (3, "c", "p%q"), (4, "d", "en")]
     # exactly one directory per partition — no stale duplicate carried
     parts = sorted(
-        e for e in os.listdir(os.path.realpath(root))
+        e for e in os.listdir(resolve_snapshot(root))
         if e.startswith("part=")
     )
     assert parts == ["part=a%3Ab", "part=en", "part=p%25q", "part=x%2Fy"]
@@ -1575,7 +1663,11 @@ def test_rollup_bootstrap_is_atomic(spark, tmp_path, monkeypatch):
     import pytest
 
     from poc_spark.sources import lake
-    from poc_spark.sources.lake import read_tree_meta, rollup_incremental
+    from poc_spark.sources.lake import (
+        read_snapshot,
+        read_tree_meta,
+        rollup_incremental,
+    )
 
     agg_root = str(tmp_path / "agg")
     delta = spark.createDataFrame(
@@ -1620,7 +1712,7 @@ def test_rollup_bootstrap_is_atomic(spark, tmp_path, monkeypatch):
     assert read_tree_meta(agg_root) == {"applied_batches": [0]}
     got = sorted(
         (r["part"], r["k"], r["sum_v"])
-        for r in spark.read.parquet(agg_root).collect()
+        for r in read_snapshot(spark, agg_root).collect()
     )
     assert got == [("de", 2, 5), ("en", 1, 30)]
 
@@ -1634,6 +1726,7 @@ def test_vacuum_removes_claim_window_orphans(spark, tmp_path):
 
     from poc_spark.sources.lake import (
         merge_upsert_partitioned,
+        read_snapshot,
         vacuum_tree,
         write_partitioned,
     )
@@ -1657,18 +1750,17 @@ def test_vacuum_removes_claim_window_orphans(spark, tmp_path):
     spark.catalog.refreshByPath(root)
     assert sorted(
         (r["k"], r["text"], r["n"])
-        for r in spark.read.parquet(root).collect()
+        for r in read_snapshot(spark, root).collect()
     ) == [(1, "a3", 3)]
 
 
 def test_plain_overwrite_supersedes_stale_manifest(spark, tmp_path):
     """A plain (non-pointer) overwrite replaces the whole table: Spark
-    swaps the symlink for a real directory but cannot know about the
+    writes a real directory at the root but cannot know about the
     sibling manifest. The REAL directory must supersede the stale
     pointer — resolve serves the fresh tree, and the next commit
     migrates it to a new generation (measured failure: the stale
-    manifest shadowed the fresh base and the symlink flip hit Errno 21
-    on the real directory)."""
+    manifest shadowed the fresh base)."""
     from poc_spark.sources.lake import (
         merge_upsert_partitioned,
         read_snapshot,

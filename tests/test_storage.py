@@ -35,8 +35,7 @@ IDS = ["posix", "fake-objectstore"]
 @pytest.fixture()
 def fake_fs_conf(spark):
     """Force every lake path in the session onto the fake object store
-    (the r9 forced gate, same pattern as spark.poc.lake.pointer).
-    Symlinks are impossible there, so resolution runs manifest-only."""
+    (the r9 forced gate)."""
     spark.conf.set("spark.poc.lake.fs", "fake-objectstore")
     try:
         yield
@@ -213,9 +212,6 @@ def test_posix_carry_is_hardlink_fake_is_copy(tmp_path):
 
 def test_fake_api_offers_no_rename_or_symlink():
     fs = FakeObjectStorage()
-    assert fs.supports_symlink is False
-    with pytest.raises(NotImplementedError, match="symlink"):
-        fs.replace_symlink("target", "/tmp/link")
     assert not hasattr(fs, "rename")  # the op simply does not exist
 
 
@@ -283,24 +279,22 @@ def test_fake_carry_multipart_past_copy_cap(tmp_path):
 
 
 def test_fake_hardening_confs_select_configured_instance(spark):
+    """The conf-selected fake has one shape: the harsh 2-name listing
+    pages and 64-byte copy chunks."""
     spark.conf.set("spark.poc.lake.fs", "fake-objectstore")
-    spark.conf.set("spark.poc.lake.fake.pageSize", "2")
-    spark.conf.set("spark.poc.lake.fake.copyChunk", "4")
     try:
         fs = storage_for(spark)
         assert isinstance(fs, FakeObjectStorage)
-        assert fs.page_size == 2 and fs.copy_chunk_bytes == 4
+        assert fs.page_size == 2 and fs.copy_chunk_bytes == 64
     finally:
         spark.conf.unset("spark.poc.lake.fs")
-        spark.conf.unset("spark.poc.lake.fake.pageSize")
-        spark.conf.unset("spark.poc.lake.fake.copyChunk")
 
 
 def test_lake_lifecycle_on_fake_objectstore(spark, tmp_path, fake_fs_conf):
     """The full CoW lifecycle with NO rename/hardlink/symlink
     available: write → migrate → merge (update+insert+new partition) →
     time travel → vacuum → clone → drop. Everything resolves through
-    the manifest (there is no symlink to fall back on)."""
+    the manifest."""
     from poc_spark.sources.lake import (
         clone_tree,
         drop_tree,
@@ -322,7 +316,7 @@ def test_lake_lifecycle_on_fake_objectstore(spark, tmp_path, fake_fs_conf):
     )
     affected = merge_upsert_partitioned(spark, root, up, "doc_id", "lang")
     assert affected == ["en", "fr"]
-    # no symlink was created: the root is NOT a path at all now
+    # the root is NOT a path at all now
     assert not os.path.lexists(root)
     assert _tree_content(spark, root) == [
         (1, "a2", "en", 2), (2, "b", "de", 1), (3, "c", "fr", 1)
@@ -570,22 +564,3 @@ def test_create_table_versioned_from_birth(spark, tmp_path, fake_fs_conf):
             create_table_versioned(spark, base, root, ["lang"])
     finally:
         FakeObjectStorage.promote_tree_exclusive = real
-
-
-def test_fake_store_conf_error_names_key(spark):
-    """r10 ADVICE: a non-numeric fake-store knob raises a named,
-    actionable error instead of a bare int() ValueError."""
-    import pytest
-
-    from poc_spark.sources.storage import storage_for
-
-    spark.conf.set("spark.poc.lake.fs", "fake-objectstore")
-    spark.conf.set("spark.poc.lake.fake.pageSize", "lots")
-    try:
-        with pytest.raises(
-            ValueError, match=r"spark\.poc\.lake\.fake\.pageSize='lots'"
-        ):
-            storage_for(spark)
-    finally:
-        spark.conf.unset("spark.poc.lake.fake.pageSize")
-        spark.conf.unset("spark.poc.lake.fs")

@@ -180,7 +180,7 @@ def test_maintain_rollup_stream_batch_split_invariant(spark, tmp_path):
     really is multi-batch (maxFilesPerTrigger=1 over 3 files)."""
     from pyspark.sql import functions as F
 
-    from poc_spark.sources.lake import rollup_partial
+    from poc_spark.sources.lake import read_snapshot, rollup_partial
     from poc_spark.streaming.ingest import maintain_rollup_stream
 
     rows = [
@@ -215,7 +215,7 @@ def test_maintain_rollup_stream_batch_split_invariant(spark, tmp_path):
             for r in d.collect()
         }
 
-    got = spark.read.parquet(agg_root).withColumn(
+    got = read_snapshot(spark, agg_root).withColumn(
         "day", F.col("day").cast("string")
     )
     assert state(got) == state(rollup_partial(df, "day", ["k"], ["v"]))
@@ -226,6 +226,7 @@ def test_rollup_batch_replay_is_exactly_once(spark, tmp_path):
     commit-and-checkpoint case) must not double-count: the second
     apply returns False and the rollup is unchanged; a NEW batch id
     still applies."""
+    from poc_spark.sources.lake import read_snapshot
     from poc_spark.streaming.ingest import apply_rollup_batch_exactly_once
 
     root = str(tmp_path / "rollup")
@@ -236,7 +237,7 @@ def test_rollup_batch_replay_is_exactly_once(spark, tmp_path):
     def state():
         return {
             (r["day"], r["k"]): (r["n_rows"], r["sum_v"])
-            for r in spark.read.parquet(root).collect()
+            for r in read_snapshot(spark, root).collect()
         }
 
     assert apply_rollup_batch_exactly_once(
