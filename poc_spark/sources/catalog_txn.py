@@ -60,6 +60,7 @@ from poc_spark.sources.lake import (
     _ensure_versioned,
     _fs,
     _read_tree_dir,
+    _version_number,
     create_branch,
     create_tag,
     delete_ref,
@@ -111,10 +112,6 @@ def catalog_init(
     token = uuid.uuid4().hex[:8]
     entries = {}
     created_tags: list[tuple[str, str]] = []
-    import re
-
-    from poc_spark.sources.lake import _VERSION_RE
-
     for name, root in tables.items():
         cur = _ensure_versioned(root, spark, fs)
         entries[name] = {"root": root, "current": os.path.basename(cur)}
@@ -124,8 +121,7 @@ def catalog_init(
         # time, and a concurrent commit between _ensure_versioned and
         # create_tag would leave `cur` unpinned against retention (the
         # exact window the tags-first ordering exists to close).
-        v = int(re.search(_VERSION_RE, os.path.basename(cur)).group(1))
-        create_tag(spark, root, ref, at_version=v)
+        create_tag(spark, root, ref, at_version=_version_number(cur))
         created_tags.append((root, ref))
     payload = {"epoch": 1, "tables": entries}
     if not fs.put_if_absent(
@@ -200,15 +196,7 @@ def catalog_txn_upsert(
                 # table's pointer moved past the catalog pin: fork the
                 # branch from the pinned version explicitly
                 delete_ref(root, bname)
-                import re
-
-                from poc_spark.sources.lake import _VERSION_RE
-
-                pinned_v = int(
-                    re.search(
-                        _VERSION_RE, cat["tables"][name]["current"]
-                    ).group(1)
-                )
+                pinned_v = _version_number(cat["tables"][name]["current"])
                 create_branch(spark, root, bname, at_version=pinned_v)
             merge_upsert_branch(spark, root, bname, df, key_col, part_col)
             head = list_refs(root, fs)[bname]["current"]
@@ -218,14 +206,12 @@ def catalog_txn_upsert(
         # RACING transactions of the same epoch never collide on a
         # name — the loser's uniquely-named tags are dropped in its
         # error path, the previous epoch's by prefix after a win.
-        import re
-
-        from poc_spark.sources.lake import _VERSION_RE
-
         for name, ent in new_entries.items():
-            v = int(re.search(_VERSION_RE, ent["current"]).group(1))
             create_tag(
-                spark, ent["root"], f"cat{epoch + 1}-{name}-{txn}", at_version=v
+                spark,
+                ent["root"],
+                f"cat{epoch + 1}-{name}-{txn}",
+                at_version=_version_number(ent["current"]),
             )
         if _pre_commit_hook is not None:
             _pre_commit_hook()

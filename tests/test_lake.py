@@ -1699,16 +1699,20 @@ def test_rollup_bootstrap_is_atomic(spark, tmp_path, monkeypatch):
     assert not os.path.lexists(agg_root)
 
     monkeypatch.setattr(PosixStorage, "put_if_absent", real_put)
-    # the crashed bootstrap left a claimed v1 orphan (the claim→commit
-    # window); vacuum reclaims it so the retry can re-claim v1
-    from poc_spark.sources.lake import vacuum_tree
+    # the crashed bootstrap left a claimed v1 that no manifest
+    # publishes (the claim→commit window); vacuum reclaims it, so the
+    # retry claims v1 again
+    from poc_spark.sources.lake import list_versions, vacuum_tree
 
+    assert os.path.isdir(agg_root + ".v000001")
     vacuum_tree(agg_root)
+    assert not os.path.exists(agg_root + ".v000001")
     affected = rollup_incremental(
         spark, agg_root, delta, "part", ["k"], sum_cols=["v"],
         commit_meta={"applied_batches": [0]},
     )
     assert affected == ["de", "en"]
+    assert list_versions(agg_root) == [1]
     assert read_tree_meta(agg_root) == {"applied_batches": [0]}
     got = sorted(
         (r["part"], r["k"], r["sum_v"])
@@ -1752,6 +1756,58 @@ def test_vacuum_removes_claim_window_orphans(spark, tmp_path):
         (r["k"], r["text"], r["n"])
         for r in read_snapshot(spark, root).collect()
     ) == [(1, "a3", 3)]
+
+
+def test_vacuum_removes_a_version_no_manifest_publishes(spark, tmp_path):
+    """A numbered version directory with no manifest beside it was
+    claimed by a first commit that never landed: nothing publishes it,
+    so list_versions does not list it and vacuum removes it."""
+    import os
+
+    from poc_spark.sources.lake import list_versions, vacuum_tree
+
+    root = str(tmp_path / "t")
+    os.makedirs(f"{root}.v000001/p=a")
+    open(f"{root}.v000001/p=a/x.parquet", "wb").close()
+    assert list_versions(root) == []
+    assert vacuum_tree(root, min_stage_age_sec=0) == ["t.v000001"]
+    assert os.listdir(tmp_path) == []
+    assert list_versions(root) == []
+
+
+def test_retention_keeps_the_previous_version_beside_an_orphan(
+    spark, tmp_path
+):
+    """A version dir a crashed writer claimed above the current is not
+    published, so it does not count toward retention — the next commit
+    still keeps the previous version for readers that resolved the
+    pointer just before the flip — and time travel cannot read it."""
+    import os
+
+    import pytest
+
+    from poc_spark.sources.lake import (
+        list_versions,
+        merge_upsert_partitioned,
+        version_dir,
+        write_partitioned,
+    )
+
+    schema = "k long, text string, lang string, n long"
+    root = str(tmp_path / "tree")
+    write_partitioned(
+        spark.createDataFrame([(1, "a", "en", 1)], schema), root, ["lang"]
+    )
+    up = spark.createDataFrame([(1, "a2", "en", 2)], schema)
+    merge_upsert_partitioned(spark, root, up, "k", "lang")  # v1 -> v2
+    os.makedirs(f"{root}.v000004/lang=en")  # a claim that never landed
+    up = spark.createDataFrame([(1, "a3", "en", 3)], schema)
+    merge_upsert_partitioned(spark, root, up, "k", "lang")  # claims v3
+    assert list_versions(root) == [2, 3]
+    assert os.path.isdir(f"{root}.v000002")
+    # and time travel cannot reach the orphan
+    with pytest.raises(ValueError, match="not retained"):
+        version_dir(root, 4)
 
 
 def test_plain_overwrite_supersedes_stale_manifest(spark, tmp_path):
