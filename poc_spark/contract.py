@@ -992,8 +992,8 @@ def q_rank_top3_per_segment(spark, sf_dir):
 )
 def q_user_sessions(spark, sf_dir):
     """Sessionization (gaps-and-islands, 30-min inactivity gap) — the
-    batch twin of streaming/ingest.py's session windows, expressed with
-    window functions so DuckDB can oracle it. Per-user windows: the
+    batch twin of the streaming session windows (stream_session_window),
+    expressed with window functions so DuckDB can oracle it. Per-user windows: the
     shuffle is by user_id, parallel, never global."""
     from pyspark.sql import Window
 
@@ -1047,7 +1047,7 @@ def q_user_sessions(spark, sf_dir):
 def q_session_window(spark, sf_dir):
     """Spark's NATIVE session_window aggregation in batch mode — the
     same operator Structured Streaming uses for stateful session aggs
-    (streaming/ingest.py), here oracled against a gaps-and-islands SQL
+    (stream_session_window), here oracled against a gaps-and-islands SQL
     labeling. Boundary semantics pinned: a gap of EXACTLY the timeout
     starts a new session (sessions merge only when next.ts < prev end,
     so the oracle flags new_sess on diff >= 30 min). min/max stats
@@ -4972,9 +4972,9 @@ def stream_restart_rollup(spark, sf_dir):
     absorbed the same way). The terminal rollup must equal the
     one-shot batch aggregate — count/sum/min/max merges associative
     across an arbitrary split AND a restart boundary, every increment
-    applied exactly once. The restart-from-checkpoint pytest
-    (tests/test_streaming.py) pins the same machinery on the chat
-    path; this entry puts it under the DuckDB oracle."""
+    applied exactly once. tests/test_streaming.py pins the batch-id
+    replay and the batch-split invariance without a restart; this entry
+    adds the restart from the checkpoint, under the DuckDB oracle."""
     import shutil
 
     from poc_spark.sources.lake import drop_tree

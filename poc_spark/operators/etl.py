@@ -45,8 +45,8 @@ def parse_chat_table(raw_chat: DataFrame) -> DataFrame:
     """raw_chat(value, file_path, line_id) → messages rows
     (group_name, date_time, sender, message, file_path, line_id).
 
-    date_time is the raw "7.10.2023, 19:43:25" string (reference keeps it
-    untyped); use `typed_messages` for the proper TimestampType column.
+    date_time is the raw "7.10.2023, 19:43:25" string, untyped like the
+    reference's MySQL column (backend/main.py:380-384).
     """
     trimmed = F.btrim("value", F.lit(PY_WHITESPACE))
     parsed = raw_chat.select(
@@ -65,24 +65,6 @@ def parse_chat_table(raw_chat: DataFrame) -> DataFrame:
     with_group = parsed.withColumn("group_name", F.first("sender").over(w))
     return with_group.filter(F.col("sender") != F.col("group_name")).select(
         "group_name", "date_time", "sender", "message", "file_path", "line_id"
-    )
-
-
-def typed_messages(messages: DataFrame) -> DataFrame:
-    """Upgrade the raw date_time string to typed ts/msg_date columns
-    (schema MESSAGES in poc_spark/schemas.py). Tolerant parse: malformed
-    stamps become null rather than failing the job."""
-    return messages.select(
-        "group_name",
-        F.try_to_timestamp(F.col("date_time"), F.lit("d.M.yyyy, HH:mm:ss")).alias("ts"),
-        F.try_to_timestamp(
-            F.split(F.col("date_time"), ",").getItem(0), F.lit("d.M.yyyy")
-        )
-        .cast("date")
-        .alias("msg_date"),
-        "sender",
-        "message",
-        "line_id",
     )
 
 

@@ -1,14 +1,17 @@
 """Sketch operators: mergeable approximate aggregates for 100 TB-scale
-profiling — HyperLogLog cardinality (Apache DataSketches HLL via
-hll_sketch_agg / hll_union_agg), approximate quantiles, and frequent
-items.
+profiling — grouped approx distinct next to its exact count, the
+DataSketches HLL union (hll_sketch_agg / hll_union_agg), a relational
+HLL whose state is rows, and a sum-mergeable fixed-width histogram for
+quantiles.
 
 Why sketches are the scale path: an exact COUNT(DISTINCT x) shuffles
 every distinct value; an HLL sketch is a few KB per partition, merges
 associatively (partial agg -> one tiny final merge), and can be stored
 per partition/day and re-unioned later without touching the raw data.
-Same for quantiles (mergeable percentile_approx / KLL-style) vs a full
-sort.
+Same for a histogram state vs a full sort. A plain grouped approx
+quantile or frequent-items pass needs no wrapper here: call Catalyst's
+percentile_approx (contract.sketch_quantile_bounds does, inline) or
+DataFrame.freqItems directly, and the optimizer keeps it.
 
 Accuracy contracts (rel-err bounds) are pinned in tests/test_sketches.py
 against exact answers; the DuckDB oracle for the contract entry checks
@@ -43,20 +46,6 @@ def approx_distinct_by(
     return out.select(*keys, "n_exact", "n_approx", bound.alias("within_bound"))
 
 
-def hll_cardinality_by(
-    df: DataFrame, keys: Sequence[str], col: str, lg_k: int = 12
-) -> DataFrame:
-    """(keys..., estimate) — DataSketches HLL cardinality per group.
-    The sketch is a mergeable binary: partial-aggregates per partition,
-    one small shuffle of ~2^lg_k-byte sketches, final merge — never a
-    shuffle of the values themselves."""
-    return df.groupBy(*keys).agg(
-        F.hll_sketch_estimate(
-            F.hll_sketch_agg(F.col(col), F.lit(lg_k))
-        ).alias("estimate")
-    )
-
-
 def hll_union_estimate(
     df: DataFrame, keys: Sequence[str], col: str, lg_k: int = 12
 ) -> DataFrame:
@@ -72,38 +61,6 @@ def hll_union_estimate(
         F.hll_sketch_estimate(
             F.hll_union_agg(F.col("sk"), F.lit(False))  # same lg_k everywhere
         ).alias("estimate")
-    )
-
-
-def approx_quantiles_by(
-    df: DataFrame,
-    keys: Sequence[str],
-    col: str,
-    probs: Sequence[float] = (0.25, 0.5, 0.75),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """(keys..., q_<p>...) — grouped percentile_approx (mergeable
-    quantile summary, cf. Greenwald-Khanna/KLL). Error is rank-based:
-    rank(result) within n/accuracy of the true rank."""
-    aggs = [
-        F.percentile_approx(F.col(col), F.lit(p), F.lit(accuracy)).alias(
-            f"q_{str(p).replace('.', '_')}"
-        )
-        for p in probs
-    ]
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def frequent_items(
-    df: DataFrame, col: str, min_share: float = 0.01
-) -> DataFrame:
-    """1-row (items: array) — single-pass frequent-items candidates
-    (Karp et al. misra-gries variant via DataFrame.freqItems): every
-    value with frequency > min_share*n is guaranteed present (possibly
-    with false positives — filter with one exact pass over the
-    candidate set when precision matters)."""
-    return df.freqItems([col], support=min_share).select(
-        F.col(f"{col}_freqItems").alias("items")
     )
 
 

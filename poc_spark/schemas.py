@@ -8,7 +8,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     BinaryType,
-    DateType,
     IntegerType,
     LongType,
     MapType,
@@ -24,19 +23,6 @@ RAW_CHAT = StructType(
     [
         StructField("value", StringType()),
         StructField("file_path", StringType()),
-        StructField("line_id", LongType()),
-    ]
-)
-
-# parsed, typed message table (reference keeps date_time as a raw string in
-# MySQL, backend/main.py:380-384; we type it properly).
-MESSAGES = StructType(
-    [
-        StructField("group_name", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("msg_date", DateType()),
-        StructField("sender", StringType()),
-        StructField("message", StringType()),
         StructField("line_id", LongType()),
     ]
 )

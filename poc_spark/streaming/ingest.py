@@ -1,163 +1,27 @@
-"""Structured Streaming ingestion of chat exports (SURVEY §7.1 M4:
-new capability, not reference parity — the reference processes uploads
-eagerly; the data is naturally a timestamped event stream).
+"""Structured Streaming ingestion into versioned lake trees, with
+exactly-once micro-batch commits.
 
-Pipeline: file source (readStream.text over a landing directory — the
-same `./uploads/` landing zone the reference writes, backend/main.py:22)
-→ the SAME parse expressions as the batch path (poc_spark/functions/
-chat_parse.py — one set of semantics, two execution modes) → watermark →
-session-window burst aggregation / parquet sink.
+Each shape here drains a landing directory through a FileStreamSource
+(`availableNow`, `maxFilesPerTrigger` bounds per-batch work) and lands
+every micro-batch through `foreachBatch` as ONE version-pointer commit
+of `sources/lake.py`:
 
-Ordering note: streaming has no file line_id; event time (`ts`) is the
-order. Lag-style edge construction is NOT a streaming aggregate — for
-continuous graphs use foreachBatch over micro-batches (each batch runs
-the batch lag_edges and merges counts), which `edges_foreach_batch`
-wires up.
+  - rollup maintenance (`maintain_rollup_stream`): partial-aggregate the
+    batch and merge it by summing into only the affected partitions;
+  - table append (`ingest_stream_to_table`): raw append into the named
+    partitions;
+  - view maintenance (`maintain_view_stream`): join the fact delta to a
+    broadcast dim table and upsert the view rows.
+
+Spark's checkpoint delivers each batch at least once after a crash; the
+`*_exactly_once` appliers make the sink side idempotent by recording the
+applied batch ids in the tree's own commit metadata, so a redelivered
+batch is skipped instead of counted twice.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from poc_spark.functions.chat_parse import (
-    extract_message_text,
-    extract_sender,
-    is_media_omitted,
-    is_message_format,
-    stamp,
-)
-
-
-def stream_chat_lines(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """Streaming raw_chat(value, file_path) from a landing DIRECTORY.
-    maxFilesPerTrigger bounds per-batch work at scale."""
-    import os
-
-    # the file-stream source requires a directory; a file path fails
-    # mid-query with an obscure "basePath must be a directory" — catch
-    # it at the API boundary instead
-    if os.path.exists(landing_dir) and not os.path.isdir(landing_dir):
-        raise NotADirectoryError(
-            f"stream_chat_lines needs a landing directory, got file: {landing_dir}"
-        )
-    return (
-        spark.readStream.option("maxFilesPerTrigger", 64)
-        .text(landing_dir)
-        .select(F.col("value"), F.input_file_name().alias("file_path"))
-    )
-
-
-def parse_chat_stream(raw: DataFrame) -> DataFrame:
-    """Streaming twin of parse_chat_lines: same filters/normalization,
-    full timestamp extracted for event time (d.M.yyyy, HH:mm:ss)."""
-    line = F.col("value")
-    return (
-        raw.filter(~is_media_omitted(line))
-        .filter(is_message_format(line))
-        .withColumn("ts", F.try_to_timestamp(stamp(line), F.lit("d.M.yyyy, HH:mm:ss")))
-        .filter(F.col("ts").isNotNull())
-        .withColumn("sender", extract_sender(line))
-        .filter(F.length("sender") > 0)
-        .withColumn("message", extract_message_text(line))
-        .select("file_path", "ts", "sender", "message")
-    )
-
-
-def conversation_bursts(
-    parsed: DataFrame,
-    gap: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Session-window burst detection per chat file: a burst is a run of
-    messages with < `gap` silence between them. Watermark bounds state;
-    late lines beyond it are dropped (documented streaming semantics)."""
-    return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("file_path"))
-        .agg(
-            F.count(F.lit(1)).alias("n_messages"),
-            F.approx_count_distinct("sender").alias("n_senders"),
-        )
-        .select(
-            "file_path",
-            F.col("w.start").alias("burst_start"),
-            F.col("w.end").alias("burst_end"),
-            "n_messages",
-            "n_senders",
-        )
-    )
-
-
-def stream_messages_to_parquet(
-    parsed: DataFrame, path: str, checkpoint: str
-):
-    """Continuous ETL sink (EP-2's table, streaming): exactly-once parquet
-    append via checkpointed file sink. Returns the StreamingQuery."""
-    return (
-        parsed.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def edges_foreach_batch(
-    parsed: DataFrame, out_path: str, checkpoint: str
-):
-    """Continuous interaction-graph maintenance: each micro-batch runs
-    the *batch* lag-edge operator (per file, ordered by ts) and appends
-    its edge deltas; readers aggregate SUM(weight) per (source, target).
-    This is the streaming twin of EP-1 — window-function lag isn't a
-    streaming op, so micro-batch + merge is the idiomatic shape."""
-    from poc_spark.operators.network import lag_edges
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        edges = lag_edges(
-            batch_df, "sender", ("ts",), partition_cols=("file_path",)
-        )
-        edges.write.mode("append").parquet(out_path)
-
-    return (
-        parsed.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_message_counts(
-    parsed: DataFrame,
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Tumbling (or sliding, when `slide` is given) event-time window
-    counts per sender — the canonical watermarked streaming aggregate.
-
-    Append-mode semantics: a window emits exactly once, when the
-    watermark passes its end; events later than the watermark are
-    DROPPED (bounded state — the 100 TB posture: state size is
-    windows×senders inside the watermark horizon, never the stream).
-    tests/test_streaming.py pins the late-drop behavior across
-    checkpointed runs."""
-    w = (
-        F.window("ts", window, slide)
-        if slide is not None
-        else F.window("ts", window)
-    )
-    return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(w.alias("w"), F.col("sender"))
-        .agg(F.count(F.lit(1)).alias("n_messages"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "sender",
-            "n_messages",
-        )
-    )
+from pyspark.sql import DataFrame
 
 
 def maintain_rollup_stream(

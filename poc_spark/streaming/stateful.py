@@ -1,13 +1,12 @@
 """Custom stateful streaming operators via applyInPandasWithState —
 the escape hatch for semantics Structured Streaming's built-in
-aggregations can't express (here: exactly-once cross-batch dedup).
+aggregations can't express (here: exactly-once cross-batch
+first-occurrence per key, `first_event_stream`).
 
 State design notes (100 TB posture):
   - state is per-key and lives in the state store (RocksDB on a real
     cluster: spark.sql.streaming.stateStore.providerClass) — the
     operator never holds the corpus in memory;
-  - the key should be a content hash, uniformly distributed, so state
-    shards evenly across partitions;
   - for bounded state growth use a TTL timeout; dedup-forever keeps
     state per distinct key (the honest cost of exact streaming dedup —
     a probabilistic variant would bloom-filter per window).
@@ -21,66 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-DEDUP_OUT_SCHEMA = (
-    "text_sha string, file_path string, ts timestamp, sender string, "
-    "message string"
-)
-
-
-def emit_first_occurrence(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-key state function: emit the min-ts row the first time the key
-    is ever seen, nothing afterwards.
-
-    A key's in-batch rows can span multiple Arrow chunks — keep the
-    running min-ts row across ALL chunks, not just the first non-empty
-    one, or the emitted "first occurrence" would depend on Arrow batch
-    boundaries. idxmin is first-occurrence-stable and the cross-chunk
-    comparison is strict (<), so equal timestamps resolve to stream
-    order deterministically."""
-    if state.exists:
-        return  # key seen in an earlier batch: drop everything
-    first: pd.DataFrame | None = None
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        cand = pdf.loc[[pdf["ts"].idxmin()]]
-        if first is None or cand["ts"].iloc[0] < first["ts"].iloc[0]:
-            first = cand
-    if first is not None:
-        state.update((True,))
-        yield first[["text_sha", "file_path", "ts", "sender", "message"]]
-
-
-def dedup_stream(parsed: DataFrame) -> DataFrame:
-    """Streaming exact dedup of parsed chat messages: the FIRST
-    occurrence of each normalized message text (per sender) is emitted;
-    every later duplicate — same batch or any later batch — is dropped.
-
-    Grouping key = sha2(sender || normalized text). State = one boolean
-    per seen key."""
-    keyed = parsed.withColumn(
-        "text_sha",
-        F.sha2(
-            F.concat_ws(
-                "|",
-                F.col("sender"),
-                F.lower(F.trim(F.regexp_replace("message", r"\s+", " "))),
-            ),
-            256,
-        ),
-    )
-
-    return keyed.groupBy("text_sha").applyInPandasWithState(
-        emit_first_occurrence,
-        outputStructType=DEDUP_OUT_SCHEMA,
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 EVENT_FIRST_SCHEMA = "user_id long, event_type string, first_ts_us long"
 

@@ -1,15 +1,11 @@
 """EP-2 (/upload-chats) parity tests: anchored regex parse, group-name
-exclusion, raw date_time string, typed upgrade, parquet append sink."""
+exclusion, raw date_time string, parquet append sink."""
 
 from __future__ import annotations
 
 import re
 
-from poc_spark.operators.etl import (
-    append_messages,
-    parse_chat_table,
-    typed_messages,
-)
+from poc_spark.operators.etl import append_messages, parse_chat_table
 from poc_spark.sources.chat import chat_lines_from_strings
 
 # line 0's sender becomes the group name (and is excluded); later lines
@@ -52,13 +48,6 @@ def test_etl_golden(spark):
     # raw fidelity: date_time is the unparsed string, sender unnormalized
     assert got[0]["date_time"] == "7.10.2023, 19:44:00"
     assert got[0]["sender"] == "~🦋"
-
-
-def test_etl_typed_upgrade(spark):
-    raw = chat_lines_from_strings(spark, ETL_LINES)
-    typed = typed_messages(parse_chat_table(raw)).orderBy("line_id").collect()
-    assert str(typed[0]["ts"]) == "2023-10-07 19:44:00"
-    assert str(typed[0]["msg_date"]) == "2023-10-07"
 
 
 def test_etl_sink_roundtrip(spark, tmp_path_repo):

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from poc_spark.functions.chat_parse import parse_chat_lines
 from poc_spark.operators.network import interaction_graph
 from poc_spark.sources.chat import chat_lines_from_strings
-from poc_spark.streaming.ingest import parse_chat_stream
 from tests.reference_oracle import analyze_network
 
 _sender = st.sampled_from(
@@ -78,19 +77,13 @@ def _strptime_day(s: str) -> str | None:
 @given(texts=st.lists(_date_text, min_size=1, max_size=60))
 @example(texts=[" 1.1.2023", " 2.1.2023", " 10.1.2023", "  1.1.2023", "001.1.2023", "1.1.0000"])
 def test_stamp_day_matches_strptime(spark, texts):
-    """The stamp's day, in both chat parses, is the day
-    datetime.strptime(s, "%d.%m.%Y") reads, or none where it raises:
-    the graph parse's msg_date, and the date of the stream parse's
-    event time."""
+    """The stamp's day in the graph parse's msg_date is the day
+    datetime.strptime(s, "%d.%m.%Y") reads, or none where it raises."""
     expected = {str(i): d for i, s in enumerate(texts) if (d := _strptime_day(s))}
-
-    def days(parsed, day):
-        rows = parsed.select("message", day.cast("string").alias("day")).collect()
-        return {r["message"]: r["day"] for r in rows}
-
     graph = [f"[{s}] A: {i}" for i, s in enumerate(texts)]
-    stream = [f"[{s}, 10:00:00] A: {i}" for i, s in enumerate(texts)]
-    got = days(parse_chat_lines(chat_lines_from_strings(spark, graph)), F.col("msg_date"))
-    assert got == expected
-    got = days(parse_chat_stream(chat_lines_from_strings(spark, stream)), F.to_date("ts"))
-    assert got == expected
+    rows = (
+        parse_chat_lines(chat_lines_from_strings(spark, graph))
+        .select("message", F.col("msg_date").cast("string").alias("day"))
+        .collect()
+    )
+    assert {r["message"]: r["day"] for r in rows} == expected

@@ -128,12 +128,12 @@ def test_compact_round_robin_uniform_rows(spark, sf_dir, tmp_path_repo):
     assert max(counts) <= 2 * fair
 
 
-def test_compact_partitioned_tree(spark, sf_dir, tmp_path_repo):
-    """Hive-tree compaction preserves the partition layout and the
-    data; the flat compact() refuses the tree outright."""
+def test_compact_refuses_partitioned_tree(spark, sf_dir, tmp_path_repo):
+    """The flat compact() refuses a hive tree outright: its files sit
+    one level down, so the listing finds no bytes to size from."""
     import pytest as pt
 
-    from poc_spark.sources.lake import compact, compact_partitioned
+    from poc_spark.sources.lake import compact
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     src = str(tmp_path_repo / "hive_frag")
@@ -144,18 +144,6 @@ def test_compact_partitioned_tree(spark, sf_dir, tmp_path_repo):
 
     with pt.raises(ValueError, match="per partition"):
         compact(spark, src, dst)
-
-    per_part = compact_partitioned(spark, src, dst)
-    assert set(per_part) == {
-        f"lang={r['lang']}" for r in docs.select("lang").distinct().collect()
-    }
-    back = spark.read.option("basePath", dst).parquet(
-        *[f"{dst}/{p}" for p in per_part]
-    )
-    cols = [f.name for f in DOCUMENTS_SCHEMA.fields]
-    a = sorted(docs.select(*cols).collect(), key=lambda r: r["doc_id"])
-    b = sorted(back.select(*cols).collect(), key=lambda r: r["doc_id"])
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
 def test_clustered_files_have_disjoint_ranges(spark, sf_dir, tmp_path_repo):
@@ -792,96 +780,6 @@ def test_rollup_incremental_merges_partials_and_carries_rest(spark, tmp_path):
         == []
     )
     assert state(read_snapshot(spark, root)) == want
-
-
-def test_stats_index_skips_files_without_losing_rows(spark, tmp_path):
-    """Range-clustered files + stats index: an interior range selects
-    a strict subset of files yet returns exactly the rows a full-scan
-    filter returns; a fully out-of-range query selects zero files and
-    yields an empty frame with the data schema intact."""
-    from poc_spark.sources.lake import (
-        build_stats_index,
-        read_with_skipping,
-        write_clustered,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"u{i % 7}") for i in range(40)], "id long, tag string"
-    )
-    data = str(tmp_path / "data")
-    idxp = str(tmp_path / "idx")
-    write_clustered(df, data, "id", n_files=4)
-    assert build_stats_index(spark, data, ["id"], idxp) == 4
-
-    got, n_sel, n_tot = read_with_skipping(spark, data, idxp, "id", 5, 9)
-    assert n_tot == 4 and 0 < n_sel < n_tot
-    assert sorted(r["id"] for r in got.collect()) == list(range(5, 10))
-
-    empty, n_sel0, _ = read_with_skipping(spark, data, idxp, "id", 100, 200)
-    assert n_sel0 == 0
-    assert empty.columns == ["id", "tag"] and empty.count() == 0
-
-
-def test_bloom_index_point_lookup(spark, tmp_path):
-    """Unique-key point lookup through the per-file bloom: selects a
-    strict subset of a round-robin (unclustered) layout and returns
-    exactly the matching row; an absent value returns an empty frame
-    (false positives may select files, never rows)."""
-    from poc_spark.sources.lake import build_bloom_index, read_with_bloom
-
-    df = spark.createDataFrame(
-        [(i, f"tag{i % 5}") for i in range(200)], "id long, tag string"
-    )
-    data = str(tmp_path / "data")
-    idxp = str(tmp_path / "idx")
-    df.repartition(8).write.parquet(data)
-    assert build_bloom_index(spark, data, "id", idxp, bits=4096, k=3) == 8
-
-    got, n_sel, n_tot = read_with_bloom(
-        spark, data, idxp, "id", 137, bits=4096, k=3
-    )
-    assert n_tot == 8 and 0 < n_sel < n_tot
-    assert [(r["id"], r["tag"]) for r in got.collect()] == [(137, "tag2")]
-
-    miss, n_miss, _ = read_with_bloom(
-        spark, data, idxp, "id", 10_000, bits=4096, k=3
-    )
-    assert miss.count() == 0 and n_miss < n_tot
-
-    # r7 ADVICE (high) regression: a value whose k probes hash into the
-    # SAME 64-bit word used to be wrongly pruned — the probe demanded
-    # one index row per (word, bit) pair but the index stores one row
-    # per (file, word), so the match count could never reach k and a
-    # PRESENT key silently returned zero rows. Sweep every such id.
-    from pyspark.sql import functions as F
-
-    probe_rows = spark.range(200).select(
-        "id",
-        *[
-            (
-                F.pmod(
-                    F.xxhash64(F.lit(f"bloom:{i}"), F.col("id")),
-                    F.lit(4096),
-                )
-                / 64
-            )
-            .cast("long")
-            .alias(f"w{i}")
-            for i in range(3)
-        ],
-    ).collect()
-    colliders = [
-        r["id"]
-        for r in probe_rows
-        if len({r["w0"], r["w1"], r["w2"]}) < 3
-    ]
-    assert colliders, "expected >=1 word-colliding id in 0..199"
-    for v in colliders[:4]:
-        got_c, n_c, _ = read_with_bloom(
-            spark, data, idxp, "id", int(v), bits=4096, k=3
-        )
-        assert n_c > 0
-        assert [r["id"] for r in got_c.collect()] == [v]
 
 
 def test_merge_apply_cdc_delete_arm(spark, tmp_path):

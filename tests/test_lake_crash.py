@@ -362,11 +362,8 @@ _UNCOVERED = {
     "outside `_commit`",
     "write_partitioned": _PLAIN,
     "compact": _PLAIN,
-    "compact_partitioned": _PLAIN,
     "write_clustered": _PLAIN,
     "write_orc": _PLAIN,
-    "build_stats_index": _PLAIN,
-    "build_bloom_index": _PLAIN,
     "rollup_partial": "pure DataFrame transform",
     **dict.fromkeys(
         [
@@ -384,8 +381,6 @@ _UNCOVERED = {
             "snapshot_diff",
             "cdc_latest_state",
             "change_feed",
-            "read_with_skipping",
-            "read_with_bloom",
             "read_tree_with_skipping",
             "read_tree_with_bloom",
             "catalog_read_table",

@@ -7,9 +7,6 @@ from pyspark.sql import functions as F
 
 from poc_spark.operators.sketches import (
     approx_distinct_by,
-    approx_quantiles_by,
-    frequent_items,
-    hll_cardinality_by,
     hll_union_estimate,
 )
 
@@ -25,22 +22,6 @@ def test_approx_distinct_within_bound(spark, sf_dir):
     for r in rows:
         assert r["within_bound"], r
         assert abs(r["n_approx"] - r["n_exact"]) / r["n_exact"] <= 0.15
-
-
-def test_hll_cardinality_close_to_exact(spark, sf_dir):
-    li = _lineitem(spark, sf_dir)
-    est = {
-        r["l_returnflag"]: r["estimate"]
-        for r in hll_cardinality_by(li, ["l_returnflag"], "l_orderkey").collect()
-    }
-    exact = {
-        r["l_returnflag"]: r["n"]
-        for r in li.groupBy("l_returnflag")
-        .agg(F.countDistinct("l_orderkey").alias("n"))
-        .collect()
-    }
-    for k, n in exact.items():
-        assert abs(est[k] - n) / n <= 0.05, (k, est[k], n)
 
 
 def test_hll_union_merges_group_sketches(spark, sf_dir):
@@ -61,31 +42,6 @@ def test_hll_union_merges_group_sketches(spark, sf_dir):
         .collect()[0][0]
     )
     assert per_group_sum > exact * 1.2
-
-
-def test_approx_quantiles_rank_bound(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    got = approx_quantiles_by(
-        orders, [], "o_totalprice", probs=(0.5,), accuracy=10000
-    ).collect()[0]["q_0_5"]
-    # rank error <= n/accuracy: the approx median must sit between the
-    # exact 0.49 and 0.51 quantiles (much looser than n/10000)
-    lo, hi = (
-        orders.agg(
-            F.percentile(F.col("o_totalprice"), F.lit(0.49)),
-            F.percentile(F.col("o_totalprice"), F.lit(0.51)),
-        ).collect()[0][:2]
-    )
-    assert lo <= got <= hi, (lo, got, hi)
-
-
-def test_frequent_items_finds_heavy_hitter(spark):
-    df = spark.createDataFrame(
-        [(i, "hot" if i % 2 == 0 else f"cold{i}") for i in range(1000)],
-        "id long, v string",
-    )
-    items = frequent_items(df, "v", min_share=0.3).collect()[0]["items"]
-    assert "hot" in items
 
 
 def test_relational_hll_accuracy_and_merge(spark):

@@ -1,73 +1,17 @@
-"""applyInPandasWithState cross-batch dedup: duplicates dropped within
-a batch AND across separate runs sharing a checkpoint."""
+"""applyInPandasWithState cross-batch first occurrence: each key emits
+its min event time once, within a batch AND across micro-batches."""
 
 from __future__ import annotations
 
-import pytest
-
-from poc_spark.streaming.ingest import parse_chat_stream, stream_chat_lines
-from poc_spark.streaming.stateful import dedup_stream
-
-BATCH1 = """[1.10.2023, 08:00:00] Alice: hello world
-[1.10.2023, 08:01:00] Bob: unique message
-[1.10.2023, 08:02:00] Alice: hello   WORLD
-[1.10.2023, 08:03:00] Bob: hello world
-"""
-# Alice's second line normalizes to her first -> dropped (same batch);
-# Bob's "hello world" is a DIFFERENT key (sender in the hash) -> kept.
-
-BATCH2 = """[2.10.2023, 09:00:00] Alice: hello world
-[2.10.2023, 09:01:00] Alice: brand new
-"""
-# Alice's repeat arrives a batch later -> dropped by state; new kept.
-
-
-def _run(spark, landing, out, ckpt):
-    q = (
-        dedup_stream(parse_chat_stream(stream_chat_lines(spark, str(landing))))
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", str(out))
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return sorted(
-        (str(r["ts"]), r["sender"], r["message"])
-        for r in spark.read.parquet(str(out)).collect()
-    )
-
-
-def test_cross_batch_dedup(spark, tmp_path_repo):
-    landing = tmp_path_repo / "landing"
-    landing.mkdir()
-    (landing / "b1.txt").write_text(BATCH1, encoding="utf-8")
-    out, ckpt = tmp_path_repo / "out", tmp_path_repo / "ckpt"
-
-    got1 = _run(spark, landing, out, ckpt)
-    assert got1 == [
-        ("2023-10-01 08:00:00", "Alice", "hello world"),
-        ("2023-10-01 08:01:00", "Bob", "unique message"),
-        ("2023-10-01 08:03:00", "Bob", "hello world"),
-    ]
-
-    (landing / "b2.txt").write_text(BATCH2, encoding="utf-8")
-    got2 = _run(spark, landing, out, ckpt)
-    # only the genuinely new message was added; Alice's cross-batch
-    # duplicate was suppressed by the state store
-    assert len(got2) == 4
-    assert ("2023-10-02 09:01:00", "Alice", "brand new") in got2
-    assert ("2023-10-02 09:00:00", "Alice", "hello world") not in got2
-
 
 def test_emit_first_spans_arrow_chunks():
-    """The min-ts row must win even when it arrives in a LATER pandas
-    chunk of the same group (Arrow chunking is an implementation detail,
-    not an ordering guarantee)."""
+    """The min event time must win even when it arrives in a LATER
+    pandas chunk of the same group, past an empty chunk (Arrow chunking
+    is an implementation detail, not an ordering guarantee); a key
+    already seen emits nothing."""
     import pandas as pd
 
-    from poc_spark.streaming.stateful import emit_first_occurrence
+    from poc_spark.streaming.stateful import _emit_first_event
 
     class FakeState:
         exists = False
@@ -75,40 +19,25 @@ def test_emit_first_spans_arrow_chunks():
         def update(self, v):
             self.exists = True
 
-    def row(ts, msg):
-        return {
-            "text_sha": "k",
-            "file_path": "f",
-            "ts": pd.Timestamp(ts),
-            "sender": "Alice",
-            "message": msg,
-        }
+    def chunk(*ts_us):
+        return pd.DataFrame({"user_id": [1] * len(ts_us),
+                             "event_type": ["click"] * len(ts_us),
+                             "ts_us": list(ts_us)})
 
-    # chunk 1 holds later rows; the true first occurrence is in chunk 2
-    chunks = iter(
-        [
-            pd.DataFrame([row("2023-10-01 09:00:00", "late"),
-                          row("2023-10-01 09:05:00", "later")]),
-            pd.DataFrame([]),
-            pd.DataFrame([row("2023-10-01 08:00:00", "FIRST"),
-                          row("2023-10-01 08:30:00", "second")]),
-        ]
-    )
-    out = list(emit_first_occurrence(("k",), chunks, FakeState()))
+    # chunk 1 holds later events; the true first occurrence is in chunk 3
+    chunks = iter([chunk(900, 905), pd.DataFrame([]), chunk(800, 830)])
+    state = FakeState()
+    out = list(_emit_first_event((1, "click"), chunks, state))
     assert len(out) == 1
-    assert out[0]["message"].iloc[0] == "FIRST"
+    assert out[0].to_dict("records") == [
+        {"user_id": 1, "event_type": "click", "first_ts_us": 800}
+    ]
+    assert state.exists
 
     # already-seen key: nothing emitted regardless of content
     seen = FakeState()
     seen.exists = True
-    assert (
-        list(
-            emit_first_occurrence(
-                ("k",), iter([pd.DataFrame([row("2023-10-01 07:00:00", "x")])]), seen
-            )
-        )
-        == []
-    )
+    assert list(_emit_first_event((1, "click"), iter([chunk(700)]), seen)) == []
 
 
 def test_first_event_stream_cross_batch(spark, tmp_path_repo):

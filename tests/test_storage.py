@@ -82,7 +82,6 @@ def test_lake_module_has_no_posix_mutation_primitives():
         if tok.type in (tokenize.NAME, tokenize.OP, tokenize.STRING):
             if tok.start[0] not in doc_lines:
                 code_lines.append((tok.start[0], tok.string))
-    code = "\n".join(t for _, t in code_lines)
     forbidden = [
         r"os\s*\.\s*rename",
         r"os\s*\.\s*replace",
@@ -92,21 +91,31 @@ def test_lake_module_has_no_posix_mutation_primitives():
         r"os\s*\.\s*unlink",
         r"shutil\s*\.\s*rmtree",
         r"shutil\s*\.\s*copy",
-        r"os\s*\.\s*scandir",
         r"os\s*\.\s*listdir",
     ]
-    flat = code.replace("\n", "")
+    flat = "".join(t for _, t in code_lines)
     hits = [p for p in forbidden if re.search(p, flat)]
-    # the two flat-layout helpers (_list_parquet_sizes,
-    # _list_partition_dirs) predate the pointer lake and already have
-    # their own local/hadoop split; they are read-only listing. Allow
-    # os.scandir/listdir ONLY there by checking the mutation set
-    # strictly and the listing set against the pointer-protocol
-    # functions.
-    mutations = hits and [h for h in hits if "scandir" not in h and "listdir" not in h]
-    assert not mutations, (
-        f"lake.py uses POSIX-only mutation primitives directly: "
-        f"{mutations} — route them through poc_spark/sources/storage.py"
+    assert not hits, (
+        f"lake.py uses POSIX-only primitives directly: {hits} — route "
+        f"them through poc_spark/sources/storage.py"
+    )
+    # one read-only local listing stays: _list_parquet_sizes sizes a
+    # directory's parquet files for compact() and compact_partitions,
+    # with its own local/Hadoop split.
+    # os.scandir anywhere else bypasses the Storage seam.
+    lister = next(
+        n
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "_list_parquet_sizes"
+    )
+    outside = "".join(
+        t
+        for ln, t in code_lines
+        if not lister.lineno <= ln <= lister.end_lineno
+    )
+    assert not re.search(r"os\s*\.\s*scandir", outside), (
+        "lake.py lists the local filesystem outside _list_parquet_sizes "
+        "— list through poc_spark/sources/storage.py"
     )
 
 

@@ -1,151 +1,8 @@
-"""Structured Streaming tests: file-source ingestion, session-window
-bursts, parquet sink, foreachBatch edge maintenance — all driven with
-availableNow triggers on real files."""
+"""Structured Streaming tests: the gated hourly-count entry, and the
+exactly-once rollup and append micro-batch commits into versioned lake
+trees — all driven with availableNow triggers on real files."""
 
 from __future__ import annotations
-
-import pytest
-
-from poc_spark.streaming.ingest import (
-    conversation_bursts,
-    edges_foreach_batch,
-    parse_chat_stream,
-    stream_chat_lines,
-    stream_messages_to_parquet,
-)
-
-CHAT = """[1.10.2023, 08:00:00] Alice: burst one a
-[1.10.2023, 08:01:00] Bob: burst one b
-[1.10.2023, 08:02:00] Alice: burst one c
-[1.10.2023, 09:00:00] Bob: burst two a
-[1.10.2023, 09:01:30] Carol: burst two b
-garbage line
-[1.10.2023, 09:02:00] Bob: הושמט media
-"""
-
-
-@pytest.fixture()
-def landing(tmp_path_repo):
-    d = tmp_path_repo / "landing"
-    d.mkdir()
-    (d / "chat1.txt").write_text(CHAT, encoding="utf-8")
-    return d
-
-
-def test_stream_parse_and_sink(spark, landing, tmp_path_repo):
-    parsed = parse_chat_stream(stream_chat_lines(spark, str(landing)))
-    assert parsed.isStreaming
-    q = stream_messages_to_parquet(
-        parsed, str(tmp_path_repo / "msgs"), str(tmp_path_repo / "ckpt1")
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path_repo / "msgs"))
-    rows = out.orderBy("ts").collect()
-    assert len(rows) == 5                     # garbage + omitted dropped
-    assert rows[0]["sender"] == "Alice" and str(rows[0]["ts"]).startswith("2023-10-01 08:00")
-
-
-def test_conversation_bursts(spark, landing, tmp_path_repo):
-    out = tmp_path_repo / "bursts"
-
-    def run_once():
-        parsed = parse_chat_stream(stream_chat_lines(spark, str(landing)))
-        q = (
-            conversation_bursts(parsed, gap="5 minutes")
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", str(out))
-            .option("checkpointLocation", str(tmp_path_repo / "ckpt2"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return sorted(
-            spark.read.parquet(str(out)).collect(),
-            key=lambda r: r["burst_start"],
-        )
-
-    # run 1: watermark (max_ts - 10min = 08:51:30) closes only burst 1;
-    # burst 2 is still open state — correct append-mode semantics.
-    got = run_once()
-    assert [r["n_messages"] for r in got] == [3]
-    assert got[0]["n_senders"] == 2
-
-    # a later file arrives; restart from the SAME checkpoint — the
-    # watermark advances past burst 2's close and it emits.
-    (landing / "chat2.txt").write_text(
-        "[1.10.2023, 10:00:00] Dave: much later\n", encoding="utf-8"
-    )
-    got = run_once()
-    assert [r["n_messages"] for r in got] == [3, 2]
-    assert got[1]["n_senders"] == 2
-
-
-def test_streaming_edges_foreach_batch(spark, landing, tmp_path_repo):
-    parsed = parse_chat_stream(stream_chat_lines(spark, str(landing)))
-    q = edges_foreach_batch(
-        parsed, str(tmp_path_repo / "edges"), str(tmp_path_repo / "ckpt3")
-    )
-    q.awaitTermination(120)
-    edges = spark.read.parquet(str(tmp_path_repo / "edges"))
-    got = {(r["source"], r["target"]): r["weight"] for r in edges.collect()}
-    # ts-ordered chain Alice,Bob,Alice,Bob,Carol (omitted line dropped):
-    # A->B, B->A, A->B, B->C
-    assert got[("Alice", "Bob")] == 3
-    assert got[("Bob", "Carol")] == 1
-
-
-def test_windowed_counts_drop_late_data(spark, tmp_path_repo):
-    """Watermark semantics across checkpointed runs: a window emits once
-    when the watermark passes its end; an event older than the
-    watermark arriving in a later batch is dropped, not re-aggregated."""
-    from poc_spark.streaming.ingest import windowed_message_counts
-
-    landing = tmp_path_repo / "landing2"
-    landing.mkdir()
-    out, ckpt = str(tmp_path_repo / "wc"), str(tmp_path_repo / "wc_ckpt")
-
-    def run():
-        parsed = parse_chat_stream(stream_chat_lines(spark, str(landing)))
-        q = (
-            windowed_message_counts(parsed, window="10 minutes",
-                                    watermark="10 minutes")
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {
-            (str(r["window_start"]), r["sender"]): r["n_messages"]
-            for r in spark.read.parquet(out).collect()
-        }
-
-    # batch 1: two events in the 09:00 window, one at 10:00 that pushes
-    # the watermark to 09:50 — so the 09:00-09:10 window finalizes
-    (landing / "b1.txt").write_text(
-        "[1.10.2023, 09:00:00] Alice: a\n"
-        "[1.10.2023, 09:01:00] Alice: b\n"
-        "[1.10.2023, 10:00:00] Bob: advances watermark\n",
-        encoding="utf-8",
-    )
-    got1 = run()
-    assert got1[("2023-10-01 09:00:00", "Alice")] == 2
-
-    # batch 2: a LATE event for the already-final 09:00 window (dropped)
-    # plus one at 10:30 that closes Bob's 10:00 window
-    (landing / "b2.txt").write_text(
-        "[1.10.2023, 09:02:00] Alice: too late, window closed\n"
-        "[1.10.2023, 10:30:00] Carol: advances watermark again\n",
-        encoding="utf-8",
-    )
-    got2 = run()
-    # the late Alice row did NOT change the emitted window, and the
-    # window appears exactly once
-    assert got2[("2023-10-01 09:00:00", "Alice")] == 2
-    assert got2[("2023-10-01 10:00:00", "Bob")] == 1
 
 
 def test_stream_hourly_counts_equals_batch(spark, sf_dir):

@@ -121,6 +121,79 @@ def test_bloom_index_tree_point_lookup_across_merge(spark, tmp_path, lake_fs):
     assert n_sel2 < n_tot
 
 
+def test_stats_index_tree_out_of_range_selects_nothing(spark, tmp_path):
+    """Range-clustered flat tree + commit-scoped stats index: an interior
+    range selects a strict subset of files yet returns exactly the rows
+    a full-scan filter returns; a fully out-of-range query selects zero
+    files and yields an empty frame that keeps the data columns."""
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, f"u{i % 7}") for i in range(40)], "id long, tag string"
+    )
+    create_table_versioned(spark, df.repartitionByRange(4, "id"), root)
+    assert create_stats_index_tree(spark, root, ["id"]) == 1  # flat shard
+
+    got, n_sel, n_tot = read_tree_with_skipping(spark, root, "id", 5, 9)
+    assert n_tot == 4 and 0 < n_sel < n_tot
+    assert sorted(r["id"] for r in got.collect()) == list(range(5, 10))
+
+    empty, n_sel0, _ = read_tree_with_skipping(spark, root, "id", 100, 200)
+    assert n_sel0 == 0
+    assert empty.columns == ["id", "tag"] and empty.count() == 0
+
+
+def test_bloom_index_tree_word_colliding_probes(spark, tmp_path):
+    """Unique-key point lookups through the commit-scoped bloom over a
+    round-robin (unclustered) layout: a strict subset of files, exactly
+    the matching row, and an empty frame for an absent value (false
+    positives may select files, never rows).
+
+    r7 ADVICE (high) regression: a value whose k probes hash into the
+    SAME 64-bit word used to be wrongly pruned — the probe demanded one
+    index row per (word, bit) pair but the index stores one row per
+    (file, word), so the match count could never reach k and a PRESENT
+    key silently returned zero rows. Sweep such ids."""
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, f"tag{i % 5}") for i in range(200)], "id long, tag string"
+    )
+    create_table_versioned(spark, df.repartition(8), root)
+    create_bloom_index_tree(spark, root, "id", bits=4096, k=3)
+
+    got, n_sel, n_tot = read_tree_with_bloom(spark, root, 137)
+    assert n_tot == 8 and 0 < n_sel < n_tot
+    assert [(r["id"], r["tag"]) for r in got.collect()] == [(137, "tag2")]
+
+    miss, n_miss, _ = read_tree_with_bloom(spark, root, 10_000)
+    assert miss.count() == 0 and n_miss < n_tot
+
+    probe_rows = spark.range(200).select(
+        "id",
+        *[
+            (
+                F.pmod(
+                    F.xxhash64(F.lit(f"bloom:{i}"), F.col("id")),
+                    F.lit(4096),
+                )
+                / 64
+            )
+            .cast("long")
+            .alias(f"w{i}")
+            for i in range(3)
+        ],
+    ).collect()
+    colliders = [
+        r["id"]
+        for r in probe_rows
+        if len({r["w0"], r["w1"], r["w2"]}) < 3
+    ]
+    assert colliders, "expected >=1 word-colliding id in 0..199"
+    for v in colliders[:4]:
+        got_c, n_c, _ = read_tree_with_bloom(spark, root, int(v))
+        assert n_c > 0
+        assert [r["id"] for r in got_c.collect()] == [v]
+
+
 def test_index_version_mismatch_fails_loudly(spark, tmp_path):
     import json
 
